@@ -172,92 +172,82 @@ def _band_buckets(sig_df: DataFrame, bands: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def simhash64(text: str) -> int:
-    """64-bit SimHash over whitespace tokens (unweighted, blake2b token
-    hashes; bit accumulation vectorized with unpackbits)."""
+_SIMHASH_BITS = 60  # md5-prefix token hashes: 15 hex digits, SQL-castable
+
+
+def _simhash_signatures(
+    df: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """(id, sh) — 60-bit SimHash over single-space tokens: bit b is set
+    iff most tokens' 60-bit md5-prefix hashes set it (ties -> 0), equal
+    bit-for-bit to queries_simdedup._SIMHASH_SQL. An Arrow pandas UDF
+    (one memoized md5 per token, NumPy sign-sum): the same sum as nested
+    JVM aggregate() lambdas runs interpreted and measured ~15× slower."""
     import hashlib
 
-    toks = (text or "").lower().split()
-    if not toks:
-        return 0
-    digest = b"".join(
-        hashlib.blake2b(t.encode("utf-8", errors="replace"), digest_size=8).digest()
-        for t in toks
-    )
-    bytes_arr = np.frombuffer(digest, dtype=np.uint8).reshape(-1, 8)
-    bits = np.unpackbits(bytes_arr, axis=1)  # (n_tokens, 64)
-    acc = bits.astype(np.int32).sum(axis=0) * 2 - len(toks)
-    out_bytes = np.packbits((acc > 0).astype(np.uint8)).tobytes()
-    return int.from_bytes(out_bytes, "big", signed=True)
+    from mitie_spark.session import by_compute
 
+    df = by_compute(df, 2)  # a single row group would hash on one core
 
-def simhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
     @F.pandas_udf("bigint")
     def sh_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([simhash64(t) for t in texts])
+        memo: dict[str, int] = {}
+        shifts = np.arange(_SIMHASH_BITS, dtype=np.int64)
+        powers = np.int64(1) << shifts
 
-    return df.select(F.col(id_col).alias("id"), sh_udf(F.col(text_col)).alias("simhash"))
+        def h60(tok: str) -> int:
+            v = memo.get(tok)
+            if v is None:
+                v = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:15], 16)
+                memo[tok] = v
+            return v
+
+        out = []
+        for text in texts:
+            toks = [t for t in (text or "").lower().split(" ") if t]
+            if not toks:
+                out.append(0)
+                continue
+            hs = np.array([h60(t) for t in toks], dtype=np.int64)
+            bits = (hs[:, None] >> shifts[None, :]) & 1
+            acc = bits.sum(axis=0) * 2 - len(toks)
+            out.append(int(((acc > 0) * powers).sum()))
+        return pd.Series(out)
+
+    return df.select(F.col(id_col).alias("id"), sh_udf(F.col(text_col)).alias("sh"))
 
 
 def near_duplicates_simhash(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_hamming: int = 3,
-    max_bucket: int = 10_000,
+    max_hamming: int = 6,
 ) -> DataFrame:
-    """Pigeonhole blocking: 4 × 16-bit chunks — hamming ≤ 3 guarantees an
-    equal chunk; verify with popcount on candidate pairs.
+    """SimHash near-dup pairs -> (id_a, id_b, hamming <= max_hamming).
 
-    ``max_bucket`` drops degenerate chunk buckets (same role it plays in
-    the MinHash path): a boilerplate cluster — e.g. every empty/template
-    doc simhashes to the same biased bit pattern — would otherwise share
-    all 4 chunk keys and turn the self-join quadratic (100k collided docs
-    → ~2·10^10 join rows). Members of a dropped bucket still pair through
-    their other, non-degenerate chunks; only pairs ALL of whose shared
-    chunks are boilerplate-sized are lost, and a 10k-deep bucket is
-    near-certainly one duplicate cluster that exact dedup already
-    collapses."""
-    sig = simhash_signatures(df, id_col, text_col).persist()
-    chunks = sig.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("ci"),
-                        F.shiftright("simhash", 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("cv"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select("id", "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
-    counts = chunks.groupBy("ci", "cv").agg(F.count("*").alias("bsz"))
-    chunks = chunks.join(
-        counts.filter(F.col("bsz") <= max_bucket), ["ci", "cv"]
-    ).select("id", "simhash", "ci", "cv")
-    l = chunks.select(
-        F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "ci", "cv"
-    )
-    r = chunks.select(
-        F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "ci", "cv"
-    )
+    Pigeonhole blocking: a pair within max_hamming bits MUST agree on one
+    of max_hamming + 1 disjoint signature chunks (7 × 9 bits at the
+    default), so blocking recall is exactly 1; candidates are verified by
+    exact popcount. Fewer, wider chunks (a lower max_hamming) keep bucket
+    sizes bounded on larger corpora."""
+    n_chunks = max_hamming + 1
+    bits = -(-_SIMHASH_BITS // n_chunks)
+    sig = _simhash_signatures(df, id_col, text_col)
+    mask = F.lit((1 << bits) - 1)
+    cuts = [F.shiftright("sh", bits * i).bitwiseAND(mask) for i in range(n_chunks)]
+    chunks = sig.select("id", "sh", F.posexplode(F.array(*cuts)).alias("ci", "cv"))
+    l = chunks.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), "ci", "cv")
+    r = chunks.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), "ci", "cv")
     pairs = (
         l.join(r, ["ci", "cv"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", "sh_a", "sh_b")
         .distinct()
     )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return pairs.select(
-        "id_a", "id_b", ham.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
+    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int")
+    return pairs.select("id_a", "id_b", ham.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -121,7 +121,11 @@ def match_patterns(
     """Conjunctive triple-pattern match -> one row per variable binding.
 
     Each pattern term is either a literal (matched exactly) or a
-    ``?name`` variable (bound, output as column ``name``). A variable
+    ``?name`` variable (bound, output as column ``name``). Every string
+    that starts with ``?`` is a variable — there is no literal escape,
+    so a KG term that itself begins with ``?`` cannot be matched as a
+    literal (a bare ``?`` raises); filter such terms with ``.where()``
+    on a variable instead. A variable
     repeated WITHIN a pattern constrains positions to be equal; repeated
     ACROSS patterns becomes the join key. ``optional`` patterns carry
     left-join semantics against the REQUIRED block: non-matching
@@ -200,8 +204,8 @@ def transitive_closure(
     only the LAST round's new pairs against the edge set and anti-joins
     out pairs already known — cycles terminate naturally because a
     revisited pair produces no new rows, and the loop exits early on an
-    empty frontier (one driver-side isEmpty per pass; the operator is
-    deliberately eager like pagerank_integer, with per-pass
+    empty frontier (one driver-side isEmpty per pass; the operator runs
+    on webgraph._iterate's eager frontier lifecycle, with the per-pass
     localCheckpoint doubling as the lineage cut). max_depth bounds the
     worst case; real predicate hierarchies (geo containment, org
     parentage) are single-digit deep.
@@ -211,31 +215,31 @@ def transitive_closure(
     the known set. The closure of a DAG-ish hierarchy grows linearly in
     practice; a dense cyclic relation's closure is quadratic — that is a
     property of the answer, not the plan."""
+    from mitie_spark.operators.webgraph import _iterate
+
     e = (
         triples.where(F.col("pred") == F.lit(pred))
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
         .distinct()
-        .persist()
     )
-    e.count()
-    paths = e.withColumn("depth", F.lit(1)).localCheckpoint(eager=True)
-    frontier = paths
-    for d in range(2, max_depth + 1):
+
+    def step(state, i):
+        known, frontier = state
+        # the last frontier joins the known set only once it is cut, so
+        # the accumulated union stays a flat union of checkpointed scans
+        # without re-materializing the whole (growing) closure every pass
+        known = frontier if known is None else known.union(frontier)
         nxt = (
             frontier.alias("f")
             .join(e.alias("n"), F.col("f.dst") == F.col("n.src"))
             .select(F.col("f.src").alias("src"), F.col("n.dst").alias("dst"))
             .distinct()
-            .join(paths.select("src", "dst"), ["src", "dst"], "left_anti")
-            .withColumn("depth", F.lit(d))
-            .localCheckpoint(eager=True)
+            .join(known.select("src", "dst"), ["src", "dst"], "left_anti")
+            .withColumn("depth", F.lit(i + 2))
         )
-        if nxt.isEmpty():
-            break
-        # nxt is already an eagerly-checkpointed flat scan, so the
-        # accumulated union stays flat-lineaged without re-materializing
-        # the whole (growing) closure every pass
-        paths = paths.union(nxt)
-        frontier = nxt
-    e.unpersist()
-    return paths
+        return known, nxt
+
+    return _iterate(
+        [e], (None, e.withColumn("depth", F.lit(1))), step, max_depth - 1, 1,
+        lambda s: s[1] if s[0] is None else s[0].union(s[1]), frontier=True,
+    )

@@ -190,8 +190,11 @@ def hll_distinct(
     rho = F.when(w == 0, F.lit(HLL_RHO_MAX)).otherwise(
         F.lit(HLL_RHO_MAX) - F.length(F.bin(w))
     )
+    # md5(NULL) would add a NULL-bucket register row that counts in
+    # COUNT(*) but not in the sum — drop NULLs, as kmv_jaccard does
     reg = (
-        df.select(
+        df.where(F.col(value_col).isNotNull())
+        .select(
             *group_cols,
             F.shiftright(h32, HLL_W_BITS).alias("bucket"),
             rho.alias("rho"),

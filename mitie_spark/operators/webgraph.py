@@ -265,6 +265,89 @@ def _nodes(edges: DataFrame) -> DataFrame:
     )
 
 
+def _iterate(invariants, state0, step, iters, cut_every, finish, frontier=False):
+    """The one eager lifecycle of the iterative graph operators.
+
+    Loop-invariant frames are persisted in order (later ones derive from
+    earlier ones) and the first is materialized ONCE up front: the loop
+    replays its inputs every pass, and at web scale that lineage is the
+    whole link-extraction job (unpersisted, the gated PageRank measured
+    4.5x slower). ``step(state, i)`` runs pass i on a frame or a tuple of
+    frames; a lineage cut localCheckpoints the state's last frame after
+    every ``cut_every``-th pass (Catalyst analysis goes superlinear on
+    nested join+agg chains), leaving the last pass to the result
+    checkpoint when cut_every > 1. ``frontier=True``: the last frame is a
+    frontier, the first one is cut too, and an empty one ends the loop
+    and is dropped. The result ``finish(state)`` is local-checkpointed so
+    the invariants can be unpersisted before returning, or on an error
+    (a lazy persist leaks executor storage per call) — except a frontier
+    result, a union of cut frontiers already. On a multi-node cluster
+    swap localCheckpoint for a reliable checkpoint dir if executor loss
+    mid-query matters."""
+
+    def cut(state):
+        if isinstance(state, tuple):
+            return (*state[:-1], cut(state[-1]))
+        return state.localCheckpoint(eager=True)
+
+    for f in invariants:
+        f.persist()
+    try:
+        invariants[0].count()
+        state = cut(state0) if frontier else state0
+        for i in range(iters):
+            nxt = step(state, i)
+            if (i + 1) % cut_every == 0 and (cut_every == 1 or i + 1 < iters):
+                nxt = cut(nxt)
+            if frontier and nxt[-1].isEmpty():
+                break
+            state = nxt
+        out = finish(state)
+        return out if frontier else out.localCheckpoint(eager=True)
+    finally:
+        for f in reversed(invariants):
+            f.unpersist()
+
+
+def _pagerank(edges, iters, r0, contrib, teleport, zero, rank_col):
+    """The one PageRank plan -> (node, <rank_col>); callers supply only
+    the arithmetic (r0 and teleport over n_nodes, contrib over r, weight
+    and out_w, zero for a node no edge reaches).
+
+    Dangling mass: nodes with no outlinks simply leak their damped mass
+    (the classic "dangling nodes drop" formulation) — chosen because it
+    needs no global redistribution term and both engines state it
+    identically.
+
+    Plan shape per iteration: edges ⋈ ranks on src (co-partitioned hash
+    join), groupBy dst (one shuffle), left join back to the node list
+    for the teleport floor; lineage cut every 5 passes. Node/edge frames
+    are never collected.
+    """
+    nodes_p = _nodes(edges)
+    n_nodes = nodes_p.agg(F.count("*").alias("n_nodes"))
+    # the 1-row count is broadcast onto every node row (explicitly tiny)
+    nodes = nodes_p.crossJoin(F.broadcast(n_nodes))
+    outw = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
+    e = edges.join(outw, "src")
+
+    def step(ranks, _):
+        c = (
+            e.join(ranks, e.src == ranks.node)
+            .select(F.col("dst"), contrib.alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("in_c"))
+        )
+        return nodes.join(c, nodes.node == c.dst, "left").select(
+            "node", (teleport + F.coalesce(F.col("in_c"), zero)).alias("r")
+        )
+
+    return _iterate(
+        [edges, nodes_p, e], nodes.select("node", r0.alias("r")), step, iters, 5,
+        lambda ranks: ranks.select("node", F.col("r").alias(rank_col)),
+    )
+
+
 def pagerank_integer(
     edges: DataFrame,
     iters: int = 3,
@@ -276,70 +359,18 @@ def pagerank_integer(
     Ranks live in units of 1/scale; every division is integer (DIV), so
     the result is bit-identical under ANY partitioning or summation order
     — this is what lets an iterative graph algorithm pass the DuckDB
-    value-hash gate (same convention as the quantized cosine queries,
-    see CLAUDE.md). Overflow bound: damp_pct * scale * max(weight) must
-    stay under 2**63 (weight <= ~1.08e5 at the default scale); the float
-    variant below is the production path where that can't be guaranteed.
-
-    Dangling mass: nodes with no outlinks simply leak their damped mass
-    (the classic "dangling nodes drop" formulation) — chosen because it
-    needs no global redistribution term and both engines state it
-    identically.
-
-    Plan shape per iteration: edges ⋈ ranks on src (co-partitioned hash
-    join), groupBy dst (one shuffle), left join back to the node list
-    for the teleport floor. Node/edge frames are never collected.
+    value-hash gate (same convention as the quantized cosine queries).
+    Overflow bound: damp_pct * scale * max(weight) must stay under 2**63
+    (weight <= ~1.08e5 at the default scale); the float ``pagerank``
+    below is the production path where that can't be guaranteed. Plan
+    shape and dangling mass: see _pagerank.
     """
-    # The loop replays its inputs every iteration, so the loop-invariant
-    # frames are persisted and the edges lineage is materialized exactly
-    # ONCE up front (at web scale that lineage is the whole
-    # link-extraction job — unpersisted, the gated query measured 4.5x
-    # slower; persisted lazily, the first action still replayed it up to
-    # 4x through the nodes-union + out-weight branches).  The operator is
-    # deliberately EAGER: the final ranks are local-checkpointed (cutting
-    # the iters-deep lineage) so the invariants can be unpersisted before
-    # returning — a lazy persist with no unpersist would leak executor
-    # storage for the session lifetime, one pair per call.  On a
-    # multi-node cluster swap localCheckpoint for a reliable checkpoint
-    # dir if executor loss mid-query matters.
-    edges = edges.persist()
-    edges.count()
-    nodes_p = _nodes(edges).persist()
-    n_nodes = nodes_p.agg(F.count("*").alias("n_nodes"))
-    # the 1-row count is broadcast onto every node row (explicitly tiny)
-    nodes = nodes_p.crossJoin(F.broadcast(n_nodes))
-    outw = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    e = edges.join(outw, "src").persist()
-    ranks = nodes.select(
-        "node", F.expr(f"CAST({scale} AS BIGINT) DIV n_nodes").alias("r")
+    return _pagerank(
+        edges, iters, F.expr(f"CAST({scale} AS BIGINT) DIV n_nodes"),
+        F.expr(f"CAST({damp_pct} AS BIGINT) * r * weight DIV (100 * out_w)"),
+        F.expr(f"CAST({100 - damp_pct} AS BIGINT) * {scale} DIV (100 * n_nodes)"),
+        F.lit(0), "rank_int",
     )
-    teleport = F.expr(f"CAST({100 - damp_pct} AS BIGINT) * {scale} DIV (100 * n_nodes)")
-    for i in range(iters):
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .select(
-                F.col("dst"),
-                F.expr(f"CAST({damp_pct} AS BIGINT) * r * weight DIV (100 * out_w)").alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_c"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .select(
-                "node",
-                (teleport + F.coalesce(F.col("in_c"), F.lit(0))).alias("r"),
-            )
-        )
-        if (i + 1) % 5 == 0 and i + 1 < iters:
-            # bound lineage depth on long runs (analysis cost grows per pass)
-            ranks = ranks.localCheckpoint(eager=True)
-    out = ranks.select("node", F.col("r").alias("rank_int")).localCheckpoint(
-        eager=True
-    )
-    for h in (e, nodes_p, edges):
-        h.unpersist()
-    return out
 
 
 def pagerank(
@@ -349,45 +380,15 @@ def pagerank(
 ) -> DataFrame:
     """Float PageRank (production variant) -> (node, rank: double).
 
-    Same plan shape as pagerank_integer; ranks sum to <= 1.0 (dangling
-    mass leaks, see above). Use this at real web scale where edge
-    weights would overflow the integer gate variant.
+    Same plan as pagerank_integer; ranks sum to <= 1.0 (dangling mass
+    leaks, see _pagerank). Use this at real web scale where edge weights
+    would overflow the integer gate variant.
     """
-    # eager persist -> checkpoint -> unpersist, same shape and reasons as
-    # pagerank_integer above
-    edges = edges.persist()
-    edges.count()
-    nodes_p = _nodes(edges).persist()
-    n_nodes = nodes_p.agg(F.count("*").alias("n_nodes"))
-    nodes = nodes_p.crossJoin(F.broadcast(n_nodes))
-    outw = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    e = edges.join(outw, "src").persist()
-    ranks = nodes.select("node", (F.lit(1.0) / F.col("n_nodes")).alias("r"))
-    for i in range(iters):
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .select(
-                F.col("dst"),
-                (F.lit(damping) * F.col("r") * F.col("weight") / F.col("out_w")).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_c"))
-        )
-        ranks = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
-            "node",
-            (
-                F.lit(1.0 - damping) / F.col("n_nodes")
-                + F.coalesce(F.col("in_c"), F.lit(0.0))
-            ).alias("r"),
-        )
-        if (i + 1) % 5 == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    out = ranks.select("node", F.col("r").alias("rank")).localCheckpoint(
-        eager=True
+    return _pagerank(
+        edges, iters, F.lit(1.0) / F.col("n_nodes"),
+        F.lit(damping) * F.col("r") * F.col("weight") / F.col("out_w"),
+        F.lit(1.0 - damping) / F.col("n_nodes"), F.lit(0.0), "rank",
     )
-    for h in (e, nodes_p, edges):
-        h.unpersist()
-    return out
 
 
 def hits_integer(
@@ -408,21 +409,17 @@ def hits_integer(
 
     Overflow bound: raw·scale ≤ W_tot·scale² must stay under 2**63,
     i.e. total edge weight W_tot < 2**63/scale² (~9.2e6 at the default
-    scale).  Beyond that, use the float ``hits`` variant below.
+    scale).  A smaller scale buys headroom quadratically, down to the
+    mass-collapse regime described at the tot=0 guard below.
 
     Plan shape per iteration: two (edges ⋈ scores → groupBy) rounds —
     auth from hubs on src, then hubs from the NEW auth on dst — each one
     co-partitioned join plus one keyed shuffle; the normalizing sums are
-    1-row broadcasts.  Eager persist→checkpoint→unpersist lifecycle,
-    same reasons as pagerank_integer.  Precondition: edges non-empty
-    (an empty graph has no meaningful normalization).
+    1-row broadcasts.  Eager _iterate lifecycle.  Precondition: edges
+    non-empty (an empty graph has no meaningful normalization).
     """
-    edges = edges.persist()
-    edges.count()
-    nodes_p = _nodes(edges).persist()
+    nodes_p = _nodes(edges)
     init = F.lit(int(scale)).cast("long").alias("s")
-    hub = nodes_p.select("node", init)
-    auth = nodes_p.select("node", init)  # iters=0 → uniform scores
     # tot=0 guard: on diffuse graphs (n_nodes approaching scale) integer
     # mass can floor to zero everywhere — all-zero scores are the honest
     # collapsed answer, NOT a division-by-zero NULL cascade; pick scale
@@ -431,104 +428,42 @@ def hits_integer(
         f"CASE WHEN tot = 0 THEN CAST(0 AS BIGINT)"
         f" ELSE COALESCE(raw, 0) * CAST({scale} AS BIGINT) DIV tot END"
     )
-    for _ in range(iters):
-        ar = (
-            edges.join(hub.withColumnRenamed("node", "src"), "src")
-            .select("dst", (F.col("weight") * F.col("s")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("raw"))
-        )
-        tot_a = ar.agg(F.sum("raw").alias("tot"))
-        auth = (
-            nodes_p.join(ar, nodes_p.node == ar.dst, "left")
-            .crossJoin(F.broadcast(tot_a))
-            .select("node", norm.alias("s"))
-        )
-        hr = (
-            edges.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .select("src", (F.col("weight") * F.col("s")).alias("c"))
-            .groupBy("src")
-            .agg(F.sum("c").alias("raw"))
-        )
-        tot_h = hr.agg(F.sum("raw").alias("tot"))
-        hub = (
-            nodes_p.join(hr, nodes_p.node == hr.src, "left")
-            .crossJoin(F.broadcast(tot_h))
-            .select("node", norm.alias("s"))
-        )
-        # cut lineage EVERY iteration: each half-step nests a
-        # join+agg+broadcast under the previous pair, and Catalyst's
-        # analysis on that self-referencing chain blows up superlinearly
-        # (the 6-iteration float variant hung outright before this) —
-        # per-iteration materialization is the standard shape for
-        # iterative graph algorithms anyway.  Only hub needs the cut:
-        # the cross-iteration chain flows auth_i -> hub_i -> auth_{i+1},
-        # so checkpointing hub bounds every plan at two half-steps
-        # (auth_i is re-derived from the checkpointed hub_{i-1} by the
-        # final join — one cheap recompute instead of one job per
-        # half-step, which doubled the wall on small graphs)
-        hub = hub.localCheckpoint(eager=True)
-    out = (
-        auth.withColumnRenamed("s", "auth_int")
-        .join(hub.withColumnRenamed("s", "hub_int"), "node")
-        .localCheckpoint(eager=True)
-    )
-    for h in (nodes_p, edges):
-        h.unpersist()
-    return out
 
+    def half_step(scores, on, to):
+        raw = (
+            edges.join(scores.withColumnRenamed("node", on), on)
+            .select(to, (F.col("weight") * F.col("s")).alias("c"))
+            .groupBy(to)
+            .agg(F.sum("c").alias("raw"))
+        )
+        tot = raw.agg(F.sum("raw").alias("tot"))
+        return (
+            nodes_p.join(raw, nodes_p.node == raw[to], "left")
+            .crossJoin(F.broadcast(tot))
+            .select("node", norm.alias("s"))
+        )
 
-def hits(
-    edges: DataFrame,
-    iters: int = 10,
-) -> DataFrame:
-    """Float HITS (production variant) -> (node, auth, hub), L1-normalized
-    per half-step (see hits_integer for why L1).  Use at real web scale
-    where total edge weight would overflow the integer gate variant."""
-    edges = edges.persist()
-    edges.count()
-    nodes_p = _nodes(edges).persist()
-    hub = nodes_p.select("node", F.lit(1.0).alias("s"))
-    auth = nodes_p.select("node", F.lit(1.0).alias("s"))  # iters=0 case
-    norm = F.expr(
-        "CASE WHEN tot = CAST(0.0 AS DOUBLE) THEN CAST(0.0 AS DOUBLE)"
-        " ELSE COALESCE(raw, CAST(0.0 AS DOUBLE)) / tot END"
+    def step(state, _):
+        auth = half_step(state[1], "src", "dst")
+        return auth, half_step(auth, "dst", "src")
+
+    # cut lineage EVERY iteration: each half-step nests a join+agg+
+    # broadcast under the previous pair, and Catalyst's analysis on that
+    # self-referencing chain blows up superlinearly (a 6-iteration
+    # float HITS hung outright before this) — per-iteration
+    # materialization is the standard shape for iterative graph
+    # algorithms anyway.  Only hub needs the cut (the state's last
+    # frame): the cross-iteration chain flows auth_i -> hub_i ->
+    # auth_{i+1}, so checkpointing hub bounds every plan at two
+    # half-steps (auth_i is re-derived from the checkpointed hub_{i-1} by
+    # the final join — one cheap recompute instead of one job per
+    # half-step, which doubled the wall on small graphs)
+    return _iterate(
+        [edges, nodes_p], (nodes_p.select("node", init), nodes_p.select("node", init)),
+        step, iters, 1,
+        lambda s: s[0].withColumnRenamed("s", "auth_int")
+        .join(s[1].withColumnRenamed("s", "hub_int"), "node"),
     )
-    for i in range(iters):
-        ar = (
-            edges.join(hub.withColumnRenamed("node", "src"), "src")
-            .select("dst", (F.col("weight") * F.col("s")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("raw"))
-        )
-        tot_a = ar.agg(F.sum("raw").cast("double").alias("tot"))
-        auth = (
-            nodes_p.join(ar, nodes_p.node == ar.dst, "left")
-            .crossJoin(F.broadcast(tot_a))
-            .select("node", norm.alias("s"))
-        )
-        hr = (
-            edges.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .select("src", (F.col("weight") * F.col("s")).alias("c"))
-            .groupBy("src")
-            .agg(F.sum("c").alias("raw"))
-        )
-        tot_h = hr.agg(F.sum("raw").cast("double").alias("tot"))
-        hub = (
-            nodes_p.join(hr, nodes_p.node == hr.src, "left")
-            .crossJoin(F.broadcast(tot_h))
-            .select("node", norm.alias("s"))
-        )
-        # per-iteration lineage cut, hub only (see hits_integer)
-        hub = hub.localCheckpoint(eager=True)
-    out = (
-        auth.withColumnRenamed("s", "auth")
-        .join(hub.withColumnRenamed("s", "hub"), "node")
-        .localCheckpoint(eager=True)
-    )
-    for h in (nodes_p, edges):
-        h.unpersist()
-    return out
 
 
 def bfs_depths_integer(
@@ -554,44 +489,36 @@ def bfs_depths_integer(
     diameter-bounded graphs (host graphs: diameters are single-digit).
     Plan per iteration: edges ⋈ depths on src (co-partitioned), one
     dst-keyed min shuffle, left-join back to the node list. Same EAGER
-    persist/localCheckpoint lifecycle as pagerank_integer (see the
-    comment there — lazy persists leak storage per call)."""
-    edges = edges.select("src", "dst").persist()
-    edges.count()
-    nodes = _nodes(edges).persist()
-    d = nodes.select(
+    _iterate lifecycle as pagerank, lineage cut every 5 passes (the
+    exposed iters invites deep runs)."""
+    edges = edges.select("src", "dst")
+    nodes = _nodes(edges)
+    d0 = nodes.select(
         "node",
         F.when(F.col("node").isin(list(seeds)), F.lit(0))
         .otherwise(F.lit(inf))
         .cast("bigint")
         .alias("d"),
     )
-    for i in range(iters):
+
+    def step(d, _):
         upd = (
             edges.join(d, edges.src == d.node)
             .select(F.col("dst"), (F.col("d") + F.lit(1)).alias("du"))
             .groupBy("dst")
             .agg(F.min("du").alias("du"))
         )
-        d = d.join(upd, d.node == upd.dst, "left").select(
+        return d.join(upd, d.node == upd.dst, "left").select(
             d.node,
             F.least(
                 F.col("d"), F.coalesce(F.col("du"), F.lit(inf).cast("bigint"))
             ).alias("d"),
         )
-        if (i + 1) % 5 == 0 and i + 1 < iters:
-            # bound lineage depth on long runs (same guard as
-            # pagerank_integer — Catalyst analysis goes superlinear on
-            # nested join+agg chains; the exposed iters invites deep runs)
-            d = d.localCheckpoint(eager=True)
-    out = (
-        d.where(F.col("d") < inf)
-        .select("node", F.col("d").alias("depth"))
-        .localCheckpoint(eager=True)
+
+    return _iterate(
+        [edges, nodes], d0, step, iters, 5,
+        lambda d: d.where(F.col("d") < inf).select("node", F.col("d").alias("depth")),
     )
-    nodes.unpersist()
-    edges.unpersist()
-    return out
 
 
 def undirected_host_edges(edges: DataFrame) -> DataFrame:
@@ -683,31 +610,25 @@ def label_propagation(
 
     Plan per pass: symmetrized edges ⋈ labels on the neighbor key, one
     (node, label) partial-agg shuffle, a per-node window top-1, left join
-    back to the node list. Same eager persist/localCheckpoint lifecycle
-    as pagerank_integer."""
+    back to the node list. Same eager _iterate lifecycle as
+    pagerank."""
     from pyspark.sql.window import Window
 
+    links = edges.where(F.col("src") != F.col("dst"))
     sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst", "weight")
+        links.select("src", "dst", "weight")
         .unionAll(
-            edges.where(F.col("src") != F.col("dst")).select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                "weight",
-            )
+            links.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
         )
         .groupBy(F.col("src").alias("node"), F.col("dst").alias("neigh"))
         .agg(F.sum("weight").alias("w"))
-        .persist()
     )
-    sym.count()
-    nodes = _nodes(edges).persist()
-    labels = nodes.select("node", F.col("node").alias("label"))
+    nodes = _nodes(edges)
     win = Window.partitionBy("node").orderBy(
         F.desc("c"), F.asc("label")
     )
-    for i in range(iters):
+
+    def step(labels, _):
         cnt = (
             sym.join(
                 labels.withColumnRenamed("node", "neigh"), "neigh"
@@ -720,7 +641,7 @@ def label_propagation(
             .where(F.col("rn") == 1)
             .select("node", F.col("label").alias("new_label"))
         )
-        labels = (
+        return (
             nodes.join(labels, "node")
             .join(top, "node", "left")
             .select(
@@ -728,15 +649,14 @@ def label_propagation(
                 F.coalesce("new_label", "label").alias("label"),
             )
         )
-        if (i + 1) % 3 == 0 and i + 1 < iters:
-            # each pass nests join+agg+window+two joins — cut lineage
-            # more often than pagerank's lighter passes (CLAUDE.md: the
-            # 6-iter HITS hung without per-iteration cuts)
-            labels = labels.localCheckpoint(eager=True)
-    out = labels.localCheckpoint(eager=True)
-    nodes.unpersist()
-    sym.unpersist()
-    return out
+
+    # each pass nests join+agg+window+two joins — cut lineage every 3
+    # passes, more often than pagerank's lighter passes (a 6-iteration
+    # HITS hung without per-iteration cuts)
+    return _iterate(
+        [sym, nodes], nodes.select("node", F.col("node").alias("label")), step,
+        iters, 3, lambda labels: labels,
+    )
 
 
 def kcore_flags(
@@ -759,51 +679,43 @@ def kcore_flags(
     The k-core is the classic link-spam/community-strength signal on
     host graphs. Plan per round: one semi-join of the symmetrized edge
     set against survivors on each endpoint + one degree partial-agg;
-    eager persist/localCheckpoint lifecycle as the other iterative
-    operators here."""
+    eager _iterate lifecycle as the other iterative operators here."""
     # symmetrize from the distinct u<v pair set (undirected_host_edges
     # owns the self-loop/dedup rules) — both directions of a distinct
     # pair set are distinct by construction, so no second dedup shuffle
     und = undirected_host_edges(edges)
-    sym = (
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .persist()
+    sym = und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+        und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    sym.count()
-    nodes = _nodes(edges).persist()
-    alive = nodes
-    for _ in range(rounds):
-        deg = (
+    nodes = _nodes(edges)
+
+    def degree_among(alive, name):
+        return (
             sym.join(alive.withColumnRenamed("node", "src"), "src")
             .join(alive.withColumnRenamed("node", "dst"), "dst")
             .groupBy("src")
-            .agg(F.count("*").alias("d"))
+            .agg(F.count("*").alias(name))
         )
-        alive = (
-            deg.where(F.col("d") >= k)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=True)
+
+    def finish(alive):
+        deg_final = degree_among(alive, "core_degree").withColumnRenamed("src", "node")
+        return (
+            nodes.join(alive.withColumn("in_kcore", F.lit(1)), "node", "left")
+            .join(deg_final, "node", "left")
+            .select(
+                "node",
+                F.coalesce("in_kcore", F.lit(0)).cast("int").alias("in_kcore"),
+                F.coalesce("core_degree", F.lit(0))
+                .cast("bigint")
+                .alias("core_degree"),
+            )
         )
-    deg_final = (
-        sym.join(alive.withColumnRenamed("node", "src"), "src")
-        .join(alive.withColumnRenamed("node", "dst"), "dst")
-        .groupBy("src")
-        .agg(F.count("*").alias("core_degree"))
-        .withColumnRenamed("src", "node")
+
+    # every round's survivor set is cut: the next round and the final
+    # degree both read it twice
+    return _iterate(
+        [sym, nodes], nodes,
+        lambda alive, _: degree_among(alive, "d")
+        .where(F.col("d") >= k).select(F.col("src").alias("node")),
+        rounds, 1, finish,
     )
-    out = (
-        nodes.join(alive.withColumn("in_kcore", F.lit(1)), "node", "left")
-        .join(deg_final, "node", "left")
-        .select(
-            "node",
-            F.coalesce("in_kcore", F.lit(0)).cast("int").alias("in_kcore"),
-            F.coalesce("core_degree", F.lit(0))
-            .cast("bigint")
-            .alias("core_degree"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    sym.unpersist()
-    return out

@@ -88,9 +88,13 @@ def write_stage(
         "partition_histogram": sorted(part_hist, key=lambda p: -p["rows"])[:32],
         "wall_sec": round(time.time() - t0, 3),
     }
+    write_lineage(out_path, rec)
+    return rec
+
+
+def write_lineage(out_path: str, rec: dict) -> None:
     with open(_lineage_path(out_path), "w") as f:
         json.dump(rec, f, indent=1)
-    return rec
 
 
 def read_lineage(out_path: str) -> dict | None:

@@ -37,6 +37,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +47,7 @@ from mitie_spark.plans.lineage import (
     config_hash,
     read_lineage,
     stage_is_complete,
+    write_lineage,
     write_stage,
 )
 
@@ -86,11 +88,16 @@ def run_pipeline(
             rec["skipped"] = True
             report[name] = rec
         else:
+            t0 = time.time()
             df = build()
             rec = write_stage(
                 df, out, name, conf, partition_by=partition_by,
                 input_rows=input_rows, catalog=catalog,
             )
+            # the stage's clock starts at build(): an eager build (stage
+            # 7's PageRank iterations) runs before write_stage's own clock
+            rec["wall_sec"] = round(time.time() - t0, 3)
+            write_lineage(out, rec)
             rec["skipped"] = False
             report[name] = rec
         return read_table(

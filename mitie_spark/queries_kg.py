@@ -679,6 +679,11 @@ def kg_entity_comentions(spark, sf_dir):
     and one integer division) so the value hash is bit-stable under any
     partitioning, the same convention as the quantized cosine queries.
 
+    Overflow bound: n_docs_both·N·1e6 must stay under 2**63 (N = docs
+    with a mention), i.e. n_docs_both·N < ~9.2e12. Since n_docs_both <=
+    N, that always holds for N < ~3.0e6 documents; on larger corpora a
+    pair co-mentioned in more than 9.2e12/N documents overflows.
+
     Plan shape: ONE url-keyed self-join of the distinct (url, surface)
     projection (co-partitioned — a single shuffle feeds both sides), a
     partial-agg shuffle on the pair key, then a broadcast join against

@@ -515,6 +515,13 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposure, see doc_unigram_logprob) — every sum downstream is integer,
     so the score is bit-stable under any partitioning. Score units: 1e-9.
 
+    Overflow bound: the numerator 44·tf·A·1000 must stay under 2**63,
+    i.e. tf·A < ~2.1e14 (A = total corpus tokens); the denominator term
+    18·N·dl needs N·dl < ~5.1e17, and the idf-weighted quotient (< 2200
+    per ppm of idf) is far inside int64. Gate corpora are orders of
+    magnitude below; at A ≈ 2e13 tokens (~100 TB of text) a term with
+    tf >= ~10 overflows, so factor A out of the rational form first.
+
     Plan shape: the tf/df/dl aggregates are three partial-agg shuffles
     over the (doc_id, token) projection (shared persisted frame with
     doc_unigram_logprob, see doc_tokens); idf is a 4-row broadcast; the

@@ -345,23 +345,7 @@ def dedup_components(spark, sf_dir):
 # SimHash — md5-token-hash 60-bit signature, expressible in both engines
 # ---------------------------------------------------------------------------
 
-_SIMHASH_MAXH = 6
-_SIMHASH_CHUNKS = 7  # pigeonhole: hamming ≤ 6 ⇒ ≥1 of 7 disjoint chunks equal
-_CHUNK_BITS = 9  # ceil(60/7)
-
-# signature: bit b = sign of sum over tokens of ±1 from bit b of the
-# token's 60-bit md5-prefix hash (ties → 0). Same arithmetic in both engines.
-# (kept for documentation: the pure-JVM form of the signature. In practice
-# the nested higher-order aggregate runs INTERPRETED in Spark — ~60 × tokens
-# boxed lambda evaluations per doc made it ~15× slower than the Arrow+NumPy
-# pandas UDF below, which computes identical values.)
-_SIMHASH_SPARK_EXPR_DOC = """
-  aggregate(
-    sequence(0, 59), 0L,
-    (acc, b) -> acc + IF(
-      aggregate(hs, 0L, (a, h) -> a + 2L * ((h >> b) & 1L) - 1L) > 0L,
-      shiftleft(1L, b), 0L))
-"""
+_SIMHASH_MAXH = 6  # pigeonhole: hamming ≤ 6 ⇒ ≥1 of 7 disjoint chunks equal
 
 _SIMHASH_SQL = """
   toks AS (
@@ -387,46 +371,6 @@ _SIMHASH_SQL = """
 """
 
 
-def _simhash_signatures_sql(docs: DataFrame) -> DataFrame:
-    """(id, sh) — 60-bit SimHash matching _SIMHASH_SQL bit-for-bit, computed
-    in an Arrow-batched pandas UDF (NumPy unpackbits + sign-sum; one md5 per
-    token via hashlib, memoized per batch). Input is repartitioned by
-    compute — the test parquet is a single unsplittable row group."""
-    import hashlib
-
-    import numpy as np
-
-    from mitie_spark.session import by_compute
-
-    docs = by_compute(docs, 2)
-
-    @F.pandas_udf("bigint")
-    def sh_udf(texts: pd.Series) -> pd.Series:
-        memo: dict[str, int] = {}
-        powers = np.int64(1) << np.arange(60, dtype=np.int64)
-
-        def h60(tok: str) -> int:
-            v = memo.get(tok)
-            if v is None:
-                v = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:15], 16)
-                memo[tok] = v
-            return v
-
-        out = []
-        for text in texts:
-            toks = [t for t in (text or "").lower().split(" ") if t]
-            if not toks:
-                out.append(0)
-                continue
-            hs = np.array([h60(t) for t in toks], dtype=np.int64)
-            bits = (hs[:, None] >> np.arange(60, dtype=np.int64)[None, :]) & 1
-            acc = bits.sum(axis=0) * 2 - len(toks)
-            out.append(int(((acc > 0) * powers).sum()))
-        return pd.Series(out)
-
-    return docs.select(F.col("doc_id").alias("id"), sh_udf("text").alias("sh"))
-
-
 @query(
     "dedup_simhash",
     f"""
@@ -439,43 +383,14 @@ def _simhash_signatures_sql(docs: DataFrame) -> DataFrame:
     """,
 )
 def dedup_simhash(spark, sf_dir):
-    """SimHash near-dup: pigeonhole blocking (7 disjoint 9-bit chunks — a
-    pair within hamming 6 MUST share a chunk, so blocking recall is exactly
-    1, not probabilistic) + exact popcount verify. At larger corpora raise
-    chunk width (fewer, larger chunks per pigeonhole bound) to keep bucket
-    sizes bounded; the verify step only ever sees candidate pairs."""
+    """SimHash near-dup within hamming 6: operators/dedup.
+    near_duplicates_simhash (60-bit md5 signature, 7 disjoint 9-bit
+    pigeonhole chunks, exact popcount verify)."""
+    from mitie_spark.operators.dedup import near_duplicates_simhash
+
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    sig = _simhash_signatures_sql(docs)
-    chunks = sig.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("ci"),
-                        F.shiftright("sh", _CHUNK_BITS * i)
-                        .bitwiseAND(F.lit((1 << _CHUNK_BITS) - 1))
-                        .alias("cv"),
-                    )
-                    for i in range(_SIMHASH_CHUNKS)
-                ]
-            )
-        ).alias("c"),
-    ).select("id", "sh", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
-    l = chunks.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), "ci", "cv")
-    r = chunks.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), "ci", "cv")
-    pairs = (
-        l.join(r, ["ci", "cv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int")
-    return (
-        pairs.select("id_a", "id_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= _SIMHASH_MAXH)
-        .orderBy("id_a", "id_b")
+    return near_duplicates_simhash(docs, max_hamming=_SIMHASH_MAXH).orderBy(
+        "id_a", "id_b"
     )
 
 

@@ -119,6 +119,25 @@ def test_hll_matches_scalar_reference(spark, n):
     assert abs(row["hll_est"] - n) / n < 0.25
 
 
+def test_hll_ignores_null_values(spark):
+    """NULL values must not move a group's estimate: md5(NULL) is NULL,
+    which would add a NULL-bucket register row that counts in COUNT(*)
+    (v_zero, s_int) while adding nothing to the register sum."""
+    from mitie_spark.operators.sketch import hll_distinct
+
+    vals = [f"tok{i}" for i in range(40)]
+    clean = pd.DataFrame({"g": ["x"] * 40 + ["y"] * 40, "v": vals + vals})
+    dirty = pd.concat(
+        [clean, pd.DataFrame({"g": ["x"] * 3, "v": [None] * 3})], ignore_index=True
+    )
+
+    def est(pdf):
+        df = spark.createDataFrame(pdf, "g string, v string")
+        return sorted(map(tuple, hll_distinct(df, ["g"], "v").collect()))
+
+    assert est(dirty) == est(clean)
+
+
 def test_hll_query_is_pure_catalyst(spark):
     import __spark_entry__ as e
 
@@ -495,3 +514,47 @@ def test_kmv_ignores_null_values(spark):
     row = kmv_jaccard(df, "g", "v", k=64).collect()
     assert len(row) == 1
     assert (row[0]["n_shared"], row[0]["jaccard_ppm"]) == (20, 1000000)
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "pagerank", "pagerank_integer", "hits_integer", "bfs_depths_integer",
+        "label_propagation", "kcore_flags", "transitive_closure",
+        "triangle_clustering",
+    ],
+)
+def test_graph_operator_leaves_no_cached_frame(spark, op):
+    """The iterative operators are eager (webgraph._iterate): every frame
+    they persist is unpersisted before they return, so no lazily cached
+    frame outlives the call. Checked as an unchanged cache-entry count,
+    not as an empty cache manager: other tests in the session keep
+    persisted shared frames. Each op gets its own graph: persisting a
+    plan that is already cached adds no entry, so a leak would hide
+    behind an earlier op's leak of the same frame."""
+    import random
+
+    from mitie_spark.operators import kgquery, webgraph as wg
+
+    rng = random.Random(op)
+    pairs = {tuple(rng.sample(range(12), 2)) for _ in range(30)}
+    rows = [(f"n{a}", f"n{b}", rng.randint(1, 4)) for a, b in sorted(pairs)]
+    e = spark.createDataFrame(pd.DataFrame(rows, columns=["src", "dst", "weight"]))
+    calls = {
+        "pagerank": lambda: wg.pagerank(e, iters=6),
+        "pagerank_integer": lambda: wg.pagerank_integer(e, iters=6),
+        "hits_integer": lambda: wg.hits_integer(e, iters=2),
+        "bfs_depths_integer": lambda: wg.bfs_depths_integer(e, ["n0"], iters=6),
+        "label_propagation": lambda: wg.label_propagation(e, iters=4),
+        "kcore_flags": lambda: wg.kcore_flags(e, k=2, rounds=2),
+        "transitive_closure": lambda: kgquery.transitive_closure(
+            e.select(F.col("src").alias("subj"), F.lit("p").alias("pred"),
+                     F.col("dst").alias("obj")),
+            "p",
+        ),
+        "triangle_clustering": lambda: wg.triangle_clustering(e),
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    calls[op]()
+    assert cache.numCachedEntries() == before

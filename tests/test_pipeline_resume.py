@@ -62,3 +62,26 @@ def test_lineage_records(spark, corpus_dir, tmp_path):
     assert rec["partitions"] >= 1
     assert rec["partition_histogram"][0]["rows"] >= 1
     assert rec["config_hash"]
+
+
+def test_stage_wall_covers_eager_build(spark, corpus_dir, tmp_path, monkeypatch):
+    """A stage's wall_sec starts before its build call: stage 7 builds its
+    PageRank eagerly, before write_stage writes anything."""
+    import time
+
+    from mitie_spark.operators import webgraph
+
+    pause = 3.0
+    real = webgraph.pagerank
+
+    def slow_pagerank(*args, **kwargs):
+        time.sleep(pause)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(webgraph, "pagerank", slow_pagerank)
+    out = str(tmp_path / "out3")
+    _run(spark, corpus_dir, out)
+    with open(os.path.join(out, "entity_rank.lineage.json")) as f:
+        assert json.load(f)["wall_sec"] >= pause
+    with open(os.path.join(out, "pipeline_report.json")) as f:
+        assert json.load(f)["entity_rank"]["wall_sec"] >= pause

@@ -430,25 +430,6 @@ def test_hits_integer_matches_hand_reference(spark):
     assert got["c"][1] == 0
 
 
-def test_hits_float_l1_normalized(spark):
-    import pandas as pd
-
-    from mitie_spark.operators.webgraph import hits
-
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            [("a", "b", 1.0), ("b", "c", 1.0), ("c", "a", 1.0)],
-            columns=["src", "dst", "weight"],
-        )
-    )
-    rows = hits(df, iters=6).collect()
-    assert abs(sum(r.auth for r in rows) - 1.0) < 1e-9
-    assert abs(sum(r.hub for r in rows) - 1.0) < 1e-9
-    # symmetric cycle: uniform scores
-    for r in rows:
-        assert abs(r.auth - 1 / 3) < 1e-9 and abs(r.hub - 1 / 3) < 1e-9
-
-
 def test_main_content_review_regressions():
     from mitie_spark.functions.boilerplate import main_content
 
