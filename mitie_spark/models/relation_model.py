@@ -184,8 +184,8 @@ class RelationModel:
 
     def _score_rows(self, rows) -> np.ndarray:
         """Batched scoring of feature rows [(idxs, vals, dense)] → (N, K).
-        The single-pair path routes through here so per-doc and batched
-        extraction stay bit-identical — one shared kernel with the NER
+        The single-pair ``scores`` routes through here so it stays
+        bit-identical to ``detect_batch`` — one shared kernel with the NER
         chunk classifier (ner_model.score_feature_rows)."""
         from mitie_spark.models.ner_model import score_feature_rows
 
@@ -201,15 +201,10 @@ class RelationModel:
         row = self._features(tokens, X, arg1, arg2, mean_cache)
         return self._score_rows([row])[0]
 
-    def detect(self, tokens, X, arg1, arg2, mean_cache=None):
-        """→ [(pred, score)] for detectors with score > 0
-        (binary_relation_detector.h:70-77)."""
-        s = self.scores(tokens, X, arg1, arg2, mean_cache)
-        return [(self.preds[i], float(s[i])) for i in np.nonzero(s > 0)[0]]
-
     def detect_batch(self, items):
         """items: [(tokens, X, arg1, arg2, mean_cache)] → per item
-        [(pred, score) for score > 0]. Feature extraction stays per pair
+        [(pred, score) for score > 0] (binary_relation_detector.h:70-77);
+        a single pair is a batch of one. Feature extraction stays per pair
         (memoized windows); the K detector scores for EVERY pair in the
         Arrow batch compute in one stacked call."""
         if not items:

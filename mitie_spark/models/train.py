@@ -120,7 +120,10 @@ def build_training_data(n_docs: int, seed: int):
 
 
 def evaluate(ner: NerModel, rel: RelationModel, n_docs: int, seed: int):
-    """End-to-end P/R on held-out docs: mentions (span+tag exact) and triples."""
+    """End-to-end P/R on held-out docs: mentions (span+tag exact) and triples
+    (the extraction operator's adjacent-pair candidates)."""
+    from mitie_spark.operators.extraction import _candidate_pairs
+
     rng = random.Random(f"eval:{seed}")
     tp_m = fp_m = fn_m = 0
     tp_r = fp_r = fn_r = 0
@@ -137,17 +140,16 @@ def evaluate(ner: NerModel, rel: RelationModel, n_docs: int, seed: int):
             (ments[si][3], p, ments[oi][3]) for si, p, oi in rels
         }
         X = ner.X(toks)
-        pred_sorted = sorted(pred_m, key=lambda m: m[0])
-        pred_t = set()
-        for j in range(len(pred_sorted) - 1):
-            a, b = pred_sorted[j], pred_sorted[j + 1]
-            for (arg1, arg2) in ((a, b), (b, a)):
-                for p, score in rel.detect(
-                    toks, X, (arg1[0], arg1[1]), (arg2[0], arg2[1])
-                ):
-                    s1 = " ".join(toks[arg1[0] : arg1[1]])
-                    s2 = " ".join(toks[arg2[0] : arg2[1]])
-                    pred_t.add((s1, p, s2))
+        pairs = _candidate_pairs(pred_m)
+        mean_cache: dict = {}
+        hits = rel.detect_batch(
+            [(toks, X, arg1, arg2, mean_cache) for arg1, arg2 in pairs]
+        )
+        pred_t = {
+            (" ".join(toks[s1:e1]), p, " ".join(toks[s2:e2]))
+            for ((s1, e1), (s2, e2)), pair_hits in zip(pairs, hits)
+            for p, _ in pair_hits
+        }
         tp_r += len(truth_t & pred_t)
         fp_r += len(pred_t - truth_t)
         fn_r += len(truth_t - pred_t)

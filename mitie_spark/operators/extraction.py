@@ -180,37 +180,15 @@ def _triple_row(tokens, arg1, arg2, pred, score):
     }
 
 
-def _finish_document(tokens, ents, rel, X):
-    """Post-segmentation per-doc dataflow: mentions rows + adjacent-pair
-    relation scoring → (n_tokens, mentions, triples)."""
-    mentions = _mention_rows(tokens, ents)
-    triples = []
-    if len(ents) >= 2:
-        mean_cache: dict = {}  # per-mention mean vectors, shared across pairs
-        for arg1, arg2 in _candidate_pairs(ents):
-            for pred, score in rel.detect(tokens, X, arg1, arg2, mean_cache):
-                triples.append(_triple_row(tokens, arg1, arg2, pred, score))
-    return len(tokens), mentions, triples
-
-
-def extract_document(text: str, ner, rel):
-    """Pure-python per-doc extraction → (n_tokens, mentions, triples)."""
-    from mitie_spark.functions.tokenizer import tokenize
-
-    tokens = tokenize(text)
-    chunks, X = ner.segment(tokens)
-    ents = ner.classify_chunks(tokens, X, chunks)
-    return _finish_document(tokens, ents, rel, X)
-
-
 def extract_documents_batch(texts, ner, rel):
     """Arrow-batch extraction, batched at every model stage: segmentation
     (one stacked emissions matmul + vectorized Viterbi), chunk
     classification (all cache-miss chunks in the batch scored in one
     segment-reduce + matmul), and relation detection (every candidate pair
-    in the batch scored in one stacked call). Value-identical to per-doc
-    extraction — all three stages route through the same scoring functions
-    (equivalence unit-tested)."""
+    in the batch scored in one stacked call). A document's result does not
+    depend on its batch: each one equals that document extracted as a
+    batch of one (unit-tested), because every stage scores through the
+    same summation-order-fixed kernels."""
     from mitie_spark.functions.tokenizer import tokenize
 
     tok_lists = [tokenize(t or "") for t in texts]

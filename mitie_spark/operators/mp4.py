@@ -224,7 +224,9 @@ def _resolve_samples(buf: bytes, stbl: dict, budget: list, timescale: int):
     total = int(spc.sum())
     if total < n:
         raise UnsupportedMediaError("MP4 stsc covers fewer samples than stsz")
-    sample_chunk = np.repeat(np.arange(nch, dtype=np.int64), spc)[:n]
+    # chunk of each of the n samples, without expanding all `total` slots
+    # (a corrupt stsc can declare billions)
+    sample_chunk = np.searchsorted(np.cumsum(spc), np.arange(n), side="right")
 
     # per-sample offsets ---------------------------------------------------
     csum = np.concatenate([[0], np.cumsum(sizes)])

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mitie_spark.queries import query
+from mitie_spark.session import session_memo
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 KG_PAGES = {"0.001": 500, "0.01": 2000, "0.1": 20000, "1": 200000}
@@ -33,31 +34,26 @@ def kg_dir_for(sf_dir: str) -> str:
     return out
 
 
-_KG_CACHE: dict[str, DataFrame] = {}
-
-
 def _kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused extraction over the corpus for this scale (cached + persisted —
-    several queries share one extraction pass)."""
+    """Fused extraction over the corpus for this scale (session-memoized +
+    persisted — several queries share one extraction pass)."""
     from mitie_spark.models.train import ARTIFACT_DIR
     from mitie_spark.operators.extraction import extract_kg
 
     d = kg_dir_for(sf_dir)
-    # applicationId, not id(spark): a stopped session's freed address can
-    # be reused by CPython, which would hand back a DataFrame bound to a
-    # dead SparkContext
-    key = f"{spark.sparkContext.applicationId}:{d}"
-    if key not in _KG_CACHE:
+
+    def build():
         pages = spark.read.parquet(os.path.join(d, "pages.parquet"))
         cores = spark.sparkContext.defaultParallelism
-        _KG_CACHE[key] = extract_kg(
+        return extract_kg(
             pages,
             os.path.join(ARTIFACT_DIR, "ner_model.npz"),
             os.path.join(ARTIFACT_DIR, "relation_model.npz"),
             lang_filter=None,
             parallelism=cores * 4,  # CPU-bound stage: tasks per core, not per byte
         ).persist()
-    return _KG_CACHE[key]
+
+    return session_memo(spark, "kg", d, build)
 
 
 ORACLE_KG = os.path.join(REPO, "data", "kg_sf0.01")
@@ -563,10 +559,7 @@ def text_categories(spark, sf_dir):
     )
 
 
-_LANGID_CACHE: dict = {}
-
-
-def _langid_model(spark=None):
+def _langid_model(spark):
     """Char-n-gram NB over lang-labeled pages, weights broadcast into the
     scoring UDF (functions/langid). Loads the committed artifact
     (models/artifacts/langid.npz — trained by models.train like the other
@@ -577,32 +570,26 @@ def _langid_model(spark=None):
     signal; at 100 TB you point train_spark at a bounded sample of
     genuinely lang-labeled pages instead. The model is a 5×4096 matrix
     regardless of corpus size."""
-    import os
-
     from mitie_spark.functions.langid import CharNgramLangID
     from mitie_spark.models.train import ARTIFACT_DIR
 
-    model = _LANGID_CACHE.get("model")
-    if model is None:
+    def build():
         path = os.path.join(ARTIFACT_DIR, "langid.npz")
         if os.path.exists(path):
-            model = CharNgramLangID.load(path)
-        else:
-            import pandas as pd
+            return CharNgramLangID.load(path)
+        import pandas as pd
 
-            from mitie_spark.functions.langid import synthetic_lang_corpus
+        from mitie_spark.functions.langid import synthetic_lang_corpus
 
-            if spark is None:
-                raise ValueError("no langid artifact and no SparkSession")
-            rows = synthetic_lang_corpus(n_per_lang=200, seed=13)
-            train = spark.createDataFrame(
-                pd.DataFrame(rows, columns=["lang", "text"])
-            )
-            model = CharNgramLangID.train_spark(
-                train, text_col="text", lang_col="lang"
-            )
-        _LANGID_CACHE["model"] = model
-    return model
+        rows = synthetic_lang_corpus(n_per_lang=200, seed=13)
+        train = spark.createDataFrame(
+            pd.DataFrame(rows, columns=["lang", "text"])
+        )
+        return CharNgramLangID.train_spark(
+            train, text_col="text", lang_col="lang"
+        )
+
+    return session_memo(spark, "langid", ARTIFACT_DIR, build)
 
 
 @query("lang_id_distribution")
@@ -633,9 +620,6 @@ def lang_id_distribution(spark, sf_dir):
 # truth at gate scales), so their full DuckDB value-hash gates live in
 # queries_webkg.LOCAL_ORACLES (the driver's 50 gated slots are full).
 # ---------------------------------------------------------------------------
-
-
-_COMENT_CACHE: dict[str, tuple] = {}
 
 
 @query("kg_two_hop_inference")
@@ -693,22 +677,21 @@ def kg_entity_comentions(spark, sf_dir):
     property of text, not corpus size)."""
     from mitie_spark.operators.extraction import mentions_table
 
-    # session-keyed persisted projection (the doc_unigram_logprob pattern):
-    # the lazy result reads it three times at collect (cnt + both join
-    # sides), and repeat invocations must not stack one persisted copy per
-    # call — applicationId, not id(spark), see _KG_CACHE; keyed on the
-    # RESOLVED kg dir like _KG_CACHE so path spellings ('sf0.01' vs
-    # 'sf0.01/') cannot persist duplicate copies
-    key = f"{spark.sparkContext.applicationId}:{kg_dir_for(sf_dir)}"
-    if key not in _COMENT_CACHE:
+    # session-memoized persisted projection: the lazy result reads it
+    # three times at collect (cnt + both join sides), and repeat
+    # invocations must not stack one persisted copy per call
+    def build():
         m = (
             mentions_table(_kg(spark, sf_dir))
             .select("url", "surface")
             .distinct()
             .persist()
         )
-        _COMENT_CACHE[key] = (m, m.select("url").distinct().count())
-    m, n_total = _COMENT_CACHE[key]
+        return m, m.select("url").distinct().count()
+
+    m, n_total = session_memo(
+        spark, "kg_comentions", kg_dir_for(sf_dir), build
+    )
     cnt = m.groupBy("surface").agg(F.count("*").alias("c"))
     a, b = m.alias("a"), m.alias("b")
     pairs = (

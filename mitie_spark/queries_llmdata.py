@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mitie_spark.queries import query
-from mitie_spark.session import load_tables
+from mitie_spark.session import load_tables, session_memo
 
 # ---------------------------------------------------------------------------
 # Gopher-style repetition signals (Rae et al. 2021 §A1.1 use character
@@ -383,23 +383,20 @@ def domain_mixture_sample(spark, sf_dir):
 
 _BPE_MERGES = 30
 
-# session-keyed learned merge tables: bpe_merges and bpe_token_counts share
-# one training run per (session, sf_dir) instead of re-paying the corpus
-# groupBy + 30 sequential pair-count rounds (same memo pattern as
-# queries_pipeline._TOKS_CACHE)
-_MERGES_CACHE: dict[str, list] = {}
-
-
 def _bpe_merges_cached(spark, sf_dir: str) -> list:
+    """Session-memoized learned merge table: bpe_merges and bpe_token_counts
+    share one training run per (session, sf_dir) instead of re-paying the
+    corpus groupBy + 30 sequential pair-count rounds."""
     from mitie_spark.operators.bpe import train_bpe
 
-    # applicationId, not id(spark): a stopped session's freed address
-    # can be reused by CPython (see queries_kg._KG_CACHE)
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _MERGES_CACHE:
-        docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-        _MERGES_CACHE[key] = train_bpe(docs, n_merges=_BPE_MERGES, min_freq=2)
-    return _MERGES_CACHE[key]
+    return session_memo(
+        spark, "bpe_merges", sf_dir,
+        lambda: train_bpe(
+            load_tables(spark, sf_dir, ["documents"])["documents"],
+            n_merges=_BPE_MERGES,
+            min_freq=2,
+        ),
+    )
 
 
 @query("bpe_merges")

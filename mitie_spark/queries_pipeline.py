@@ -25,11 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mitie_spark.queries import query
-from mitie_spark.session import load_tables
-
-# session-keyed persisted token frames for doc_unigram_logprob (one cached
-# copy per (session, sf_dir) instead of one per invocation)
-_TOKS_CACHE: dict[str, DataFrame] = {}
+from mitie_spark.session import load_tables, session_memo
 
 # ---------------------------------------------------------------------------
 # Range (interval) join — click → errors by the same user within 10 minutes
@@ -279,36 +275,26 @@ def customer_status_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-keyed persisted (doc_id, source, token) projection, shared
+    """Session-memoized persisted (doc_id, source, token) projection, shared
     by doc_unigram_logprob / bm25_doc_ranking / hll_distinct_tokens:
     repeated invocations (and the multiple reads each lazy result makes
     at collect time) reuse ONE cached copy instead of re-tokenizing the
-    corpus or accumulating persisted blocks per call. applicationId, not
-    id(spark): a stopped session's freed address can be reused by
-    CPython (see queries_kg._KG_CACHE)."""
-    import os
-
+    corpus or accumulating persisted blocks per call."""
     from mitie_spark.session import by_compute
 
-    # normalized key: path spellings ('sf0.1' vs 'sf0.1/') must not
-    # persist duplicate corpus-sized frames (same fix as
-    # queries_kg._COMENT_CACHE)
-    key = (
-        f"{spark.sparkContext.applicationId}:"
-        f"{os.path.normpath(os.path.abspath(sf_dir))}"
-    )
-    if key not in _TOKS_CACHE:
+    def build():
         docs = by_compute(
             load_tables(spark, sf_dir, ["documents"])["documents"]
         )
-        _TOKS_CACHE[key] = docs.select(
+        return docs.select(
             "doc_id",
             "source",
             F.explode(
                 F.filter(F.split("text", " "), lambda t: t != "")
             ).alias("token"),
         ).persist()
-    return _TOKS_CACHE[key]
+
+    return session_memo(spark, "doc_tokens", sf_dir, build)
 
 
 @query(
@@ -498,10 +484,6 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: same query.
 BM25_TERMS = ("join", "hash", "scan", "batch")
 
-# session-keyed (n_docs, total_tokens) scalars for bm25_doc_ranking
-_BM25_STATS: dict[str, tuple] = {}
-
-
 @query("bm25_doc_ranking")
 def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-50 over the documents table, INTEGER-exact.
@@ -529,19 +511,14 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar actions, cached per (session, sf) so repeat invocations don't
     re-count. At 100 TB the per-term df table is vocabulary-sized and
     the score join stays map-side."""
-    import os
-
     toks = doc_tokens(spark, sf_dir)
-    key = (
-        f"{spark.sparkContext.applicationId}:"
-        f"{os.path.normpath(os.path.abspath(sf_dir))}"
-    )
-    if key not in _BM25_STATS:
-        _BM25_STATS[key] = (
+    n_docs, a_tokens = session_memo(
+        spark, "bm25_stats", sf_dir,
+        lambda: (
             load_tables(spark, sf_dir, ["documents"])["documents"].count(),
             toks.count(),
-        )
-    n_docs, a_tokens = _BM25_STATS[key]
+        ),
+    )
     terms = list(BM25_TERMS)
     qtoks = toks.where(F.col("token").isin(terms))
     tf = qtoks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mitie_spark.queries import query
-from mitie_spark.session import load_tables
+from mitie_spark.session import load_tables, session_memo
 
 # ---------------------------------------------------------------------------
 # Shared fragments
@@ -232,19 +232,16 @@ def _char_shingle_jaccard_udf():
     return jacc
 
 
-_PAIRS_CACHE: dict[str, DataFrame] = {}
-_CAND_CACHE: dict[str, DataFrame] = {}
-_VEC_CACHE: dict[str, DataFrame] = {}  # count-vector frames (LSH near-dup)
-
-
 def _cand_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached persisted blocking candidates — the minhash, components,
-    and embedding-cosine queries all start from the same banding pass."""
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"  # see queries_kg._kg
-    if key not in _CAND_CACHE:
-        docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-        _CAND_CACHE[key] = _minhash_band_candidates(docs).persist()
-    return _CAND_CACHE[key]
+    """Session-memoized persisted blocking candidates — the minhash,
+    components, and embedding-cosine queries all start from the same
+    banding pass."""
+    return session_memo(
+        spark, "minhash_candidates", sf_dir,
+        lambda: _minhash_band_candidates(
+            load_tables(spark, sf_dir, ["documents"])["documents"]
+        ).persist(),
+    )
 
 
 def _verified_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,36 +260,35 @@ def _verified_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is an Arrow-batched pandas UDF — set intersection in C-speed
     Python, not interpreted array expressions).
 
-    The result is persisted and cached per (session, sf_dir): the minhash
-    and components queries share one blocking+verify pass, exactly as the
-    KG queries share one extraction pass.
+    The result is persisted and memoized per (session, sf_dir): the
+    minhash and components queries share one blocking+verify pass, exactly
+    as the KG queries share one extraction pass.
     """
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"  # see queries_kg._kg
-    if key in _PAIRS_CACHE:
-        return _PAIRS_CACHE[key]
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    cand = _cand_for(spark, sf_dir)
-    texts = docs.select("doc_id", "text")
-    jacc = _char_shingle_jaccard_udf()
-    j = (
-        cand.join(
-            texts.select(
-                F.col("doc_id").alias("id_a"), F.col("text").alias("text_a")
-            ),
-            "id_a",
+
+    def build():
+        docs = load_tables(spark, sf_dir, ["documents"])["documents"]
+        cand = _cand_for(spark, sf_dir)
+        texts = docs.select("doc_id", "text")
+        jacc = _char_shingle_jaccard_udf()
+        j = (
+            cand.join(
+                texts.select(
+                    F.col("doc_id").alias("id_a"), F.col("text").alias("text_a")
+                ),
+                "id_a",
+            )
+            .join(
+                texts.select(
+                    F.col("doc_id").alias("id_b"), F.col("text").alias("text_b")
+                ),
+                "id_b",
+            )
+            .withColumn("jaccard", jacc("text_a", "text_b"))
+            .filter(F.col("jaccard") >= _JACCARD_T)
         )
-        .join(
-            texts.select(
-                F.col("doc_id").alias("id_b"), F.col("text").alias("text_b")
-            ),
-            "id_b",
-        )
-        .withColumn("jaccard", jacc("text_a", "text_b"))
-        .filter(F.col("jaccard") >= _JACCARD_T)
-    )
-    out = j.select("id_a", "id_b", "jaccard").persist()
-    _PAIRS_CACHE[key] = out
-    return out
+        return j.select("id_a", "id_b", "jaccard").persist()
+
+    return session_memo(spark, "minhash_pairs", sf_dir, build)
 
 
 @query(
@@ -827,15 +823,12 @@ def embedding_near_duplicates(spark, sf_dir):
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
     import numpy as np
 
-    from mitie_spark.session import by_compute
-
-    # persisted AND session-cached (like _CAND_CACHE): the operator
-    # references the vectors four times (both sides of the bucket
-    # self-join + both sides of the verify join), the md5-per-token
-    # count-vector pass is the expensive upstream, and a fresh persist
-    # per invocation would accumulate corpus-sized cached copies
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _VEC_CACHE:
+    # persisted AND session-memoized: the operator references the vectors
+    # four times (both sides of the bucket self-join + both sides of the
+    # verify join), the md5-per-token count-vector pass is the expensive
+    # upstream, and a fresh persist per invocation would accumulate
+    # corpus-sized cached copies
+    def build():
         # size the build's partitions from the SCAN width instead of full
         # by_compute: the count-vector work is ~0.2 ms/doc, so at sf0.1
         # (5k docs) a 32-partition stage is ~0.8 s of compute behind
@@ -848,8 +841,9 @@ def embedding_near_duplicates(spark, sf_dir):
         parts = min(
             spark.sparkContext.defaultParallelism, max(4, scan_parts * 4)
         )
-        _VEC_CACHE[key] = _doc_count_vectors(docs.repartition(parts)).persist()
-    vecs = _VEC_CACHE[key]
+        return _doc_count_vectors(docs.repartition(parts)).persist()
+
+    vecs = session_memo(spark, "lsh_count_vectors", sf_dir, build)
     # center the projections on an approximate data mean (deterministic
     # doc_id sample): count vectors are all-positive, so uncentered sign
     # bits collapse into a few huge buckets and the bucket join

@@ -85,6 +85,25 @@ def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict:
     return out
 
 
+_MEMO: dict[tuple, object] = {}
+
+
+def session_memo(spark: SparkSession, name: str, path: str, build):
+    """``build()`` once per (session, ``name``, resolved ``path``), then the
+    stored value — the one cache for frames and values that several
+    registry queries share. The key uses the applicationId, not
+    ``id(spark)``: a stopped session's freed address can be reused by
+    CPython, which would hand back a DataFrame bound to a dead
+    SparkContext. ``path`` is resolved with ``realpath`` so spellings of
+    one directory ('sf0.01', 'sf0.01/', a relative path) share one entry.
+    Nothing is persisted or materialized here; a builder that wants its
+    frame cached persists it itself."""
+    key = (spark.sparkContext.applicationId, name, os.path.realpath(path))
+    if key not in _MEMO:
+        _MEMO[key] = build()
+    return _MEMO[key]
+
+
 def by_compute(df, factor: int = 1):
     """Repartition a scan whose cost is compute-per-row, not bytes.
 

@@ -558,3 +558,73 @@ def test_graph_operator_leaves_no_cached_frame(spark, op):
     before = cache.numCachedEntries()
     calls[op]()
     assert cache.numCachedEntries() == before
+
+
+# ---------------------------------------------------------------------------
+# Session memo for values shared across registry queries
+# ---------------------------------------------------------------------------
+
+
+def test_session_memo_keys_on_resolved_path(spark, monkeypatch):
+    """Spellings of one corpus directory ('sf', 'sf/', a relative path)
+    share one memo entry: BPE trains once, and the persisted extraction
+    frame is built (and cached) once."""
+    import os
+
+    import mitie_spark.queries  # noqa: F401  registry first: it imports queries_kg
+    from mitie_spark import session
+    from mitie_spark.operators import bpe
+    from mitie_spark.queries_kg import _kg
+    from mitie_spark.queries_llmdata import _bpe_merges_cached
+
+    monkeypatch.setattr(session, "_MEMO", {})  # stub values stay in this test
+    calls = []
+
+    def counting_train_bpe(docs, n_merges, min_freq):
+        calls.append(n_merges)
+        return [("a", "b")]
+
+    monkeypatch.setattr(bpe, "train_bpe", counting_train_bpe)
+    got = [
+        _bpe_merges_cached(spark, sf)
+        for sf in (SF, SF + "/", os.path.relpath(SF))
+    ]
+    assert len(calls) == 1
+    assert got[0] is got[1] is got[2]
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    kg = _kg(spark, SF)
+    before = cache.numCachedEntries()
+    assert _kg(spark, SF + "/") is kg
+    assert cache.numCachedEntries() == before
+
+
+def test_query_modules_hold_no_module_level_cache_dict():
+    """Values shared across registry queries go through
+    session.session_memo. A module-level empty dict literal in a query
+    module (``X = {}`` / ``X: dict[...] = {}``) is the shape of a
+    hand-rolled cache growing back beside it. The registry's own
+    QUERIES/ORACLES dicts in queries.py are the one exception."""
+    import ast
+    import glob
+    import os
+
+    import mitie_spark
+
+    registry = {"QUERIES", "ORACLES"}  # queries.py's query registry
+    pkg = os.path.dirname(mitie_spark.__file__)
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "queries*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in tree.body:
+            if (
+                isinstance(node, (ast.Assign, ast.AnnAssign))
+                and isinstance(node.value, ast.Dict)
+                and not node.value.keys
+            ):
+                for t in getattr(node, "targets", None) or [node.target]:
+                    name = getattr(t, "id", "?")
+                    if name not in registry:
+                        found.append(f"{os.path.basename(path)}:{name}")
+    assert not found, found

@@ -125,6 +125,12 @@ def test_hostile_inputs_degrade_to_unsupported():
     corrupt[stts_at + 12 : stts_at + 16] = (99).to_bytes(4, "big")
     with pytest.raises(UnsupportedMediaError):
         parse_mp4(bytes(corrupt))
+    # stsc declaring ~4e9 samples per chunk: only the stsz sample count is
+    # resolved, never the declared slots (that expansion is a 32 GB array)
+    corrupt = bytearray(blob)
+    stsc_at = blob.find(b"stsc")
+    corrupt[stsc_at + 16 : stsc_at + 20] = (0xFFFFFFF0).to_bytes(4, "big")
+    assert len(parse_mp4(bytes(corrupt)).video_track().offsets) == 5
     # sample range outside payload (truncated mdat)
     t = parse_mp4(blob).video_track()
     rngs = [(0, i, int(t.offsets[i]), int(t.sizes[i])) for i in range(5)]

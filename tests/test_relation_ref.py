@@ -131,11 +131,11 @@ def test_dlib_relation_model_matches_pair_scoring(tmp_path):
             det = next(dd for dd in dets if dd["relation_type"] == name)
             w, b = relation_weights_from_detector(det, n_dims)
             assert got[k] == pytest.approx(score_pairs(w, b, pairs), rel=1e-9)
-    # detect_batch equals per-pair detect
+    # a batch of N equals N batches of one
     mc = {}
     items = [(TOKENS, X, ARG1, ARG2, mc), (TOKENS, X, ARG2, ARG1, mc)]
     assert model.detect_batch(items) == [
-        model.detect(*it) for it in items
+        model.detect_batch([it])[0] for it in items
     ]
     # pooling detectors trained against different extractors is rejected
     bad = dict(dets[0])
