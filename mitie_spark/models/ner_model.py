@@ -27,7 +27,7 @@ named_entity_extractor.cpp:35-118).
 
 All inference is batched NumPy inside mapInPandas (SURVEY.md §4): the model
 object is broadcast once per executor, never per batch; chunk scoring stacks
-every cache-miss chunk in the Arrow batch into one segment-reduce + matmul.
+every chunk in the Arrow batch into one segment-reduce + matmul.
 """
 
 from __future__ import annotations
@@ -184,14 +184,6 @@ class ShapeAugmentedWordVectors:
 
 
 DEFAULT_FS = HashedFeatureSource()
-
-# kept for compatibility: modules that fingerprint against the default space
-FEATURE_FINGERPRINT = DEFAULT_FS.fingerprint
-
-
-def token_features(word: str) -> np.ndarray:
-    """Default-source per-token features (back-compat shim)."""
-    return _hashed_token_features(word)
 
 
 def sentence_matrix(tokens: list[str], fs=None) -> np.ndarray:
@@ -618,18 +610,6 @@ def score_feature_rows(rows, W_sparse, W_dense, b) -> np.ndarray:
     return S
 
 
-def chunk_memo_key(tokens: list[str], start: int, end: int):
-    """Every chunk feature — hashed and dense — is a pure function of the
-    chunk tokens plus the ≤8 context tokens on each side (context bags,
-    ±1/±2 roles, caps pattern, dense before/after blocks), so identical
-    windows classify once."""
-    return (
-        tuple(tokens[max(0, start - CONTEXT_BAG) : start]),
-        tuple(tokens[start:end]),
-        tuple(tokens[end : end + CONTEXT_BAG]),
-    )
-
-
 class NerModel:
     """Weights container + predict; save/load as .npz (broadcastable).
 
@@ -709,23 +689,10 @@ class NerModel:
         return self._to_chunks(path), X
 
     def _score_feature_rows(self, rows):
-        """Batched multiclass scoring — the single-chunk path goes through
-        here too so per-doc and batched extraction stay bit-identical (see
-        ``score_feature_rows``)."""
+        """Batched multiclass scoring (see ``score_feature_rows``)."""
         return score_feature_rows(
             rows, self.W_cls_sparse, self.W_cls_dense, self.b_cls
         )
-
-    def classify_chunk(self, tokens, X, start, end):
-        row = chunk_features(tokens, X, start, end)
-        scores = self._score_feature_rows([row])[0]
-        k = int(np.argmax(scores))
-        # the reference surfaces dlib's RAW winning decision value
-        # (w_best·x − b_best, function.h:800-813 via
-        # mitie_ner_get_detection_score), not a top1−top2 margin — a
-        # dlib-loaded model must produce the same scores users calibrated
-        # thresholds against
-        return k, float(scores[k])
 
     def segment_batch(
         self, Xs: list[np.ndarray], max_padded_cells: int = 1_000_000
@@ -772,62 +739,40 @@ class NerModel:
             out[j] = self._to_chunks(p)
         return out
 
-    _CHUNK_CACHE_MAX = 500_000
-
     def classify_chunks_batch(self, docs):
         """[(tokens, X, chunks)] → per-doc [(start, end, tag, score)] with
         NOT_ENTITY dropped (named_entity_extractor.cpp:147-174).
 
-        Memoized per (chunk, ±8-token context) window — recurring windows
-        (constant in templated web text) classify once — and every cache
-        MISS in the batch is scored in ONE stacked segment-reduce + matmul
-        instead of a per-chunk gather (the round-1 hot-spot)."""
-        cache = getattr(self, "_chunk_cache", None)
-        if cache is None:
-            cache = self._chunk_cache = {}
-        layouts = []  # per doc: [(s, e, key)]
-        miss_rows = []  # feature rows to score
-        miss_keys = []
-        seen_miss: dict = {}
-        for tokens, X, chunks in docs:
-            lay = []
-            for s, e in chunks:
-                key = chunk_memo_key(tokens, s, e)
-                lay.append((s, e, key))
-                if key not in cache and key not in seen_miss:
-                    seen_miss[key] = True
-                    miss_rows.append(chunk_features(tokens, X, s, e))
-                    miss_keys.append(key)
-            layouts.append(lay)
-        if miss_rows:
-            S = self._score_feature_rows(miss_rows)
+        Every chunk in the batch is scored in ONE stacked segment-reduce +
+        matmul; ``score_feature_rows`` is batch-invariant, so a chunk's
+        result does not depend on the batch it arrives in."""
+        rows = [
+            chunk_features(tokens, X, s, e)
+            for tokens, X, chunks in docs
+            for s, e in chunks
+        ]
+        if rows:
+            S = self._score_feature_rows(rows)
             top = np.argmax(S, axis=1)
-            # raw winning decision value, like the reference (see
-            # classify_chunk) — b_cls is stored negated from dlib's b, so
-            # S[k] IS dlib's w_k·x − b_k
+            # the reference surfaces dlib's RAW winning decision value
+            # (w_best·x − b_best, function.h:800-813 via
+            # mitie_ner_get_detection_score), not a top1−top2 margin — a
+            # dlib-loaded model must produce the same scores users
+            # calibrated thresholds against. b_cls is stored negated from
+            # dlib's b, so S[k] IS dlib's w_k·x − b_k
             margins = S[np.arange(len(top)), top]
-            for key, k, m in zip(miss_keys, top, margins):
-                if len(cache) < self._CHUNK_CACHE_MAX:
-                    cache[key] = (int(k), float(m))
-                else:
-                    seen_miss[key] = (int(k), float(m))
-        out = []
         n_tags = len(self.tags)
-        for lay in layouts:
+        out = []
+        i = 0
+        for _, _, chunks in docs:
             doc_out = []
-            for s, e, key in lay:
-                hit = cache.get(key)
-                if hit is None:
-                    hit = seen_miss[key]
-                k, margin = hit
+            for s, e in chunks:
+                k = int(top[i])
                 if k < n_tags:
-                    doc_out.append((s, e, self.tags[k], margin))
+                    doc_out.append((s, e, self.tags[k], float(margins[i])))
+                i += 1
             out.append(doc_out)
         return out
-
-    def classify_chunks(self, tokens, X, chunks):
-        """chunks → [(start, end, tag, score)], dropping NOT_ENTITY."""
-        return self.classify_chunks_batch([(tokens, X, chunks)])[0]
 
     def extract_entities(self, tokens: list[str]):
         """→ [(start, end, tag, score)] — chunks classified NOT_ENTITY are
@@ -835,7 +780,7 @@ class NerModel:
         if not tokens:
             return []
         chunks, X = self.segment(tokens)
-        return self.classify_chunks(tokens, X, chunks)
+        return self.classify_chunks_batch([(tokens, X, chunks)])[0]
 
     # --- serialization ---
     def save(self, path: str) -> None:

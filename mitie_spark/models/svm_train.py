@@ -458,7 +458,8 @@ def tune_classifier_C(
     optimize_single_variable_failure fall back to C=300, exactly as the
     reference's catch block does.  Returns (best_C, best_fscore)."""
     from mitie_spark.models.ner_model import (
-        NerModel,
+        chunk_features,
+        score_feature_rows,
         train_chunk_classifier,
     )
 
@@ -478,17 +479,12 @@ def tune_classifier_C(
             Ws, Wd, b = train_chunk_classifier(
                 train, epochs=epochs, n_classes=k, C=C
             )
-            m = NerModel(
-                np.zeros((N_STATES, WINDOW * DEFAULT_FS.dims + 1)),
-                np.zeros((N_STATES, N_STATES)),
-                Ws,
-                Wd,
-                b,
-                ["L%d" % i for i in range(num_labels)],
-            )
-            for tokens, s, e, y in test:
-                X = sentence_matrix(tokens)
-                pred, _ = m.classify_chunk(tokens, X, s, e)
+            rows = [
+                chunk_features(tokens, sentence_matrix(tokens), s, e)
+                for tokens, s, e, _ in test
+            ]
+            preds = np.argmax(score_feature_rows(rows, Ws, Wd, b), axis=1)
+            for (_, _, _, y), pred in zip(test, preds):
                 res[y, pred] += 1
         return compute_fscore(res, num_labels, beta)
 

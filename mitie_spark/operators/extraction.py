@@ -183,8 +183,8 @@ def _triple_row(tokens, arg1, arg2, pred, score):
 def extract_documents_batch(texts, ner, rel):
     """Arrow-batch extraction, batched at every model stage: segmentation
     (one stacked emissions matmul + vectorized Viterbi), chunk
-    classification (all cache-miss chunks in the batch scored in one
-    segment-reduce + matmul), and relation detection (every candidate pair
+    classification (every chunk in the batch scored in one segment-reduce
+    + matmul), and relation detection (every candidate pair
     in the batch scored in one stacked call). A document's result does not
     depend on its batch: each one equals that document extracted as a
     batch of one (unit-tested), because every stage scores through the

@@ -22,13 +22,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+# Edge lists up to this size are solved on the driver; larger ones run the
+# distributed loop. Tests set it to 0 to force the distributed loop.
+DRIVER_MAX_EDGES = 200_000
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    driver_threshold: int = 200_000,
 ) -> DataFrame:
     """edges(src, dst) undirected → (id, component) with component = min
     vertex id in the component. Vertex ids must be orderable (long/string).
@@ -37,10 +40,10 @@ def connected_components(
     small enough to broadcast is solved with driver-side union-find — the
     distributed loop costs O(log diameter) scheduled rounds, which dominates
     wall time for dedup-group-sized graphs — while anything above
-    ``driver_threshold`` edges runs the shuffle-join min-label loop. The
-    size probe is a single ``limit(threshold+1).collect()`` job: if it comes
-    back under the limit it IS the edge list, so the small path costs one
-    job total."""
+    ``DRIVER_MAX_EDGES`` edges runs the shuffle-join min-label loop. The
+    size probe is a single ``limit(DRIVER_MAX_EDGES + 1).collect()`` job:
+    if it comes back under the limit it IS the edge list, so the small path
+    costs one job total."""
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
@@ -50,9 +53,9 @@ def connected_components(
         # blocking pipeline) for the checkpoint after already shuffling it
         # for the probe
     )
-    probe = e.limit(driver_threshold + 1).collect()
+    probe = e.limit(DRIVER_MAX_EDGES + 1).collect()
 
-    if len(probe) <= driver_threshold:
+    if len(probe) <= DRIVER_MAX_EDGES:
         parent: dict = {}
 
         def find(x):
@@ -175,8 +178,8 @@ def chinese_whispers(
         # would re-run the full upstream (e.g. blocking+verify) for the
         # checkpoint — same reason connected_components persists
     )
-    probe = e.limit(200_001).collect()
-    if len(probe) <= 200_000:
+    probe = e.limit(DRIVER_MAX_EDGES + 1).collect()
+    if len(probe) <= DRIVER_MAX_EDGES:
         import pandas as pd
 
         nbrs: dict = {}

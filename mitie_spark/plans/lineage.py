@@ -55,13 +55,17 @@ def write_stage(
     out_path: str,
     stage: str,
     conf: dict,
+    started: float,
     partition_by: list[str] | None = None,
     input_rows: int | None = None,
     catalog: str | None = None,
 ) -> dict:
     """Materialize a stage (Iceberg table if `catalog`, else parquet at
-    out_path) + lineage record. Returns the record."""
-    t0 = time.time()
+    out_path) + lineage record. Returns the record.
+
+    ``started`` is the ``time.time()`` taken before the stage built `df`:
+    an eager build (stage 7's PageRank iterations) runs before this call,
+    and the record's ``wall_sec`` must cover it."""
     kind, location = write_table(
         df, out_path, stage, partition_by=partition_by, catalog=catalog
     )
@@ -86,15 +90,11 @@ def write_stage(
         "output_rows": int(sum(p["rows"] for p in part_hist)),
         "partitions": len(part_hist),
         "partition_histogram": sorted(part_hist, key=lambda p: -p["rows"])[:32],
-        "wall_sec": round(time.time() - t0, 3),
+        "wall_sec": round(time.time() - started, 3),
     }
-    write_lineage(out_path, rec)
-    return rec
-
-
-def write_lineage(out_path: str, rec: dict) -> None:
     with open(_lineage_path(out_path), "w") as f:
         json.dump(rec, f, indent=1)
+    return rec
 
 
 def read_lineage(out_path: str) -> dict | None:

@@ -47,7 +47,6 @@ from mitie_spark.plans.lineage import (
     config_hash,
     read_lineage,
     stage_is_complete,
-    write_lineage,
     write_stage,
 )
 
@@ -91,13 +90,9 @@ def run_pipeline(
             t0 = time.time()
             df = build()
             rec = write_stage(
-                df, out, name, conf, partition_by=partition_by,
+                df, out, name, conf, t0, partition_by=partition_by,
                 input_rows=input_rows, catalog=catalog,
             )
-            # the stage's clock starts at build(): an eager build (stage
-            # 7's PageRank iterations) runs before write_stage's own clock
-            rec["wall_sec"] = round(time.time() - t0, 3)
-            write_lineage(out, rec)
             rec["skipped"] = False
             report[name] = rec
         return read_table(

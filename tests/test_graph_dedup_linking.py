@@ -22,8 +22,8 @@ def _union_find_components(edges, vertices):
     return {v: find(v) for v in vertices}
 
 
-def test_connected_components_random_graph(spark):
-    from mitie_spark.operators.graph import connected_components
+def test_connected_components_random_graph(spark, monkeypatch):
+    from mitie_spark.operators import graph
 
     rng = random.Random(5)
     n = 300
@@ -31,16 +31,14 @@ def test_connected_components_random_graph(spark):
     vertices = sorted({v for e in edges for v in e})
     truth = _union_find_components(edges, vertices)
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {r.id: r.comp for r in connected_components(df).collect()}
+    got = {r.id: r.comp for r in graph.connected_components(df).collect()}
     assert set(got) == set(truth)
     # same partition structure and same (min-id) representative
     assert got == truth
     # distributed min-label-propagation path must agree with the driver
-    # union-find path (driver_threshold=0 forces the shuffle-join loop)
-    got_dist = {
-        r.id: r.comp
-        for r in connected_components(df, driver_threshold=0).collect()
-    }
+    # union-find path (a gate of 0 forces the shuffle-join loop)
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    got_dist = {r.id: r.comp for r in graph.connected_components(df).collect()}
     assert got_dist == truth
 
 
@@ -162,6 +160,37 @@ def test_chinese_whispers_splits_dense_clusters(spark):
     assert len({cw[i] for i in range(4)}) == 1
     assert len({cw[i] for i in range(10, 14)}) == 1
     assert cw[0] != cw[10]
+
+
+def test_chinese_whispers_shuffle_loop_matches_driver_loop(spark, monkeypatch):
+    """With the size gate at 0, chinese_whispers runs its distributed
+    shuffle-join loop; it must give the driver loop's clusters, on the
+    two-clique graph and on a seeded random graph whose integer weights
+    make every weight sum exact (so argmax ties break identically)."""
+    from mitie_spark.operators import graph
+
+    rng = random.Random(17)
+    two_cliques = [
+        (i, j, 1) for lo in (0, 10)
+        for i in range(lo, lo + 4) for j in range(lo, lo + 4) if i < j
+    ] + [(3, 10, 1)]
+    random_graph = [
+        (rng.randrange(60), rng.randrange(60), rng.randint(1, 5))
+        for _ in range(150)
+    ]
+    for edges in (two_cliques, random_graph):
+        df = spark.createDataFrame(edges, "src long, dst long, w long")
+
+        def clusters():
+            return {
+                r["id"]: r["cluster"]
+                for r in graph.chinese_whispers(df, weight="w").collect()
+            }
+
+        driver = clusters()
+        with monkeypatch.context() as m:
+            m.setattr(graph, "DRIVER_MAX_EDGES", 0)
+            assert clusters() == driver
 
 
 def test_salted_count_matches_plain_groupby(spark):

@@ -62,11 +62,14 @@ def test_trained_models_meet_parity_target():
 def test_batched_segmentation_matches_per_doc():
     """extract_documents_batch is batch-invariant: on real corpus docs
     (incl. empty and 1-token texts) each document's result equals that
-    document extracted as a batch of one."""
+    document extracted as a batch of one, and its mentions equal the
+    per-document ``extract_entities`` (per-doc segment + batch-of-one
+    chunk classification)."""
     import os
 
     import pyarrow.parquet as pq
 
+    from mitie_spark.functions.tokenizer import tokenize
     from mitie_spark.models.train import ARTIFACT_DIR
     from mitie_spark.operators.extraction import (
         _load_models,
@@ -85,6 +88,10 @@ def test_batched_segmentation_matches_per_doc():
     assert batched == [
         extract_documents_batch([t], ner, rel)[0] for t in texts
     ]
+    for t, (_, mentions, _) in zip(texts, batched):
+        assert ner.extract_entities(tokenize(t)) == [
+            (m["start"], m["end"], m["tag"], m["score"]) for m in mentions
+        ]
 
 
 def test_viterbi_batch_matches_per_doc_on_random_emissions():
@@ -129,51 +136,6 @@ def test_segment_batch_padding_cap_preserves_output():
 
     Xs = [ner.X(tokenize(x)) for x in texts]
     assert ner.segment_batch(Xs, max_padded_cells=1) == ner.segment_batch(Xs)
-
-
-def test_chunk_classification_memo_is_pure():
-    """The chunk-classification memo key must capture every input: the same
-    (chunk, context) window in different docs/positions classifies
-    identically, and boundary chunks (missing context) don't collide with
-    mid-sentence ones."""
-    import os
-
-    from mitie_spark.functions.tokenizer import tokenize
-    from mitie_spark.models.ner_model import NerModel
-    from mitie_spark.models.train import ARTIFACT_DIR
-
-    ner = NerModel.load(os.path.join(ARTIFACT_DIR, "ner_model.npz"))
-    fresh = NerModel.load(os.path.join(ARTIFACT_DIR, "ner_model.npz"))
-
-    docs = [
-        "Davis Wilson was born in Boston .",
-        "the visit of Davis Wilson was born in Boston today",
-        "Davis Wilson",  # chunk at both doc edges: no context tokens
-        "in Boston",
-    ]
-    for text in docs:
-        toks = tokenize(text)
-        X = ner.X(toks)
-        chunks, _ = ner.segment(toks)
-        cached = ner.classify_chunks(toks, X, chunks)
-        direct = [
-            (s, e, fresh.tags[k], m)
-            for s, e in chunks
-            for k, m in [fresh.classify_chunk(toks, X, s, e)]
-            if k < len(fresh.tags)
-        ]
-        assert cached == direct
-    # run everything twice so the second pass is all cache hits
-    for text in docs:
-        toks = tokenize(text)
-        X = ner.X(toks)
-        chunks, _ = ner.segment(toks)
-        assert ner.classify_chunks(toks, X, chunks) == [
-            (s, e, fresh.tags[k], m)
-            for s, e in chunks
-            for k, m in [fresh.classify_chunk(toks, X, s, e)]
-            if k < len(fresh.tags)
-        ]
 
 
 def test_chunk_features_reference_golden():

@@ -3,6 +3,7 @@
 import json
 import os
 import shutil
+import uuid
 
 import pytest
 
@@ -14,6 +15,23 @@ def corpus_dir(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("plcorpus"))
     generate(d, n_pages=60, seed=11)
     return d
+
+
+STAGES = (
+    "verify_text", "kg", "mentions", "triples_raw",
+    "linked", "components", "triples", "entity_rank",
+)
+
+# Spark jobs per stage of a cold run on this 60-page corpus, and in total
+# for a rerun that skips every stage. A stage's jobs are those from its
+# resume check up to the next stage's check; "driver" is everything
+# before the first check. Adding a job is meant to be a visible decision:
+# raise a ceiling here on purpose, never to quiet a failure.
+COLD_JOB_CEILINGS = {
+    "driver": 3, "verify_text": 7, "kg": 6, "mentions": 5, "triples_raw": 6,
+    "linked": 9, "components": 8, "triples": 10, "entity_rank": 46,
+}
+SKIPPED_RERUN_JOB_CEILING = 13
 
 
 def _run(spark, corpus_dir, out_dir, force=False):
@@ -28,20 +46,55 @@ def _run(spark, corpus_dir, out_dir, force=False):
     )
 
 
-def test_pipeline_runs_and_resumes(spark, corpus_dir, tmp_path):
+def _jobs_per_stage(spark, monkeypatch, run):
+    """Run ``run()`` with one Spark job group per pipeline stage and return
+    {stage or "driver": job count}."""
+    from mitie_spark.plans import pipeline
+
+    sc = spark.sparkContext
+    tag = f"jobs-{uuid.uuid4().hex}"
+    real = pipeline.stage_is_complete
+
+    def tagged(out_path, *args, **kwargs):
+        sc.setJobGroup(f"{tag}:{os.path.basename(out_path)}", "stage")
+        return real(out_path, *args, **kwargs)
+
+    sc.setJobGroup(f"{tag}:driver", "driver")
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "stage_is_complete", tagged)
+            out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    counts = {
+        g: len(tracker.getJobIdsForGroup(f"{tag}:{g}"))
+        for g in ("driver",) + STAGES
+    }
+    return out, counts
+
+
+def test_pipeline_runs_and_resumes(spark, corpus_dir, tmp_path, monkeypatch):
     out = str(tmp_path / "out")
-    rep1 = _run(spark, corpus_dir, out)
+    rep1, cold_jobs = _jobs_per_stage(
+        spark, monkeypatch, lambda: _run(spark, corpus_dir, out)
+    )
     assert rep1["_summary"]["triples"] > 0
     assert not rep1["kg"]["skipped"]
     # stage 7: every canonical entity in the triple graph gets a rank
     assert rep1["_summary"]["entities_ranked"] > 0
+    over = {g: n for g, n in cold_jobs.items() if n > COLD_JOB_CEILINGS[g]}
+    assert not over, f"stage job counts over their ceilings: {over}"
 
     # full re-run: everything skipped, summary identical
-    rep2 = _run(spark, corpus_dir, out)
+    rep2, rerun_jobs = _jobs_per_stage(
+        spark, monkeypatch, lambda: _run(spark, corpus_dir, out)
+    )
     assert all(
         rec["skipped"] for name, rec in rep2.items() if not name.startswith("_")
     )
     assert rep2["_summary"] == rep1["_summary"]
+    assert sum(rerun_jobs.values()) <= SKIPPED_RERUN_JOB_CEILING, rerun_jobs
 
     # simulate a crash that lost a mid-pipeline stage: delete triples_raw
     shutil.rmtree(os.path.join(out, "triples_raw"))
@@ -66,10 +119,12 @@ def test_lineage_records(spark, corpus_dir, tmp_path):
 
 def test_stage_wall_covers_eager_build(spark, corpus_dir, tmp_path, monkeypatch):
     """A stage's wall_sec starts before its build call: stage 7 builds its
-    PageRank eagerly, before write_stage writes anything."""
+    PageRank eagerly, before write_stage writes anything. The record
+    write_stage returns is the one it writes, so it carries that wall."""
     import time
 
     from mitie_spark.operators import webgraph
+    from mitie_spark.plans import pipeline
 
     pause = 3.0
     real = webgraph.pagerank
@@ -78,9 +133,19 @@ def test_stage_wall_covers_eager_build(spark, corpus_dir, tmp_path, monkeypatch)
         time.sleep(pause)
         return real(*args, **kwargs)
 
+    returned = {}
+    real_write_stage = pipeline.write_stage
+
+    def capture_write_stage(*args, **kwargs):
+        rec = real_write_stage(*args, **kwargs)
+        returned[rec["stage"]] = dict(rec)
+        return rec
+
     monkeypatch.setattr(webgraph, "pagerank", slow_pagerank)
+    monkeypatch.setattr(pipeline, "write_stage", capture_write_stage)
     out = str(tmp_path / "out3")
     _run(spark, corpus_dir, out)
+    assert returned["entity_rank"]["wall_sec"] >= pause
     with open(os.path.join(out, "entity_rank.lineage.json")) as f:
         assert json.load(f)["wall_sec"] >= pause
     with open(os.path.join(out, "pipeline_report.json")) as f:
