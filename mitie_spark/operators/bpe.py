@@ -8,8 +8,8 @@ word-frequency table, so the corpus-sized work is ONE groupBy(word) — at
 over the (vocabulary-sized) frequency table.
 
 Two merge-loop strategies behind a size probe (the connected-components
-pattern in operators/graph.py): a vocabulary under the probe threshold
-collects to the driver and merges locally (exact, fast); above it, each
+pattern in operators/graph.py): a vocabulary up to the probe threshold is
+the probe's own result and merges locally (exact, fast); above it, each
 round is a DataFrame pair-count aggregation + a broadcast merge applied in
 a pandas UDF — same result, never materializes the vocab on the driver.
 Strategy equivalence is unit-tested.
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 END = "</w>"  # end-of-word marker (Sennrich's convention)
-_VOCAB_PROBE = 200_001  # driver path gate, rows
+_VOCAB_MAX = 200_000  # vocabularies up to this many words merge on the driver
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -105,9 +105,8 @@ def train_bpe(
     the vocabulary lands."""
     wc = word_counts(docs, text_col).persist()
     try:
-        probe = wc.limit(_VOCAB_PROBE).count()
-        if probe < _VOCAB_PROBE:
-            rows = wc.collect()
+        rows = wc.limit(_VOCAB_MAX + 1).collect()
+        if len(rows) <= _VOCAB_MAX:  # then the probe IS the vocabulary
             return train_bpe_local(
                 [(r["word"], r["cnt"]) for r in rows], n_merges, min_freq
             )

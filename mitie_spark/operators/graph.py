@@ -13,7 +13,7 @@ onto themselves. Rounds needed: O(log(diameter)). Each round is two
 shuffle-joins on the edge list — AQE handles skewed high-degree vertices
 (celebrity aliases) by splitting skewed partitions. For 10^12-scale graphs
 the same loop applies with edges bucketed by src; no driver-side state except
-the convergence counter.
+the convergence test.
 """
 
 from __future__ import annotations
@@ -21,10 +21,55 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+from pyspark.sql.window import Window
+
+from mitie_spark.operators.webgraph import _iterate
 
 # Edge lists up to this size are solved on the driver; larger ones run the
 # distributed loop. Tests set it to 0 to force the distributed loop.
 DRIVER_MAX_EDGES = 200_000
+
+
+def _probe(e: DataFrame):
+    """The size gate, one job: under the limit the rows ARE the edge list.
+    Above it, None, and ``e`` stays persisted for the loop to take over,
+    so the loop does not re-run the upstream (e.g. LSH blocking)."""
+    e.persist()
+    rows = e.limit(DRIVER_MAX_EDGES + 1).collect()
+    if len(rows) > DRIVER_MAX_EDGES:
+        return None
+    e.unpersist(blocking=False)
+    return rows
+
+
+def _driver_frame(e: DataFrame, rows, cols) -> DataFrame:
+    """Driver-side rows as a frame of ``e``'s vertex id type, through the
+    Arrow path: a plain list goes through the pickle serializer, whose
+    worker pool is separate from the warm Arrow one."""
+    import pandas as pd
+
+    id_type = e.schema["a"].dataType
+    schema = StructType([StructField(c, id_type) for c in cols])
+    pdf = pd.DataFrame(rows, columns=cols)
+    return e.sparkSession.createDataFrame(pdf, schema)
+
+
+def _relabel_loop(e: DataFrame, update, max_iter: int, col: str) -> DataFrame:
+    """The shuffle loop of both operators, on webgraph._iterate: every
+    vertex of the symmetric edge list ``und`` starts with its own id as
+    label ``col``, and ``update(und, labels)`` runs passes until no label
+    changes. A pass carries each vertex's previous label as ``old``, so
+    the stop rule scans one cut pass instead of joining it to the last."""
+    und = e.union(
+        e.select(F.col("b").alias("a"), F.col("a").alias("b"), *e.columns[2:])
+    )
+    vertices = und.select(F.col("a").alias("id")).distinct()
+    return _iterate(
+        [e, und], vertices.withColumn(col, F.col("id")),
+        lambda labels, _: update(und, labels), max_iter, 1,
+        lambda labels: labels.select("id", col),
+        until=lambda _, n: n.filter(F.col("old") != F.col(col)).isEmpty(),
+    )
 
 
 def connected_components(
@@ -40,22 +85,17 @@ def connected_components(
     small enough to broadcast is solved with driver-side union-find — the
     distributed loop costs O(log diameter) scheduled rounds, which dominates
     wall time for dedup-group-sized graphs — while anything above
-    ``DRIVER_MAX_EDGES`` edges runs the shuffle-join min-label loop. The
-    size probe is a single ``limit(DRIVER_MAX_EDGES + 1).collect()`` job:
-    if it comes back under the limit it IS the edge list, so the small path
-    costs one job total."""
+    ``DRIVER_MAX_EDGES`` edges runs the shuffle-join min-label loop on
+    webgraph._iterate, until no label changes. The small path costs one
+    job, the size probe."""
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
-        .persist()  # the probe below materializes it; without this the
-        # large path would re-execute the full upstream (e.g. an LSH
-        # blocking pipeline) for the checkpoint after already shuffling it
-        # for the probe
     )
-    probe = e.limit(DRIVER_MAX_EDGES + 1).collect()
+    probe = _probe(e)
 
-    if len(probe) <= DRIVER_MAX_EDGES:
+    if probe is not None:
         parent: dict = {}
 
         def find(x):
@@ -72,32 +112,9 @@ def connected_components(
             if ra != rb:
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        import pandas as pd
+        return _driver_frame(e, [(v, find(v)) for v in parent], ["id", "comp"])
 
-        rows = [(v, find(v)) for v in parent]
-        id_type = e.schema["a"].dataType
-        schema = StructType(
-            [StructField("id", id_type), StructField("comp", id_type)]
-        )
-        # hand the local result back through the Arrow path: a plain list
-        # goes through the pickle serializer, whose worker pool is separate
-        # from the (already warm) Arrow one — first use pays a full
-        # 32-worker spawn
-        pdf = pd.DataFrame(rows, columns=["id", "comp"])
-        e.unpersist(blocking=False)
-        return edges.sparkSession.createDataFrame(pdf, schema)
-
-    # materialize the edge list once — every iteration joins against it, and
-    # without this the full upstream DAG (e.g. an LSH blocking + verify
-    # pipeline) would re-execute per round
-    und = e.union(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
-    e.unpersist(blocking=False)
-    vertices = und.select(F.col("a").alias("id")).distinct()
-    labels = vertices.withColumn("comp", F.col("id"))
-
-    for _ in range(max_iter):
+    def step(und, labels):
         # candidate: min over neighbors' current labels
         nbr_min = (
             und.join(labels.withColumnRenamed("id", "b"), "b")
@@ -112,10 +129,11 @@ def connected_components(
                 F.least(
                     F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
                 ).alias("comp"),
+                F.col("comp").alias("old"),
             )
         )
         # pointer jumping: comp := comp(comp)
-        jumped = (
+        return (
             new_labels.alias("x")
             .join(
                 new_labels.select(
@@ -127,19 +145,11 @@ def connected_components(
             .select(
                 F.col("x.id").alias("id"),
                 F.coalesce(F.col("y.comp2"), F.col("x.comp")).alias("comp"),
+                F.col("x.old").alias("old"),
             )
         )
-        jumped = jumped.localCheckpoint(eager=True)  # truncate lineage per round
-        changed = (
-            labels.withColumnRenamed("comp", "old")
-            .join(jumped, "id")
-            .filter(F.col("old") != F.col("comp"))
-            .count()
-        )
-        labels = jumped
-        if changed == 0:
-            break
-    return labels.select("id", "comp")
+
+    return _relabel_loop(e, step, max_iter, "comp")
 
 
 def chinese_whispers(
@@ -155,7 +165,8 @@ def chinese_whispers(
     the reference's word-cluster pass (dlib chinese_whispers over the kNN
     graph, /root/reference/tools/wordrep/src/main.cpp:197-256 — there
     sequential with random visit order; here one shuffle-join + windowed
-    argmax per round, so it runs at any graph size).
+    argmax per round on webgraph._iterate, until no label changes, so it
+    runs at any graph size).
 
     edges(src, dst[, weight]) undirected → (id, cluster). Unlike
     ``connected_components`` this cuts weakly-connected regions into
@@ -165,8 +176,6 @@ def chinese_whispers(
     list solves on the driver with the identical synchronous update rule
     (the distributed loop costs several scheduled jobs per round, which
     dominates wall time for small graphs)."""
-    from pyspark.sql.window import Window
-
     w = F.col(weight) if weight else F.lit(1.0)
     e = (
         edges.select(
@@ -174,14 +183,9 @@ def chinese_whispers(
         )
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .filter(F.col("a") != F.col("b"))
-        .persist()  # probe materializes it; without this the large path
-        # would re-run the full upstream (e.g. blocking+verify) for the
-        # checkpoint — same reason connected_components persists
     )
-    probe = e.limit(DRIVER_MAX_EDGES + 1).collect()
-    if len(probe) <= DRIVER_MAX_EDGES:
-        import pandas as pd
-
+    probe = _probe(e)
+    if probe is not None:
         nbrs: dict = {}
         for row in probe:
             a, b, wt = row["a"], row["b"], float(row["w"])
@@ -206,25 +210,11 @@ def chinese_whispers(
             labels = new
             if changed == 0:
                 break
-        schema = StructType(
-            [
-                StructField("id", e.schema["a"].dataType),
-                StructField("cluster", e.schema["a"].dataType),
-            ]
-        )
-        pdf = pd.DataFrame(sorted(labels.items()), columns=["id", "cluster"])
-        e.unpersist(blocking=False)
-        return edges.sparkSession.createDataFrame(pdf, schema)
+        return _driver_frame(e, sorted(labels.items()), ["id", "cluster"])
 
-    und = e.union(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"), F.col("w"))
-    ).localCheckpoint(eager=True)
-    e.unpersist(blocking=False)  # the checkpoint is materialized; the
-    # cached edges are no longer referenced
-    vertices = und.select(F.col("a").alias("id")).distinct()
-    labels = vertices.withColumn("lbl", F.col("id"))
+    win = Window.partitionBy("a").orderBy(F.desc("wsum"), F.asc("lbl"))
 
-    for _ in range(max_iter):
+    def step(und, labels):
         scored = (
             und.join(
                 labels.select(F.col("id").alias("b"), "lbl"), "b"
@@ -232,26 +222,16 @@ def chinese_whispers(
             .groupBy("a", "lbl")
             .agg(F.sum("w").alias("wsum"))
         )
-        win = Window.partitionBy("a").orderBy(F.desc("wsum"), F.asc("lbl"))
         best = (
             scored.withColumn("rk", F.row_number().over(win))
             .filter(F.col("rk") == 1)
             .select(F.col("a").alias("id"), F.col("lbl").alias("new_lbl"))
         )
-        new_labels = (
-            labels.join(best, "id", "left")
-            .select(
-                "id", F.coalesce("new_lbl", "lbl").alias("lbl")
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(best, "id", "left").select(
+            "id",
+            F.coalesce("new_lbl", "lbl").alias("lbl"),
+            F.col("lbl").alias("old"),
         )
-        changed = (
-            labels.withColumnRenamed("lbl", "old")
-            .join(new_labels, "id")
-            .filter(F.col("old") != F.col("lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select("id", F.col("lbl").alias("cluster"))
+
+    labels = _relabel_loop(e, step, max_iter, "lbl")
+    return labels.withColumnRenamed("lbl", "cluster")

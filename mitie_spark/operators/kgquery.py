@@ -204,9 +204,9 @@ def transitive_closure(
     only the LAST round's new pairs against the edge set and anti-joins
     out pairs already known — cycles terminate naturally because a
     revisited pair produces no new rows, and the loop exits early on an
-    empty frontier (one driver-side isEmpty per pass; the operator runs
-    on webgraph._iterate's eager frontier lifecycle, with the per-pass
-    localCheckpoint doubling as the lineage cut). max_depth bounds the
+    empty frontier (one driver-side isEmpty per pass, the stop rule of
+    webgraph._iterate's eager lifecycle, whose per-pass localCheckpoint
+    doubles as the lineage cut). max_depth bounds the
     worst case; real predicate hierarchies (geo containment, org
     parentage) are single-digit deep.
 
@@ -241,5 +241,6 @@ def transitive_closure(
 
     return _iterate(
         [e], (None, e.withColumn("depth", F.lit(1))), step, max_depth - 1, 1,
-        lambda s: s[1] if s[0] is None else s[0].union(s[1]), frontier=True,
+        lambda s: s[1] if s[0] is None else s[0].union(s[1]),
+        until=lambda s, n: n[-1].isEmpty(),
     )

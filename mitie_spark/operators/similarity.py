@@ -34,6 +34,8 @@ from pyspark.sql.window import Window
 # the last HOF lambdas in a gated hot path).
 QUANT_SCALE = 1_000_000.0
 
+DRIVER_MAX_ROWS = 100_000  # cosine_near_duplicates' driver-path size gate
+
 
 def _cos_pair_udf(scale: float | None):
     """(vec, vec) → cosine, one NumPy batch per Arrow chunk.
@@ -300,7 +302,6 @@ def cosine_near_duplicates(
     vec_col: str = "embedding",
     seed: int = 11,
     center: "np.ndarray | None" = None,
-    driver_max_rows: int = 100_000,
 ) -> DataFrame:
     """Random-hyperplane LSH: sign-bit signatures → banded bucket grouping →
     exact cosine verify ≥ threshold, scored per bucket with a local NumPy
@@ -315,8 +316,8 @@ def cosine_near_duplicates(
     vectors stay near-identical after the shift, true near-dups still
     collide and the exact verify keeps the output sound.
 
-    ``driver_max_rows``: probe-gated driver path (the dedup_components
-    pattern). At or below this row count the whole computation — same
+    Probe-gated driver path (the dedup_components pattern): at or below
+    ``DRIVER_MAX_ROWS`` vectors the whole computation — same
     signatures, same per-bucket chunked matmul, bit-identical output —
     runs locally in one toPandas + NumPy pass: at small scale the Spark
     form's wall is pure fixed cost (two python-worker stages + a 160 MB
@@ -349,10 +350,10 @@ def cosine_near_duplicates(
         return _band_hi | vals  # (n, bands)
 
     nn = df.filter(F.col(vec_col).isNotNull())
-    n_rows = nn.limit(driver_max_rows + 1).count()
+    n_rows = nn.limit(DRIVER_MAX_ROWS + 1).count()
     if n_rows == 0:
         raise ValueError("cosine_near_duplicates: empty input (no vectors)")
-    if n_rows <= driver_max_rows:
+    if n_rows <= DRIVER_MAX_ROWS:
         return _near_dup_driver(
             nn, threshold, id_col, vec_col, seed, n_planes, _signatures
         )

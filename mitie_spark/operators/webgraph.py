@@ -265,25 +265,26 @@ def _nodes(edges: DataFrame) -> DataFrame:
     )
 
 
-def _iterate(invariants, state0, step, iters, cut_every, finish, frontier=False):
+def _iterate(invariants, state0, step, iters, cut_every, finish, until=None):
     """The one eager lifecycle of the iterative graph operators.
 
     Loop-invariant frames are persisted in order (later ones derive from
-    earlier ones) and the first is materialized ONCE up front: the loop
-    replays its inputs every pass, and at web scale that lineage is the
-    whole link-extraction job (unpersisted, the gated PageRank measured
-    4.5x slower). ``step(state, i)`` runs pass i on a frame or a tuple of
+    earlier ones; one persisted already, e.g. by a size probe, is taken
+    over) and the first is materialized ONCE up front: the loop replays
+    its inputs every pass, and at web scale that lineage is the whole
+    link-extraction job (unpersisted, the gated PageRank measured 4.5x
+    slower). ``step(state, i)`` runs pass i on a frame or a tuple of
     frames; a lineage cut localCheckpoints the state's last frame after
     every ``cut_every``-th pass (Catalyst analysis goes superlinear on
     nested join+agg chains), leaving the last pass to the result
-    checkpoint when cut_every > 1. ``frontier=True``: the last frame is a
-    frontier, the first one is cut too, and an empty one ends the loop
-    and is dropped. The result ``finish(state)`` is local-checkpointed so
-    the invariants can be unpersisted before returning, or on an error
-    (a lazy persist leaks executor storage per call) — except a frontier
-    result, a union of cut frontiers already. On a multi-node cluster
-    swap localCheckpoint for a reliable checkpoint dir if executor loss
-    mid-query matters."""
+    checkpoint when cut_every > 1. A stop rule ``until(state, nxt)`` goes
+    with cut_every=1: state0 and every pass are cut, and a pass it holds
+    for ends the loop and is dropped. The result ``finish(state)`` is
+    local-checkpointed (unless a stop rule built it on cut frames) so the
+    invariants can be unpersisted before returning, or on an error (a
+    lazy persist leaks executor storage per call). On a multi-node
+    cluster swap localCheckpoint for a reliable checkpoint dir if
+    executor loss mid-query matters."""
 
     def cut(state):
         if isinstance(state, tuple):
@@ -291,19 +292,20 @@ def _iterate(invariants, state0, step, iters, cut_every, finish, frontier=False)
         return state.localCheckpoint(eager=True)
 
     for f in invariants:
-        f.persist()
+        if not f.is_cached:
+            f.persist()
     try:
         invariants[0].count()
-        state = cut(state0) if frontier else state0
+        state = state0 if until is None else cut(state0)
         for i in range(iters):
             nxt = step(state, i)
             if (i + 1) % cut_every == 0 and (cut_every == 1 or i + 1 < iters):
                 nxt = cut(nxt)
-            if frontier and nxt[-1].isEmpty():
+            if until is not None and until(state, nxt):
                 break
             state = nxt
         out = finish(state)
-        return out if frontier else out.localCheckpoint(eager=True)
+        return out if until is not None else out.localCheckpoint(eager=True)
     finally:
         for f in reversed(invariants):
             f.unpersist()

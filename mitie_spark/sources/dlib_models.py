@@ -907,35 +907,15 @@ class DlibTextCategorizer:
             self.tags, self.tfe_fingerprint, df
         )
 
-    def _bow_pairs(self, tokens: list[str]) -> tuple[np.ndarray, np.ndarray]:
-        from mitie_spark.functions.hashing import make_feat, shash
-        from mitie_spark.functions.stemmer import stem_word
-
-        idxs = np.empty(2 * len(tokens), dtype=np.int64)
-        vals = np.empty(2 * len(tokens), dtype=np.float64)
-        for j, word in enumerate(tokens):
-            i, v = make_feat(shash(word, 0))
-            idxs[2 * j], vals[2 * j] = i, v
-            i, v = make_feat(shash(stem_word(word), 10))
-            idxs[2 * j + 1], vals[2 * j + 1] = i, v
-        # make_sparse_vector_inplace: sort by index, sum duplicates (values
-        # are ±1.5 so the merged sums are exact in binary)
-        order = np.argsort(idxs, kind="stable")
-        idxs, vals = idxs[order], vals[order]
-        uniq, starts = np.unique(idxs, return_index=True)
-        return uniq, np.add.reduceat(vals, starts)
-
     def __call__(self, tokens: list[str]) -> tuple[str, float]:
         from mitie_spark.functions.hashing import MAX_FEAT
+        from mitie_spark.models.text_categorizer import extract_combined_features
 
         tokens = list(tokens)
-        if not tokens:
-            # extract_BoW_features asserts words.size() > 0
-            # (text_feature_extraction.cpp:43); surface it as an error
-            # instead of the reference's debug-only abort
-            raise ValueError("text_categorizer requires a non-empty token list")
         ncols = self.W.shape[1]
-        idxs, vals = self._bow_pairs(tokens)
+        # raises ValueError on an empty list, where the reference's
+        # extract_BoW_features only asserts (text_feature_extraction.cpp:43)
+        idxs, vals = extract_combined_features(tokens)
         keep = idxs < ncols  # dlib sparse dot skips out-of-range indices
         # einsum (not BLAS matvec) so scores don't drift with batch shape
         scores = (

@@ -521,20 +521,24 @@ def test_kmv_ignores_null_values(spark):
     [
         "pagerank", "pagerank_integer", "hits_integer", "bfs_depths_integer",
         "label_propagation", "kcore_flags", "transitive_closure",
-        "triangle_clustering",
+        "triangle_clustering", "connected_components",
+        "connected_components_loop", "chinese_whispers",
+        "chinese_whispers_loop",
     ],
 )
-def test_graph_operator_leaves_no_cached_frame(spark, op):
+def test_graph_operator_leaves_no_cached_frame(spark, monkeypatch, op):
     """The iterative operators are eager (webgraph._iterate): every frame
     they persist is unpersisted before they return, so no lazily cached
     frame outlives the call. Checked as an unchanged cache-entry count,
     not as an empty cache manager: other tests in the session keep
     persisted shared frames. Each op gets its own graph: persisting a
     plan that is already cached adds no entry, so a leak would hide
-    behind an earlier op's leak of the same frame."""
+    behind an earlier op's leak of the same frame. A ``_loop`` op runs
+    with the size gate at 0, so its shuffle loop runs instead of the
+    driver path."""
     import random
 
-    from mitie_spark.operators import kgquery, webgraph as wg
+    from mitie_spark.operators import graph, kgquery, webgraph as wg
 
     rng = random.Random(op)
     pairs = {tuple(rng.sample(range(12), 2)) for _ in range(30)}
@@ -553,10 +557,14 @@ def test_graph_operator_leaves_no_cached_frame(spark, op):
             "p",
         ),
         "triangle_clustering": lambda: wg.triangle_clustering(e),
+        "connected_components": lambda: graph.connected_components(e),
+        "chinese_whispers": lambda: graph.chinese_whispers(e, weight="weight"),
     }
+    if op.endswith("_loop"):
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
     cache = spark._jsparkSession.sharedState().cacheManager()
     before = cache.numCachedEntries()
-    calls[op]()
+    calls[op.removesuffix("_loop")]()
     assert cache.numCachedEntries() == before
 
 

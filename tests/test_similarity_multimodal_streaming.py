@@ -90,22 +90,21 @@ def test_cosine_near_duplicates(spark, emb_df):
     assert pairs == expected
 
 
-def test_cosine_near_duplicates_driver_path_matches_distributed(spark, emb_df):
+def test_cosine_near_duplicates_driver_path_matches_distributed(
+    spark, emb_df, monkeypatch
+):
     """The probe-gated driver path and the distributed path must produce
     bit-identical (id_a, id_b, cos) sets — same planes, same blocking,
     same chunked-matmul arithmetic."""
-    from mitie_spark.operators.similarity import cosine_near_duplicates
+    from mitie_spark.operators import similarity
 
-    local = {
-        (r.id_a, r.id_b, r.cos)
-        for r in cosine_near_duplicates(emb_df, threshold=0.9).collect()
-    }
-    dist = {
-        (r.id_a, r.id_b, r.cos)
-        for r in cosine_near_duplicates(
-            emb_df, threshold=0.9, driver_max_rows=1
-        ).collect()
-    }
+    def pairs():
+        out = similarity.cosine_near_duplicates(emb_df, threshold=0.9)
+        return {(r.id_a, r.id_b, r.cos) for r in out.collect()}
+
+    local = pairs()
+    monkeypatch.setattr(similarity, "DRIVER_MAX_ROWS", 1)
+    dist = pairs()
     assert local == dist and len(local) >= 6
 
 
