@@ -24,18 +24,13 @@ import os
 
 from mitie_spark.functions.tokenizer import tokenize, tokenize_with_offsets  # noqa: F401
 from mitie_spark.models.train import ARTIFACT_DIR
+from mitie_spark.sources.dlib_models import is_npz
 
 
 def load_entire_file(filename: str) -> str:
     """mitie.py:200-207."""
     with open(filename, "rb") as f:
         return f.read().decode("utf-8", errors="replace")
-
-
-def _is_npz(filename: str) -> bool:
-    from mitie_spark.sources.dlib_models import is_npz
-
-    return is_npz(filename)
 
 
 class named_entity_extractor:
@@ -55,7 +50,7 @@ class named_entity_extractor:
             self._model = _model
             return
         path = filename or os.path.join(ARTIFACT_DIR, "ner_model.npz")
-        if _is_npz(path):
+        if is_npz(path):
             self._model = NerModel.load(path)
         else:
             # a reference user's dlib binary — either a full ner_model.dat
@@ -214,7 +209,7 @@ class binary_relation_detector:
             self._model = _model
         else:
             path = filename or os.path.join(ARTIFACT_DIR, "relation_model.npz")
-            if _is_npz(path):
+            if is_npz(path):
                 self._model = RelationModel.load(path)
             else:
                 # a reference user's rel_classifier_*.svm
@@ -315,7 +310,7 @@ class text_categorizer:
             self._model = _model
             return
         path = filename or os.path.join(ARTIFACT_DIR, "text_categorizer.npz")
-        if _is_npz(path):
+        if is_npz(path):
             self._model = TextCategorizer.load(path)
         else:
             # a reference user's dlib binary — full text_categorizer model
@@ -398,7 +393,7 @@ class total_word_feature_extractor:
     """mitie.py:844-905 — per-word feature vectors + fingerprint."""
 
     def __init__(self, filename: str):
-        if _is_npz(filename):
+        if is_npz(filename):
             from mitie_spark.models.word_vectors import WordVectors
 
             self._wv = WordVectors.load(filename)

@@ -94,11 +94,14 @@ def evaluate_ner_df(
     array<struct<start:long, end:long, label:string>>) → one row per label
     plus OVERALL, ordered by label.
 
-    The model loads once per worker (lru-cached loader); each Arrow batch
-    reduces to at most a few label rows, so the shuffle is label-sized."""
+    The model loads once per worker (the cached ``load_ner_model``); each
+    Arrow batch reduces to at most a few label rows, so the shuffle is
+    label-sized."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _cached_model(ner_path)
+        from mitie_spark.operators.extraction import load_ner_model
+
+        model = load_ner_model(ner_path)
         for pdf in batches:
             toks = [list(t) for t in pdf["tokens"]]
             truths = [
@@ -145,16 +148,6 @@ def evaluate_ner_df(
         for c in ("precision", "recall", "f1"):
             both = both.withColumn(c, F.round(c, round_to))
     return both.orderBy("label")
-
-
-from functools import lru_cache
-
-
-@lru_cache(maxsize=4)
-def _cached_model(path: str):
-    from mitie_spark.models.ner_model import NerModel
-
-    return NerModel.load(path)
 
 
 def conll_sentences_df(spark: SparkSession, path: str) -> DataFrame:

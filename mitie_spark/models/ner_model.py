@@ -667,27 +667,6 @@ class NerModel:
         return sentence_matrix(tokens, self.fs)
 
     # --- prediction (named_entity_extractor.cpp:132-174,178-225) ---
-    def segment(self, tokens: list[str], X: np.ndarray | None = None):
-        # DELIBERATE exception to the einsum-for-scoring rule: the
-        # emissions matmul is the extraction throughput hot spot, and
-        # einsum (no BLAS) would cost several× wall. BLAS kernels are
-        # batch-size-dependent in principle, so per-doc vs batched
-        # emissions could differ in the last ulp — the batched-equivalence
-        # test (test_batched_segmentation_matches_per_doc) regression-pins
-        # that segmentations agree; Viterbi decisions ride score margins
-        # far above one ulp on real weights
-        if X is None:
-            X = self.X(tokens)
-        em = window_matrix(X) @ self.W_seg.T.astype(np.float32)
-        path = viterbi(
-            em.astype(np.float64),
-            self.T_seg,
-            self._allowed,
-            self._start_ok,
-            self._end_ok,
-        )
-        return self._to_chunks(path), X
-
     def _score_feature_rows(self, rows):
         """Batched multiclass scoring (see ``score_feature_rows``)."""
         return score_feature_rows(
@@ -698,18 +677,25 @@ class NerModel:
         self, Xs: list[np.ndarray], max_padded_cells: int = 1_000_000
     ):
         """Batched segmentation: one stacked emissions matmul for the whole
-        batch + the vectorized Viterbi — value-identical to per-doc
-        ``segment`` (equivalence unit-tested).
+        batch + the vectorized Viterbi, which is value-identical to per-doc
+        ``viterbi`` (equivalence unit-tested).
 
         The Viterbi DP pads to the longest doc in its group, so docs are
         grouped by length with total padded cells (group_size × max_len)
         capped: one 30k-token outlier in a 2048-row Arrow batch would
         otherwise inflate the padded tensors to B×Lmax ≈ gigabytes. With
         the cap, a skewed doc lands in its own small group and costs only
-        itself — preserving the 'a 100×-long document only costs its own
-        batch' property of the per-doc path."""
+        itself, as if it had been decoded alone."""
         if not Xs:
             return []
+        # DELIBERATE exception to the einsum-for-scoring rule: the
+        # emissions matmul is the extraction throughput hot spot, and
+        # einsum (no BLAS) would cost several× wall. BLAS kernels are
+        # batch-size-dependent in principle, so a doc decoded alone vs in
+        # a batch could see emissions differing in the last ulp — the
+        # batched-equivalence test (test_batched_segmentation_matches_per_doc)
+        # regression-pins that segmentations agree; Viterbi decisions ride
+        # score margins far above one ulp on real weights
         Ws = [window_matrix(X) for X in Xs]
         allW = np.concatenate(Ws)
         allE = allW @ self.W_seg.T.astype(np.float32)
@@ -774,13 +760,20 @@ class NerModel:
             out.append(doc_out)
         return out
 
+    def extract_entities_batch(self, tok_lists, Xs):
+        """The one NER decode: ``Xs[i]`` is ``self.X(tok_lists[i])`` (the
+        caller computes it, since relation scoring reuses it) → per-doc
+        [(start, end, tag, score)], chunks classified NOT_ENTITY dropped
+        (named_entity_extractor.cpp:147-174)."""
+        chunk_lists = self.segment_batch(Xs)
+        return self.classify_chunks_batch(
+            list(zip(tok_lists, Xs, chunk_lists))
+        )
+
     def extract_entities(self, tokens: list[str]):
-        """→ [(start, end, tag, score)] — chunks classified NOT_ENTITY are
-        dropped (named_entity_extractor.cpp:147-174)."""
-        if not tokens:
-            return []
-        chunks, X = self.segment(tokens)
-        return self.classify_chunks_batch([(tokens, X, chunks)])[0]
+        """One document's entities: ``extract_entities_batch`` on a batch
+        of one."""
+        return self.extract_entities_batch([tokens], [self.X(tokens)])[0]
 
     # --- serialization ---
     def save(self, path: str) -> None:

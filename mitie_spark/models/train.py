@@ -121,17 +121,18 @@ def build_training_data(n_docs: int, seed: int):
 
 def evaluate(ner: NerModel, rel: RelationModel, n_docs: int, seed: int):
     """End-to-end P/R on held-out docs: mentions (span+tag exact) and triples
-    (the extraction operator's adjacent-pair candidates)."""
-    from mitie_spark.operators.extraction import _candidate_pairs
+    (the extraction operator's adjacent-pair candidates), each document
+    extracted by ``extract_tokens_batch`` as a batch of one."""
+    from mitie_spark.operators.extraction import extract_tokens_batch
 
     rng = random.Random(f"eval:{seed}")
     tp_m = fp_m = fn_m = 0
     tp_r = fp_r = fn_r = 0
     for _ in range(n_docs):
         toks, ments, rels = make_doc(rng)
+        _, pred_m, pred_trips = extract_tokens_batch([toks], ner, rel)[0]
         truth_m = {(s, e, tag) for s, e, tag, _ in ments}
-        pred_m = ner.extract_entities(toks)
-        pred_set = {(s, e, tag) for s, e, tag, _ in pred_m}
+        pred_set = {(m["start"], m["end"], m["tag"]) for m in pred_m}
         tp_m += len(truth_m & pred_set)
         fp_m += len(pred_set - truth_m)
         fn_m += len(truth_m - pred_set)
@@ -139,17 +140,7 @@ def evaluate(ner: NerModel, rel: RelationModel, n_docs: int, seed: int):
         truth_t = {
             (ments[si][3], p, ments[oi][3]) for si, p, oi in rels
         }
-        X = ner.X(toks)
-        pairs = _candidate_pairs(pred_m)
-        mean_cache: dict = {}
-        hits = rel.detect_batch(
-            [(toks, X, arg1, arg2, mean_cache) for arg1, arg2 in pairs]
-        )
-        pred_t = {
-            (" ".join(toks[s1:e1]), p, " ".join(toks[s2:e2]))
-            for ((s1, e1), (s2, e2)), pair_hits in zip(pairs, hits)
-            for p, _ in pair_hits
-        }
+        pred_t = {(t["subj"], t["pred"], t["obj"]) for t in pred_trips}
         tp_r += len(truth_t & pred_t)
         fp_r += len(pred_t - truth_t)
         fn_r += len(truth_t - pred_t)

@@ -1,12 +1,13 @@
 """Fused KG-extraction operator: pages → (mentions, triples) per document.
 
 One narrow mapInPandas stage covers the whole per-document dataflow (EP2/EP3,
-SURVEY.md §3): html→text (when text is absent) → CoNLL tokenize → NER
-(Viterbi BILOU + chunk classify) → adjacent-pair candidates both orders →
-relation scoring → accepted triples. Fusing matters at 100 TB: token arrays
-and feature matrices never hit a shuffle — the only shuffles in the pipeline
-are the *aggregations* downstream (triple counts, linking, dedup), which
-operate on small projected rows.
+SURVEY.md §3): CoNLL tokenize → NER (Viterbi BILOU + chunk classify) →
+adjacent-pair candidates both orders → relation scoring → accepted triples.
+The stage reads ``text_col`` only and never converts HTML; the pipeline's
+stage 1 (``verify_text``) checks html→text separately. Fusing matters at
+100 TB: token arrays and feature matrices never hit a shuffle — the only
+shuffles in the pipeline are the *aggregations* downstream (triple counts,
+linking, dedup), which operate on small projected rows.
 
 Skew handling (SURVEY.md §4a): Arrow batches are capped by
 spark.sql.execution.arrow.maxRecordsPerBatch, and a 100×-long document only
@@ -14,8 +15,9 @@ costs its own batch — no key-based shuffle happens here, so no salting is
 needed until the aggregate stages.
 
 Models are loaded once per python worker process from an .npz path (shipped
-via spark-submit --files on a real cluster) and cached at module level —
-equivalent to a broadcast of the weight matrices.
+via spark-submit --files on a real cluster) and cached at module level
+(``load_ner_model``, ``_load_models``) — equivalent to a broadcast of the
+weight matrices.
 """
 
 from __future__ import annotations
@@ -41,21 +43,18 @@ KG_SCHEMA = (
 )
 
 
-def _is_npz(path: str) -> bool:
-    from mitie_spark.sources.dlib_models import is_npz
-
-    return is_npz(path)
-
-
+@lru_cache(maxsize=4)
 def load_ner_model(path: str):
-    """Shared NER model loader: .npz artifact or dlib ``ner_model.dat``
-    (the latter through the per-host sidecar cache). Used by the extraction
-    UDF and the streaming/CLI annotators."""
+    """The one NER model loader: .npz artifact or dlib ``ner_model.dat``
+    (the latter through the per-host sidecar cache), cached per python
+    worker process. Used by the extraction UDF, the streaming/CLI
+    annotators and the CoNLL evaluation."""
     from mitie_spark.models.artifact_path import resolve_artifact
     from mitie_spark.models.ner_model import NerModel
+    from mitie_spark.sources.dlib_models import is_npz
 
     path = resolve_artifact(path)  # zip-launch / --files fallback chain
-    if _is_npz(path):
+    if is_npz(path):
         return NerModel.load(path)
     return _ner_from_dlib_cached(path)
 
@@ -64,7 +63,7 @@ def _ner_from_dlib_cached(ner_path: str):
     """Decode a dlib ``ner_model.dat`` once PER HOST, not per worker
     process: the variable-length dlib stream costs seconds to parse for a
     real 200k-word extractor, and every Python worker would pay it inside
-    its own ``_load_models`` lru_cache. The decoded model is written as an
+    its own ``load_ner_model`` lru_cache. The decoded model is written as an
     .npz sidecar in the temp dir keyed by (path, size, mtime) — atomic
     tmp+rename, so concurrent workers race benignly — and later workers
     (and later jobs on the same host) load the fast format."""
@@ -108,11 +107,12 @@ def _load_models(ner_path: str, rel_path: str):
     import os
 
     from mitie_spark.models.relation_model import RelationModel
+    from mitie_spark.sources.dlib_models import is_npz
 
     ner = load_ner_model(ner_path)
 
     if "," not in rel_path and not os.path.exists(rel_path):
-        # zip-launch / --files fallback (the _is_npz sniff below opens it)
+        # zip-launch / --files fallback (the is_npz sniff below opens it)
         from mitie_spark.models.artifact_path import resolve_artifact
 
         rel_path = resolve_artifact(rel_path)
@@ -121,7 +121,7 @@ def _load_models(ner_path: str, rel_path: str):
         svm_paths = sorted(glob.glob(os.path.join(rel_path, "*.svm")))
     elif "," in rel_path:
         svm_paths = rel_path.split(",")
-    elif not _is_npz(rel_path):
+    elif not is_npz(rel_path):
         svm_paths = [rel_path]
     if svm_paths is not None:
         from mitie_spark.models.relation_ref import DlibRelationModel
@@ -181,22 +181,24 @@ def _triple_row(tokens, arg1, arg2, pred, score):
 
 
 def extract_documents_batch(texts, ner, rel):
-    """Arrow-batch extraction, batched at every model stage: segmentation
-    (one stacked emissions matmul + vectorized Viterbi), chunk
-    classification (every chunk in the batch scored in one segment-reduce
-    + matmul), and relation detection (every candidate pair
-    in the batch scored in one stacked call). A document's result does not
-    depend on its batch: each one equals that document extracted as a
-    batch of one (unit-tested), because every stage scores through the
-    same summation-order-fixed kernels."""
+    """Arrow-batch extraction over raw texts: CoNLL-tokenize, then
+    ``extract_tokens_batch``."""
     from mitie_spark.functions.tokenizer import tokenize
 
-    tok_lists = [tokenize(t or "") for t in texts]
+    return extract_tokens_batch([tokenize(t or "") for t in texts], ner, rel)
+
+
+def extract_tokens_batch(tok_lists, ner, rel):
+    """Extraction over tokenized documents, batched at every model stage:
+    NER decode (``NerModel.extract_entities_batch``: one stacked emissions
+    matmul + vectorized Viterbi, then every chunk in the batch scored in
+    one segment-reduce + matmul), and relation detection (every candidate
+    pair in the batch scored in one stacked call). A document's result
+    does not depend on its batch: each one equals that document extracted
+    as a batch of one (unit-tested), because every stage scores through
+    the same summation-order-fixed kernels."""
     Xs = [ner.X(toks) for toks in tok_lists]
-    chunk_lists = ner.segment_batch(Xs)
-    ents_lists = ner.classify_chunks_batch(
-        list(zip(tok_lists, Xs, chunk_lists))
-    )
+    ents_lists = ner.extract_entities_batch(tok_lists, Xs)
     results = [
         [len(toks), _mention_rows(toks, ents), []]
         for toks, ents in zip(tok_lists, ents_lists)

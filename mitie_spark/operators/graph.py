@@ -165,8 +165,13 @@ def chinese_whispers(
     the reference's word-cluster pass (dlib chinese_whispers over the kNN
     graph, /root/reference/tools/wordrep/src/main.cpp:197-256 — there
     sequential with random visit order; here one shuffle-join + windowed
-    argmax per round on webgraph._iterate, until no label changes, so it
-    runs at any graph size).
+    argmax per round on webgraph._iterate, so it runs at any graph size).
+    It stops at a fixpoint (no label changes) or after ``max_iter``
+    rounds, whichever comes first. Synchronous updates can oscillate
+    instead of converging — on the seeded 150-edge weighted graph of
+    test_chinese_whispers_shuffle_loop_matches_driver_loop every call
+    runs all 20 rounds — and then the result is round ``max_iter``'s
+    labelling, not a fixpoint.
 
     edges(src, dst[, weight]) undirected → (id, cluster). Unlike
     ``connected_components`` this cuts weakly-connected regions into

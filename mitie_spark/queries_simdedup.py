@@ -873,7 +873,9 @@ def surface_whisper_clusters(spark, sf_dir):
     the synchronous distributed form of the reference's word-cluster pass
     (wordrep kNN + dlib chinese_whispers, main.cpp:197-256). Unlike
     connected components this cuts weak bridges; rows-only (the label
-    dynamics are iterative, not SQL-expressible)."""
+    dynamics are iterative, not SQL-expressible). The synchronous update
+    may oscillate rather than reach a fixpoint; the rows are then the
+    labelling after chinese_whispers' ``max_iter`` (20) rounds."""
     from mitie_spark.operators.graph import chinese_whispers
 
     pairs = _verified_minhash_pairs(spark, sf_dir)

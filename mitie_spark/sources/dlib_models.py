@@ -1178,37 +1178,6 @@ def ner_model_to_dlib(model) -> dict:
     }
 
 
-def relation_model_from_dlib(paths: list[str], expected_fingerprint: int | None = None):
-    """Load MITIE ``rel_classifier_*.svm`` detector files into one
-    RelationModel over the REFERENCE feature space. Note the reference's
-    relation features hash into 100k dims + 2·271 dense; this engine's
-    relation pipeline uses its own hashed space, so dlib-loaded detectors
-    are exposed for scoring pre-extracted reference-style vectors, not
-    plugged into extract_kg."""
-    dets = [read_binary_relation_detector(p) for p in paths]
-    for det in dets:
-        if (
-            expected_fingerprint is not None
-            and det["fingerprint"] != expected_fingerprint
-        ):
-            raise ValueError(
-                f"detector {det['relation_type']} was trained against a "
-                "different total_word_feature_extractor "
-                "(binary_relation_detector.h:70-77 guard)"
-            )
-    n_dims = 1 + max(
-        (i for det in dets for sv in det["basis_vectors"] for i, _ in sv),
-        default=0,
-    )
-    rows = [relation_weights_from_detector(det, n_dims) for det in dets]
-    return {
-        "preds": [det["relation_type"] for det in dets],
-        "W": np.stack([r[0] for r in rows]),
-        "b": np.array([r[1] for r in rows]),
-        "fingerprints": [det["fingerprint"] for det in dets],
-    }
-
-
 def main():
     import argparse
 

@@ -49,8 +49,9 @@ def format_markup(tokens: list[str], entities: list[tuple[int, int, str]]) -> st
 def annotate_lines(lines: DataFrame, ner_path: str, text_col: str = "value") -> DataFrame:
     """lines(value) → (line, annotated) using the broadcast NER model; works
     on both batch and streaming DataFrames (stateless mapInPandas).
-    Segmentation runs batched across each micro-batch's lines
-    (NerModel.segment_batch) — same values as per-line decode."""
+    Each Arrow batch's lines are decoded in one
+    ``NerModel.extract_entities_batch`` call — same values as per-line
+    decode."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from mitie_spark.functions.tokenizer import tokenize
@@ -59,10 +60,8 @@ def annotate_lines(lines: DataFrame, ner_path: str, text_col: str = "value") -> 
         ner = load_ner_model(ner_path)
         for pdf in batches:
             toks_list = [tokenize(l or "") for l in pdf[text_col]]
-            Xs = [ner.X(t) for t in toks_list]
-            chunk_lists = ner.segment_batch(Xs)
-            ents_lists = ner.classify_chunks_batch(
-                list(zip(toks_list, Xs, chunk_lists))
+            ents_lists = ner.extract_entities_batch(
+                toks_list, [ner.X(t) for t in toks_list]
             )
             out = [
                 format_markup(toks, [(s, e, t) for s, e, t, _ in ents])

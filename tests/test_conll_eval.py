@@ -76,7 +76,7 @@ def test_evaluate_ner_df_on_toy_conll(spark, tmp_path):
     import random
 
     from mitie_spark.corpus import make_sentence
-    from mitie_spark.models.conll_eval import _cached_model
+    from mitie_spark.operators.extraction import load_ner_model
     from mitie_spark.models.train import ARTIFACT_DIR
 
     rng = random.Random("conll-eval")
@@ -101,7 +101,7 @@ def test_evaluate_ner_df_on_toy_conll(spark, tmp_path):
 
     expected = {
         r["label"]: r
-        for r in evaluate_ner(_cached_model(ner_path), sents, truths)
+        for r in evaluate_ner(load_ner_model(ner_path), sents, truths)
     }
     assert set(got) == set(expected)
     for lab, exp in expected.items():

@@ -19,7 +19,6 @@ from mitie_spark.sources.dlib_models import (
     read_binary_relation_detector,
     read_named_entity_extractor,
     read_total_word_feature_extractor,
-    relation_model_from_dlib,
     relation_weights_from_detector,
     write_binary_relation_detector,
     write_named_entity_extractor,
@@ -242,21 +241,27 @@ def test_bio_segmenter_trains_and_decodes():
     W, T = train_segmenter(sents, epochs=8, use_bio=True)
     model = NerModel(W_seg=W, T_seg=T, use_bio=True)
     for toks, chunks in sents[:3]:
-        got, _ = model.segment(toks)
-        assert got == chunks
+        assert model.segment_batch([model.X(toks)]) == [chunks]
+
+
+# a toy rel_classifier_*.svm detector, trained against word-feature
+# extractor fingerprint 987654321
+TOY_DETECTOR = {
+    "relation_type": "location.location.contains",
+    "fingerprint": 987654321,
+    "alpha": np.array([2.0, -0.5]),
+    "b": 1.25,
+    "basis_vectors": [
+        [(3, 1.5), (10, -1.5)],
+        [(3, 0.5), (99, 2.0)],
+    ],
+}
 
 
 def test_binary_relation_detector_roundtrip(tmp_path):
-    det = {
-        "relation_type": "location.location.contains",
-        "fingerprint": 987654321,
-        "alpha": np.array([2.0, -0.5]),
-        "b": 1.25,
-        "basis_vectors": [
-            [(3, 1.5), (10, -1.5)],
-            [(3, 0.5), (99, 2.0)],
-        ],
-    }
+    from mitie_spark.models.relation_ref import DlibRelationModel
+
+    det = TOY_DETECTOR
     p = str(tmp_path / "rel.svm")
     write_binary_relation_detector(p, det)
     got = read_binary_relation_detector(p)
@@ -271,10 +276,21 @@ def test_binary_relation_detector_roundtrip(tmp_path):
     assert w[3] == 2.0 * 1.5 + (-0.5) * 0.5
     assert w[10] == 2.0 * -1.5
     assert w[99] == -0.5 * 2.0
-    rm = relation_model_from_dlib([p], expected_fingerprint=987654321)
-    assert rm["preds"] == ["location.location.contains"]
-    with pytest.raises(ValueError):
-        relation_model_from_dlib([p], expected_fingerprint=1)
+    rm = DlibRelationModel.from_svm_files([p], dims=0)
+    assert rm.preds == ["location.location.contains"]
+
+
+def test_load_models_rejects_relation_fingerprint_mismatch(tmp_path):
+    """_load_models' predict-time guard (binary_relation_detector.h:70-77):
+    a .svm detector trained against another word-feature extractor than
+    the NER model's is refused before any extraction runs."""
+    from mitie_spark.models.train import ARTIFACT_DIR
+    from mitie_spark.operators.extraction import _load_models
+
+    p = str(tmp_path / "rel.svm")
+    write_binary_relation_detector(p, TOY_DETECTOR)
+    with pytest.raises(ValueError, match="fingerprint mismatch"):
+        _load_models(os.path.join(ARTIFACT_DIR, "ner_model.npz"), p)
 
 
 def test_high_bit_fingerprint_save_roundtrip(tmp_path):

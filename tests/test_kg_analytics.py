@@ -636,3 +636,39 @@ def test_query_modules_hold_no_module_level_cache_dict():
                     if name not in registry:
                         found.append(f"{os.path.basename(path)}:{name}")
     assert not found, found
+
+
+def test_one_ner_decode_path_and_one_model_format_rule():
+    """NER decoding has one entry point, NerModel.extract_entities_batch:
+    no module under mitie_spark/ but models/ner_model.py calls its two
+    stages (.segment_batch / .classify_chunks_batch) directly. The
+    .npz-vs-dlib format decision has one home, sources/dlib_models.is_npz:
+    no other module defines an is_npz / _is_npz of its own."""
+    import ast
+    import glob
+    import os
+
+    import mitie_spark
+
+    pkg = os.path.dirname(mitie_spark.__file__)
+    stages = {"segment_batch", "classify_chunks_batch"}
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (
+                rel != os.path.join("models", "ner_model.py")
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in stages
+            ):
+                found.append(f"{rel}:{node.lineno} calls .{node.func.attr}")
+            if (
+                rel != os.path.join("sources", "dlib_models.py")
+                and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and node.name in ("is_npz", "_is_npz")
+            ):
+                found.append(f"{rel}:{node.lineno} defines {node.name}")
+    assert not found, found

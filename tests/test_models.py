@@ -63,8 +63,8 @@ def test_batched_segmentation_matches_per_doc():
     """extract_documents_batch is batch-invariant: on real corpus docs
     (incl. empty and 1-token texts) each document's result equals that
     document extracted as a batch of one, and its mentions equal the
-    per-document ``extract_entities`` (per-doc segment + batch-of-one
-    chunk classification)."""
+    per-document ``extract_entities`` (``extract_entities_batch`` on a
+    batch of one)."""
     import os
 
     import pyarrow.parquet as pq
