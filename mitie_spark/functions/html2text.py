@@ -75,7 +75,8 @@ def html_to_text(html_bytes: bytes | str) -> str:
 
 
 def register_udf():
-    """mapInPandas-compatible vectorized wrapper (Arrow batches)."""
+    """``html_to_text`` as a scalar ``pandas_udf`` over Arrow batches;
+    a NULL html gives NULL."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")

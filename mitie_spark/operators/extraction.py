@@ -4,7 +4,7 @@ One narrow mapInPandas stage covers the whole per-document dataflow (EP2/EP3,
 SURVEY.md §3): CoNLL tokenize → NER (Viterbi BILOU + chunk classify) →
 adjacent-pair candidates both orders → relation scoring → accepted triples.
 The stage reads ``text_col`` only and never converts HTML; the pipeline's
-stage 1 (``verify_text``) checks html→text separately. Fusing matters at
+``kg`` stage checks html→text in the scan that feeds it. Fusing matters at
 100 TB: token arrays and feature matrices never hit a shuffle — the only
 shuffles in the pipeline are the *aggregations* downstream (triple counts,
 linking, dedup), which operate on small projected rows.

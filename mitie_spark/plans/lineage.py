@@ -33,21 +33,22 @@ def _lineage_path(out_path: str) -> str:
     return out_path.rstrip("/") + ".lineage.json"
 
 
-def stage_is_complete(out_path: str, conf_hash: str, spark=None) -> bool:
-    lp = _lineage_path(out_path)
-    if not os.path.exists(lp):
-        return False
-    try:
-        with open(lp) as f:
+def stage_is_complete(out_path: str, conf_hash: str, spark=None) -> dict | None:
+    """The stage's lineage record if its output is complete under
+    ``conf_hash``, else None."""
+    try:  # a missing record is an OSError too
+        with open(_lineage_path(out_path)) as f:
             rec = json.load(f)
     except (json.JSONDecodeError, OSError):
-        return False
+        return None
     if rec.get("config_hash") != conf_hash:
-        return False
+        return None
     if rec.get("kind") == "iceberg":
         # completeness = the snapshot table exists (writes are atomic)
-        return spark is not None and spark.catalog.tableExists(rec["location"])
-    return os.path.exists(os.path.join(out_path, "_SUCCESS"))
+        done = spark is not None and spark.catalog.tableExists(rec["location"])
+    else:
+        done = os.path.exists(os.path.join(out_path, "_SUCCESS"))
+    return rec if done else None
 
 
 def write_stage(
@@ -64,7 +65,7 @@ def write_stage(
     out_path) + lineage record. Returns the record.
 
     ``started`` is the ``time.time()`` taken before the stage built `df`:
-    an eager build (stage 7's PageRank iterations) runs before this call,
+    an eager build (entity_rank's PageRank iterations) runs before this call,
     and the record's ``wall_sec`` must cover it."""
     kind, location = write_table(
         df, out_path, stage, partition_by=partition_by, catalog=catalog
@@ -96,10 +97,3 @@ def write_stage(
         json.dump(rec, f, indent=1)
     return rec
 
-
-def read_lineage(out_path: str) -> dict | None:
-    lp = _lineage_path(out_path)
-    if os.path.exists(lp):
-        with open(lp) as f:
-            return json.load(f)
-    return None

@@ -3,20 +3,21 @@
 Stages (north rule order; each materializes through
 sources/catalog.write_table — a partitioned Iceberg table when a catalog is
 configured at submit time, a parquet directory otherwise — with lineage,
-and is skipped on re-run if complete — see plans/lineage.py):
+and is skipped on re-run if complete — see plans/lineage.py). A table is
+written only when a consumer reads it:
 
-1. verify_text — recompute html→text distributively and count byte
-   mismatches vs the stored text (input_hint invariant; must be 0);
-2. kg — fused extraction (tokenize → NER → relation scoring), one narrow
-   mapInPandas stage, models loaded once per worker;
-3. mentions / triples_raw — exploded mention + triple tables
-   (triples partitioned by pred, the query-side partition key);
-4. linked — mentions joined to the broadcast alias dictionary (exact) with
-   MinHash-LSH fuzzy fallback;
-5. components — connected components over the alias graph → canonical
+1. kg — fused extraction (tokenize → NER → relation scoring), one narrow
+   mapInPandas stage, models loaded once per worker; its scan first checks
+   the html→text invariant on every page (stored text byte-identical to
+   html_to_text(html)); the first bad url fails the stage;
+2. triples_raw — exploded triples, partitioned by pred (the query-side key);
+3. linked — the mentions projection of kg (one row per mention) joined to
+   the broadcast alias dictionary (exact) with MinHash-LSH fuzzy fallback;
+4. components — connected components over the alias graph → canonical
    component per canonical_id;
-6. triples — canonical (subj_id, pred, obj_id) edges with counts
-   (skew-resistant two-phase aggregate), partitioned by pred.
+5. triples — canonical (subj_id, pred, obj_id) edges with counts
+   (skew-resistant two-phase aggregate), partitioned by pred;
+6. entity_rank — PageRank salience over the canonical triple graph.
 
 Cluster launch (real deployment; add the iceberg-spark-runtime package and
 a spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog conf to
@@ -45,7 +46,6 @@ from pyspark.sql import functions as F
 from mitie_spark.models.train import ARTIFACT_DIR
 from mitie_spark.plans.lineage import (
     config_hash,
-    read_lineage,
     stage_is_complete,
     write_stage,
 )
@@ -79,106 +79,97 @@ def run_pipeline(
     report: dict[str, dict] = {}
     catalog = iceberg_catalog(spark)  # None here → partitioned parquet
 
-    def stage(name: str, conf: dict, build, partition_by=None, input_rows=None):
+    def stage(name: str, conf: dict, build, partition_by=None, inputs=(),
+              input_rows=None):
+        """``inputs``: the upstream stages ``build`` reads. Their config
+        hashes and row counts chain into this stage's hash, and the first
+        one's rows are its ``input_rows`` (kg has none: it passes n_pages)."""
         out = os.path.join(out_dir, name)
-        ch = config_hash(conf)
-        if not force and stage_is_complete(out, ch, spark=spark):
-            rec = read_lineage(out)
-            rec["skipped"] = True
-            report[name] = rec
-        else:
+        ups = [report[i] for i in inputs]
+        conf = {**conf, "from": [[u["config_hash"], u["output_rows"]] for u in ups]}
+        rec = None if force else stage_is_complete(out, config_hash(conf), spark=spark)
+        skipped = rec is not None
+        if not skipped:
             t0 = time.time()
-            df = build()
             rec = write_stage(
-                df, out, name, conf, t0, partition_by=partition_by,
-                input_rows=input_rows, catalog=catalog,
+                build(), out, name, conf, t0, partition_by=partition_by,
+                input_rows=ups[0]["output_rows"] if ups else input_rows,
+                catalog=catalog,
             )
-            rec["skipped"] = False
-            report[name] = rec
-        return read_table(
-            spark, rec.get("kind", "parquet"), rec.get("location", out)
-        )
+        report[name] = {**rec, "skipped": skipped}
+        return read_table(spark, rec["kind"], rec["location"])
 
     pages = spark.read.parquet(pages_path)
     n_pages = pages.count()
 
-    # 1. byte-identical text invariant (html→text recompute)
+    # 1. fused extraction behind the html→text invariant, checked on every
+    # page, lang-filtered ones included, in the scan that feeds it. The
+    # lang test and the check are one CASE, so the optimizer can neither
+    # push the lang test below the check nor split them. A bad page fails
+    # the write, so kg is not recorded complete and a fixed input re-runs.
     h2t = register_udf()
-    verify = stage(
-        "verify_text",
-        {"extractor_version": 1, "pages": pages_path},
-        lambda: pages.select(
-            "url",
-            # null-safe: a NULL html or text must count as a violation, not
-            # silently fall into a NULL comparison bucket
-            (
-                F.col("html").isNotNull()
-                & F.col("text").isNotNull()
-                & (h2t(F.col("html")) == F.col("text"))
-            ).alias("text_ok"),
-        )
-        .groupBy("text_ok")
-        .agg(F.count("*").alias("n")),
-        input_rows=n_pages,
+    # null-safe: a NULL html or text must count as a violation, not
+    # silently fall into a NULL comparison
+    ok = (
+        F.col("html").isNotNull()
+        & F.col("text").isNotNull()
+        & (h2t(F.col("html")) == F.col("text"))
     )
-    counts = {r.text_ok: r.n for r in verify.collect()}
-    bad = sum(n for ok, n in counts.items() if ok is not True)
-    if bad:
-        raise RuntimeError(f"html→text invariant violated for {bad} pages")
-
-    # 2. fused extraction — tasks sized by compute, not input bytes: the
-    # corpus compresses ~10x, so byte-based parquet splits chronically
-    # under-partition this CPU-bound stage (measured 7 tasks on 32 cores =
-    # 4x wall; same sizing rule as queries_kg._kg and bench_scaling)
+    keep = (  # extract_kg's lang rule, applied here so every page is checked
+        F.col("lang") == lang
+        if lang is not None and "lang" in pages.columns
+        else F.lit(True)
+    )
+    bad = F.format_string("html→text invariant violated: %s", "url")
+    checked = pages.filter(F.when(ok, keep).otherwise(F.raise_error(bad)))
+    # tasks sized by compute, not input bytes: the corpus compresses ~10x,
+    # so byte-based parquet splits chronically under-partition this
+    # CPU-bound stage (measured 7 tasks on 32 cores = 4x wall; same sizing
+    # rule as queries_kg._kg and bench_scaling)
     # (parallelism stays out of the config hash: rows are invariant to the
     # task layout, so resuming under a different --master must not
     # invalidate a completed extraction)
     kg_par = spark.sparkContext.defaultParallelism * 4
     kg = stage(
         "kg",
-        {"ner": ner_path, "rel": rel_path, "lang": lang, "pages": pages_path},
+        {"extractor_version": 1, "ner": ner_path, "rel": rel_path,
+         "lang": lang, "pages": pages_path},
         lambda: extract_kg(
-            pages, ner_path, rel_path, lang_filter=lang, parallelism=kg_par
+            checked, ner_path, rel_path, lang_filter=None, parallelism=kg_par
         ),
         input_rows=n_pages,
     )
 
-    # 3. exploded tables
-    mentions = stage(
-        "mentions",
-        {"from": report["kg"]["config_hash"], "rows": report["kg"]["output_rows"]},
-        lambda: mentions_table(kg),
-        input_rows=report["kg"]["output_rows"],
-    )
+    # 2. exploded triples
     triples_raw = stage(
         "triples_raw",
-        {"from": report["kg"]["config_hash"], "rows": report["kg"]["output_rows"]},
+        {},
         lambda: triples_table(kg),
         partition_by=PRED_PARTITIONS,
-        input_rows=report["kg"]["output_rows"],
+        inputs=("kg",),
     )
 
-    # 4. linking
+    # 3. linking, over the one-row-per-mention projection of kg
     alias = spark.read.parquet(alias_path)
+    mentions = mentions_table(kg)
     linked = stage(
         "linked",
-        {"alias": alias_path, "fuzzy": True,
-         "from": report["mentions"]["config_hash"]},
+        {"alias": alias_path, "fuzzy": True},
         lambda: link_mentions(
             mentions.select("url", "surface", "tag", "token_start", "token_end"),
             alias,
         ),
-        input_rows=report["mentions"]["output_rows"],
+        inputs=("kg",),
     )
 
-    # 5. canonical components over the alias graph
+    # 4. canonical components over the alias graph
     comps = stage(
         "components",
         {"alias": alias_path},
         lambda: canonical_components(alias),
     )
 
-    # 6. canonical triple edges with counts (two-phase agg; partitioned by pred)
+    # 5. canonical triple edges with counts (two-phase agg; partitioned by pred)
     def build_edges():
         # deterministic surface → entity map: min canonical_id per surface
         # (triples carry surfaces only, so a surface seen under two tags
@@ -189,29 +180,22 @@ def run_pipeline(
             .groupBy("surface")
             .agg(F.min("canonical_id").alias("canonical_id"))
         )
-        s2c = F.broadcast(
-            surf2canon.join(
-                comps.withColumnRenamed("component", "canon_comp"), "canonical_id"
-            ).select("surface", "canonical_id", "canon_comp")
-        )
-        t = (
-            triples_raw.join(
-                s2c.withColumnRenamed("surface", "subj")
-                .withColumnRenamed("canonical_id", "subj_id")
-                .withColumnRenamed("canon_comp", "subj_comp"),
-                "subj",
-                "left",
+        s2c = surf2canon.join(comps, "canonical_id")
+
+        def endpoint(role):  # s2c keyed by the triple's subj or obj surface
+            return F.broadcast(
+                s2c.select(
+                    F.col("surface").alias(role),
+                    F.col("canonical_id").alias(f"{role}_id"),
+                    F.col("component").alias(f"{role}_comp"),
+                )
             )
-            .join(
-                s2c.withColumnRenamed("surface", "obj")
-                .withColumnRenamed("canonical_id", "obj_id")
-                .withColumnRenamed("canon_comp", "obj_comp"),
-                "obj",
-                "left",
-            )
+
+        t = triples_raw.join(endpoint("subj"), "subj", "left").join(
+            endpoint("obj"), "obj", "left"
         )
         # canonicalize on the COMPONENT when the entity has one: entities
-        # connected through shared aliases (stage 5) collapse into one edge
+        # connected through shared aliases (stage 4) collapse into one edge
         # endpoint; unlinked surfaces fall back to the raw surface string
         return t.groupBy(
             F.coalesce("subj_comp", "subj_id", "subj").alias("subj_id"),
@@ -226,15 +210,13 @@ def run_pipeline(
 
     triples = stage(
         "triples",
-        {"from": [report["triples_raw"]["config_hash"],
-                  report["linked"]["config_hash"],
-                  report["components"]["config_hash"]]},
+        {},
         build_edges,
         partition_by=PRED_PARTITIONS,
-        input_rows=report["triples_raw"]["output_rows"],
+        inputs=("triples_raw", "linked", "components"),
     )
 
-    # 7. entity salience — PageRank over the canonical triple graph.
+    # 6. entity salience — PageRank over the canonical triple graph.
     # The KG consumer's first ranking signal ("which entities matter"):
     # float production variant (entity graphs at crawl scale overflow the
     # integer gate variant's bound), 5 iterations, evidence-weighted
@@ -253,16 +235,12 @@ def run_pipeline(
             F.col("node").alias("entity_id"), F.col("rank").alias("rank")
         )
 
-    stage(
-        "entity_rank",
-        {"from": report["triples"]["config_hash"], "iters": 5},
-        build_entity_rank,
-        input_rows=report["triples"]["output_rows"],
-    )
+    stage("entity_rank", {"iters": 5}, build_entity_rank, inputs=("triples",))
 
     report["_summary"] = {
         "pages": n_pages,
-        "mentions": report["mentions"]["output_rows"],
+        # link_mentions keeps one row per mention
+        "mentions": report["linked"]["output_rows"],
         "triples_raw": report["triples_raw"]["output_rows"],
         "triples": report["triples"]["output_rows"],
         "entities_ranked": report["entity_rank"]["output_rows"],

@@ -17,10 +17,7 @@ def corpus_dir(tmp_path_factory):
     return d
 
 
-STAGES = (
-    "verify_text", "kg", "mentions", "triples_raw",
-    "linked", "components", "triples", "entity_rank",
-)
+STAGES = ("kg", "triples_raw", "linked", "components", "triples", "entity_rank")
 
 # Spark jobs per stage of a cold run on this 60-page corpus, and in total
 # for a rerun that skips every stage. A stage's jobs are those from its
@@ -28,10 +25,10 @@ STAGES = (
 # before the first check. Adding a job is meant to be a visible decision:
 # raise a ceiling here on purpose, never to quiet a failure.
 COLD_JOB_CEILINGS = {
-    "driver": 3, "verify_text": 7, "kg": 6, "mentions": 5, "triples_raw": 6,
+    "driver": 3, "kg": 6, "triples_raw": 6,
     "linked": 9, "components": 8, "triples": 10, "entity_rank": 46,
 }
-SKIPPED_RERUN_JOB_CEILING = 13
+SKIPPED_RERUN_JOB_CEILING = 10
 
 
 def _run(spark, corpus_dir, out_dir, force=False):
@@ -81,7 +78,15 @@ def test_pipeline_runs_and_resumes(spark, corpus_dir, tmp_path, monkeypatch):
     )
     assert rep1["_summary"]["triples"] > 0
     assert not rep1["kg"]["skipped"]
-    # stage 7: every canonical entity in the triple graph gets a rank
+    assert [n for n in rep1 if not n.startswith("_")] == list(STAGES)
+    # the summary counts mentions as linked rows: one row per kg mention
+    kg_mentions = (
+        spark.read.parquet(os.path.join(out, "kg"))
+        .selectExpr("explode(mentions)")
+        .count()
+    )
+    assert rep1["_summary"]["mentions"] == kg_mentions > 0
+    # entity_rank: every canonical entity in the triple graph gets a rank
     assert rep1["_summary"]["entities_ranked"] > 0
     over = {g: n for g, n in cold_jobs.items() if n > COLD_JOB_CEILINGS[g]}
     assert not over, f"stage job counts over their ceilings: {over}"
@@ -105,9 +110,15 @@ def test_pipeline_runs_and_resumes(spark, corpus_dir, tmp_path, monkeypatch):
     assert rep3["_summary"] == rep1["_summary"]  # byte-stable result
 
 
-def test_lineage_records(spark, corpus_dir, tmp_path):
-    out = str(tmp_path / "out2")
-    _run(spark, corpus_dir, out)
+@pytest.fixture(scope="module")
+def clean_run(spark, corpus_dir, tmp_path_factory):
+    """(out dir, report) of one run on the clean corpus."""
+    out = str(tmp_path_factory.mktemp("clean") / "out")
+    return out, _run(spark, corpus_dir, out)
+
+
+def test_lineage_records(clean_run):
+    out, _ = clean_run
     with open(os.path.join(out, "kg.lineage.json")) as f:
         rec = json.load(f)
     assert rec["stage"] == "kg"
@@ -117,8 +128,42 @@ def test_lineage_records(spark, corpus_dir, tmp_path):
     assert rec["config_hash"]
 
 
+@pytest.mark.parametrize("case", ["text_off_non_en", "html_null_en"])
+def test_text_violation_fails_kg_and_fixed_input_resumes(
+    spark, corpus_dir, clean_run, tmp_path, case
+):
+    """A page whose stored text is not html_to_text(html) fails the run
+    before kg is recorded complete, lang-filtered pages included. The
+    check is part of the kg stage, so once the page is fixed in place, a
+    rerun without --force resumes and matches a clean run."""
+    import pandas as pd
+
+    clean = f"{corpus_dir}/pages.parquet"
+    pages = pd.read_parquet(clean)
+    if case == "text_off_non_en":
+        i = pages.index[pages["lang"] != "en"][0]
+        pages.loc[i, "text"] += " x"
+    else:
+        i = pages.index[pages["lang"] == "en"][0]
+        pages.loc[i, "html"] = None
+    bad_dir = tmp_path / "pages"
+    bad_dir.mkdir()
+    shutil.copy(f"{corpus_dir}/alias_dict.parquet", bad_dir)
+    pages.to_parquet(bad_dir / "pages.parquet")
+    out = str(tmp_path / "out")
+
+    with pytest.raises(Exception, match="html→text invariant violated"):
+        _run(spark, str(bad_dir), out)
+    assert not os.path.exists(os.path.join(out, "kg.lineage.json"))
+
+    shutil.copy(clean, bad_dir / "pages.parquet")
+    rep = _run(spark, str(bad_dir), out)
+    assert not rep["kg"]["skipped"]
+    assert rep["_summary"] == clean_run[1]["_summary"]
+
+
 def test_stage_wall_covers_eager_build(spark, corpus_dir, tmp_path, monkeypatch):
-    """A stage's wall_sec starts before its build call: stage 7 builds its
+    """A stage's wall_sec starts before its build call: entity_rank builds its
     PageRank eagerly, before write_stage writes anything. The record
     write_stage returns is the one it writes, so it carries that wall."""
     import time
