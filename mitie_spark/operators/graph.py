@@ -8,11 +8,13 @@ similarity edges, then find components).
 
 Algorithm: iterative minimum-label propagation with pointer-jumping
 ("HashToMin"-style): each round every vertex takes the min component id over
-itself and its neighbors, then labels are path-compressed by joining labels
-onto themselves. Rounds needed: O(log(diameter)). Each round is two
-shuffle-joins on the edge list — AQE handles skewed high-degree vertices
-(celebrity aliases) by splitting skewed partitions. For 10^12-scale graphs
-the same loop applies with edges bucketed by src; no driver-side state except
+itself and its neighbors, then labels are path-compressed by giving each
+vertex its label's own label. Rounds needed: O(log(diameter)). Each round is
+one join + min-aggregate over the edge list and one window keyed by label.
+The loop runs on webgraph._iterate with AQE off, so a skewed high-degree
+vertex (a celebrity alias) is not split across tasks inside it; the driver
+path covers graphs up to DRIVER_MAX_EDGES edges. For 10^12-scale graphs the
+same loop applies with edges bucketed by src; no driver-side state except
 the convergence test.
 """
 
@@ -132,22 +134,23 @@ def connected_components(
                 F.col("comp").alias("old"),
             )
         )
-        # pointer jumping: comp := comp(comp)
-        return (
-            new_labels.alias("x")
-            .join(
-                new_labels.select(
-                    F.col("id").alias("comp"), F.col("comp").alias("comp2")
-                ).alias("y"),
-                "comp",
-                "left",
-            )
-            .select(
-                F.col("x.id").alias("id"),
-                F.coalesce(F.col("y.comp2"), F.col("x.comp")).alias("comp"),
-                F.col("x.old").alias("old"),
-            )
-        )
+        # pointer jumping: comp := comp(comp), in one scan of new_labels (a
+        # self-join plans it twice, und scan and min-aggregate included:
+        # the two sides' checkpointed labels never match as one exchange).
+        # Each row goes out keyed by its label, to be relabelled, and by
+        # its id, carrying its label as comp2 to the rows keyed there.
+        null = F.lit(None).cast(new_labels.schema["id"].dataType)
+        both = new_labels.select(F.explode(F.array(
+            F.struct(F.col("comp").alias("k"), "id", "old", null.alias("comp2")),
+            F.struct(F.col("id").alias("k"), null.alias("id"), null.alias("old"),
+                     F.col("comp").alias("comp2")),
+        )).alias("r")).select("r.*")
+        return both.select(
+            "id",
+            F.coalesce(F.max("comp2").over(Window.partitionBy("k")), F.col("k"))
+            .alias("comp"),
+            "old",
+        ).filter(F.col("id").isNotNull())
 
     return _relabel_loop(e, step, max_iter, "comp")
 

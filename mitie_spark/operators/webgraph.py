@@ -20,11 +20,12 @@ JVM-side inside whole-stage codegen, no Python in the scan — so each is
 one narrow pass over the pages table with column pruning down to
 ``html``. PageRank is the standard iterative join-agg: per iteration one
 shuffle keyed by ``dst`` plus a broadcast-size teleport term; ranks and
-edges co-partition by key, and AQE handles the skewed high-in-degree
-hosts. The integer-quantized variant exists for the cross-engine gate
-(bit-exact under ANY summation order); production ranking at web scale
-uses the float variant (integer mode documents its no-overflow bound:
-``damp * scale * max_edge_weight < 2**63``).
+edges co-partition by key. The loop runs with AQE off (one job per
+lineage cut, see ``_iterate``), so AQE's skew-join split does not act on
+high-in-degree hosts inside it. The integer-quantized variant exists for
+the cross-engine gate (bit-exact under ANY summation order); production
+ranking at web scale uses the float variant (integer mode documents its
+no-overflow bound: ``damp * scale * max_edge_weight < 2**63``).
 """
 
 from __future__ import annotations
@@ -284,17 +285,31 @@ def _iterate(invariants, state0, step, iters, cut_every, finish, until=None):
     invariants can be unpersisted before returning, or on an error (a
     lazy persist leaks executor storage per call). On a multi-node
     cluster swap localCheckpoint for a reliable checkpoint dir if
-    executor loss mid-query matters."""
+    executor loss mid-query matters.
+
+    AQE is off from the invariants' persist to the result checkpoint,
+    and the caller's setting is put back on the way out, error or not.
+    With AQE on, every exchange of a pass is a query stage that runs as
+    its own job (the 5-pass PageRank of the pipeline's entity_rank
+    stage ran 46 jobs, 7 with AQE off); off, each cut is one job over
+    the whole pass. The price is AQE's runtime help inside the loop: no
+    partition coalescing (passes run spark.sql.shuffle.partitions tasks)
+    and no skew-join split, so a hub node's join partition is one task.
+    The setting is session-wide, so a query another thread plans on
+    the same session meanwhile runs without AQE too."""
 
     def cut(state):
         if isinstance(state, tuple):
             return (*state[:-1], cut(state[-1]))
         return state.localCheckpoint(eager=True)
 
-    for f in invariants:
-        if not f.is_cached:
-            f.persist()
+    conf = invariants[0].sparkSession.conf
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
     try:
+        for f in invariants:
+            if not f.is_cached:
+                f.persist()
         invariants[0].count()
         state = state0 if until is None else cut(state0)
         for i in range(iters):
@@ -309,6 +324,7 @@ def _iterate(invariants, state0, step, iters, cut_every, finish, until=None):
     finally:
         for f in reversed(invariants):
             f.unpersist()
+        conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 def _pagerank(edges, iters, r0, contrib, teleport, zero, rank_col):

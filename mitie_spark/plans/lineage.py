@@ -4,11 +4,21 @@ North rule: "Every stage checkpoints per-partition lineage and counters so
 runs resume idempotently." Each pipeline stage materializes through
 sources/catalog.write_table (partitioned Iceberg table when a catalog is
 configured, parquet directory otherwise); next to the stage path we write
-`<stage>.lineage.json` carrying input/output row counts, a per-partition
+`<stage>.lineage.json` carrying input/output row counts, a per-file
 output histogram, the materialization kind+location, and the stage config
 hash. A stage re-runs only if its output is missing, incomplete (no
 _SUCCESS / no table), or its config hash changed — so a killed run resumes
-from the last completed stage and re-runs are byte-stable."""
+from the last completed stage and re-runs are byte-stable.
+
+The counts come from the write itself, not from a re-read of the output:
+``output_rows`` is a ``DataFrame.observe`` count on the written frame.
+``partition_histogram`` has one ``{"file", "rows"}`` entry per written
+data file, heaviest first, and ``partitions`` is the number of those
+files (before, both described the Spark partitions of a re-read). For
+parquet a file is its path under out_path and its rows are read on the
+driver from its footer; for Iceberg both come from the table's ``files``
+metadata table. Files that hold other than the observed count fail the
+stage before its record is written."""
 
 from __future__ import annotations
 
@@ -16,8 +26,9 @@ import hashlib
 import json
 import os
 import time
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from mitie_spark.sources.catalog import read_table, write_table
@@ -58,7 +69,7 @@ def write_stage(
     conf: dict,
     started: float,
     partition_by: list[str] | None = None,
-    input_rows: int | None = None,
+    input_rows: int | Callable[[], int] | None = None,
     catalog: str | None = None,
 ) -> dict:
     """Materialize a stage (Iceberg table if `catalog`, else parquet at
@@ -66,20 +77,25 @@ def write_stage(
 
     ``started`` is the ``time.time()`` taken before the stage built `df`:
     an eager build (entity_rank's PageRank iterations) runs before this call,
-    and the record's ``wall_sec`` must cover it."""
+    and the record's ``wall_sec`` must cover it. ``input_rows`` is an int,
+    or a callable that gives it once the write has run (kg counts its pages
+    in its own scan)."""
+    written = Observation(f"lineage_{stage}")
     kind, location = write_table(
-        df, out_path, stage, partition_by=partition_by, catalog=catalog
+        df.observe(written, F.count(F.lit(1)).alias("rows")), out_path, stage,
+        partition_by=partition_by, catalog=catalog,
     )
-
-    spark = df.sparkSession
-    back = read_table(spark, kind, location)
-    part_hist = [
-        {"partition": int(r["pid"]), "rows": int(r["rows"])}
-        for r in back.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(F.count("*").alias("rows"))
-        .collect()
-    ]
+    output_rows = written.get["rows"]
+    part_hist = sorted(
+        _file_rows(df.sparkSession, kind, location),
+        key=lambda p: (-p["rows"], p["file"]),
+    )
+    in_files = sum(p["rows"] for p in part_hist)
+    if in_files != output_rows:
+        raise RuntimeError(
+            f"stage {stage}: data files hold {in_files} rows,"
+            f" the write observed {output_rows}"
+        )
     rec = {
         "stage": stage,
         "output": out_path,
@@ -87,13 +103,35 @@ def write_stage(
         "location": location,
         "config_hash": config_hash(conf),
         "config": {k: str(v) for k, v in conf.items()},
-        "input_rows": input_rows,
-        "output_rows": int(sum(p["rows"] for p in part_hist)),
+        "input_rows": input_rows() if callable(input_rows) else input_rows,
+        "output_rows": output_rows,
         "partitions": len(part_hist),
-        "partition_histogram": sorted(part_hist, key=lambda p: -p["rows"])[:32],
+        "partition_histogram": part_hist,
         "wall_sec": round(time.time() - started, 3),
     }
     with open(_lineage_path(out_path), "w") as f:
         json.dump(rec, f, indent=1)
     return rec
 
+
+def _file_rows(spark, kind: str, location: str) -> list[dict]:
+    """{"file", "rows"} of every data file a stage wrote."""
+    if kind == "iceberg":
+        files = read_table(spark, kind, f"{location}.files")
+        return [
+            {"file": r["file_path"], "rows": int(r["record_count"])}
+            for r in files.select("file_path", "record_count").collect()
+        ]
+    import pyarrow.parquet as pq
+
+    out = []
+    for d, subdirs, names in os.walk(location):
+        subdirs[:] = [s for s in subdirs if not s.startswith(("_", "."))]
+        for n in names:
+            if n.endswith(".parquet") and not n.startswith(("_", ".")):
+                p = os.path.join(d, n)
+                out.append({
+                    "file": os.path.relpath(p, location),
+                    "rows": pq.read_metadata(p).num_rows,
+                })
+    return out

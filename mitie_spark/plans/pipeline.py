@@ -40,7 +40,7 @@ import json
 import os
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from mitie_spark.models.train import ARTIFACT_DIR
@@ -83,7 +83,8 @@ def run_pipeline(
               input_rows=None):
         """``inputs``: the upstream stages ``build`` reads. Their config
         hashes and row counts chain into this stage's hash, and the first
-        one's rows are its ``input_rows`` (kg has none: it passes n_pages)."""
+        one's rows are its ``input_rows`` (kg has none: it passes its own
+        page count, observed in its scan)."""
         out = os.path.join(out_dir, name)
         ups = [report[i] for i in inputs]
         conf = {**conf, "from": [[u["config_hash"], u["output_rows"]] for u in ups]}
@@ -99,8 +100,12 @@ def run_pipeline(
         report[name] = {**rec, "skipped": skipped}
         return read_table(spark, rec["kind"], rec["location"])
 
-    pages = spark.read.parquet(pages_path)
-    n_pages = pages.count()
+    # the page count is observed in kg's scan, not counted by a job of
+    # its own; a skipped kg keeps it in its record as input_rows
+    scanned = Observation("pages")
+    pages = spark.read.parquet(pages_path).observe(
+        scanned, F.count(F.lit(1)).alias("pages")
+    )
 
     # 1. fused extraction behind the html→text invariant, checked on every
     # page, lang-filtered ones included, in the scan that feeds it. The
@@ -137,8 +142,9 @@ def run_pipeline(
         lambda: extract_kg(
             checked, ner_path, rel_path, lang_filter=None, parallelism=kg_par
         ),
-        input_rows=n_pages,
+        input_rows=lambda: scanned.get["pages"],
     )
+    n_pages = report["kg"]["input_rows"]
 
     # 2. exploded triples
     triples_raw = stage(

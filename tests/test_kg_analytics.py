@@ -568,6 +568,44 @@ def test_graph_operator_leaves_no_cached_frame(spark, monkeypatch, op):
     assert cache.numCachedEntries() == before
 
 
+@pytest.mark.parametrize("raises", [False, True])
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_iterate_runs_with_aqe_off_and_restores_it(spark, aqe, raises):
+    """_iterate plans its loop with AQE off, so a pass runs as one job, not
+    one job per query stage, and puts the caller's AQE setting back on the
+    way out, when a step raises too."""
+    from mitie_spark.operators.webgraph import _iterate
+
+    key = "spark.sql.adaptive.enabled"
+    seen = []
+
+    def step(state, i):
+        seen.append(spark.conf.get(key))
+        if raises and i == 1:
+            raise ValueError("step failed")
+        return state.select((F.col("x") + 1).alias("x"))
+
+    inv = spark.range(3)
+
+    def run():
+        state0 = inv.select(F.col("id").alias("x"))
+        return _iterate([inv], state0, step, 3, 1, lambda s: s)
+
+    prior = spark.conf.get(key)
+    spark.conf.set(key, aqe)
+    try:
+        if raises:
+            with pytest.raises(ValueError, match="step failed"):
+                run()
+        else:
+            assert sorted(r.x for r in run().collect()) == [3, 4, 5]
+        assert spark.conf.get(key) == aqe
+    finally:
+        spark.conf.set(key, prior)
+    assert seen == ["false"] * (2 if raises else 3)
+    assert not inv.is_cached
+
+
 # ---------------------------------------------------------------------------
 # Session memo for values shared across registry queries
 # ---------------------------------------------------------------------------

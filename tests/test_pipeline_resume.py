@@ -25,10 +25,10 @@ STAGES = ("kg", "triples_raw", "linked", "components", "triples", "entity_rank")
 # before the first check. Adding a job is meant to be a visible decision:
 # raise a ceiling here on purpose, never to quiet a failure.
 COLD_JOB_CEILINGS = {
-    "driver": 3, "kg": 6, "triples_raw": 6,
-    "linked": 9, "components": 8, "triples": 10, "entity_rank": 46,
+    "driver": 1, "kg": 3, "triples_raw": 3,
+    "linked": 6, "components": 5, "triples": 7, "entity_rank": 7,
 }
-SKIPPED_RERUN_JOB_CEILING = 10
+SKIPPED_RERUN_JOB_CEILING = 8
 
 
 def _run(spark, corpus_dir, out_dir, force=False):
@@ -126,6 +126,49 @@ def test_lineage_records(clean_run):
     assert rec["partitions"] >= 1
     assert rec["partition_histogram"][0]["rows"] >= 1
     assert rec["config_hash"]
+
+
+@pytest.mark.parametrize("stage", STAGES)
+def test_lineage_counts_match_reopened_table(spark, clean_run, stage):
+    """write_stage takes output_rows from the write, not from a re-read:
+    it must still equal the count of the reopened table, and the per-file
+    histogram (one entry per data file on disk) must sum to it."""
+    out, rep = clean_run
+    with open(os.path.join(out, f"{stage}.lineage.json")) as f:
+        rec = json.load(f)
+    assert rec == {k: v for k, v in rep[stage].items() if k != "skipped"}
+    assert rec["output_rows"] == spark.read.parquet(rec["location"]).count()
+    hist = rec["partition_histogram"]
+    assert sum(p["rows"] for p in hist) == rec["output_rows"]
+    on_disk = sorted(
+        os.path.relpath(os.path.join(d, n), rec["location"])
+        for d, _, names in os.walk(rec["location"])
+        for n in names
+        if n.endswith(".parquet") and not n.startswith(".")
+    )
+    assert sorted(p["file"] for p in hist) == on_disk
+    assert rec["partitions"] == len(on_disk)
+
+
+def test_write_stage_rejects_a_count_the_files_do_not_hold(
+    spark, tmp_path, monkeypatch
+):
+    """A footer sum that disagrees with the observed count fails the stage
+    before its lineage record is written, so the stage is not complete."""
+    import time
+
+    from mitie_spark.plans import lineage
+
+    real = lineage._file_rows
+    monkeypatch.setattr(
+        lineage, "_file_rows", lambda *a: real(*a)[1:]  # one file unread
+    )
+    out = str(tmp_path / "st")
+    with pytest.raises(RuntimeError, match="data files hold"):
+        lineage.write_stage(
+            spark.range(10).repartition(2), out, "st", {}, time.time()
+        )
+    assert lineage.stage_is_complete(out, lineage.config_hash({})) is None
 
 
 @pytest.mark.parametrize("case", ["text_off_non_en", "html_null_en"])
