@@ -442,9 +442,9 @@ class total_word_feature_extractor:
 
 # ---------------------------------------------------------------------------
 # Trainer surface (mitie.py:466-721,782-827) — reference call shapes over
-# this repo's NumPy trainers. `beta` and `num_threads` are accepted for
-# drop-in compatibility (the reference's BOBYQA C-search and thread pool
-# don't apply to the perceptron trainers here).
+# this repo's ports of the reference solvers (models/svm_train, oca, dcd).
+# `num_threads` is accepted for drop-in compatibility (Spark-level
+# parallelism replaces the reference's thread pool).
 # ---------------------------------------------------------------------------
 
 
@@ -484,15 +484,15 @@ class ner_trainer:
 
     def __init__(self, filename: str | None = None):
         self._instances: list[ner_training_instance] = []
-        # the reference solver's hyperparameter surface
-        # (ner_trainer.cpp:498-572 + class defaults): segmenter C=20,
-        # eps=0.01, max 2000 iterations, loss-per-missed-segment 3.0,
-        # chunk-classifier C=300 (:360-405), F-beta 0.5, 4 threads.
-        # Mapped to the averaged-perceptron analogs documented on
-        # models/ner_model.train_segmenter / train_chunk_classifier;
-        # num_threads is accepted for drop-in compatibility (Spark-level
-        # parallelism replaces the reference's thread pool) and beta is
-        # used only by the reference's internal CV tuning.
+        # the reference solver's hyperparameter surface, with the
+        # reference's meanings and defaults: the structured-SVM segmenter
+        # (models/svm_train.train_segmenter_svm, ner_trainer.cpp:498-572)
+        # takes C, eps (relative objective change per epoch), the epoch cap
+        # max_iterations and loss_per_missed_segment; the OCA chunk
+        # classifier (train_chunk_classifier_svm, :360-405) takes
+        # classifier_C; beta is the F-beta of its CV C search. num_threads
+        # is accepted for drop-in compatibility (Spark-level parallelism
+        # replaces the reference's thread pool).
         self.beta = 0.5
         self.num_threads = 4
         self.C = 20.0
@@ -500,12 +500,6 @@ class ner_trainer:
         self.max_iterations = 2000
         self.loss_per_missed_segment = 3.0
         self.classifier_C = 300.0
-        # "svm" = the reference's solver family: max-margin structured SVM
-        # on the exact dlib objective/loss (models/svm_train.py), with the
-        # C/eps/max_iterations/loss_per_missed_segment knobs carrying their
-        # reference meanings. "perceptron" (default) = the fast averaged-
-        # perceptron analog used for the committed artifacts.
-        self.solver = "perceptron"
         # auto_tune mirrors ner_trainer.cpp's BOBYQA/CV parameter search
         # (segmenter (C, loss) + classifier C); off by default — the
         # reference always runs it, but it multiplies training cost by the
@@ -522,10 +516,11 @@ class ner_trainer:
     def train(self) -> named_entity_extractor:
         import random
 
-        from mitie_spark.models.ner_model import (
-            NerModel,
-            train_chunk_classifier,
-            train_segmenter,
+        from mitie_spark.models.ner_model import NerModel
+        from mitie_spark.models.svm_train import (
+            train_chunk_classifier_svm,
+            train_segmenter_svm,
+            tune_segmenter_params,
         )
 
         if not self._instances:
@@ -561,61 +556,26 @@ class ner_trainer:
                     cls_examples.append((inst.tokens, s, e, not_entity))
         seg_C = self.C
         seg_loss = self.loss_per_missed_segment
-        cls_C = self.classifier_C
         if self.auto_tune and len(seg_sents) > 1:
-            from mitie_spark.models.svm_train import (
-                tune_classifier_C,
-                tune_segmenter_params,
-            )
-
             seg_C, seg_loss, _ = tune_segmenter_params(seg_sents)
-            # the svm solver runs the reference's exact
-            # find_max_single_variable C search inside
-            # train_chunk_classifier_svm instead of the analog tuner
-            if self.solver != "svm" and len(cls_examples) > 1:
-                cls_C, _ = tune_classifier_C(
-                    cls_examples, num_labels=len(tags), beta=self.beta
-                )
-        if self.solver == "svm":
-            from mitie_spark.models.svm_train import train_segmenter_svm
-
-            W_seg, T_seg = train_segmenter_svm(
-                seg_sents,
-                C=seg_C,
-                eps=self.eps,
-                max_iterations=int(self.max_iterations),
-                loss_per_missed_segment=seg_loss,
-            )
-        else:
-            W_seg, T_seg = train_segmenter(
-                seg_sents,
-                C=seg_C,
-                eps=self.eps,
-                max_iterations=int(self.max_iterations),
-                loss_per_missed_segment=seg_loss,
-            )
-        if self.solver == "svm":
-            # the reference's exact chunk-classifier flow: OCA multiclass
-            # SVM (+ the 2-fold-CV F-beta C search when auto_tune), bit-
-            # identical to the compiled trainer's deterministic shape
-            # (ner_trainer.cpp:361-405 via models/oca.py)
-            from mitie_spark.models.svm_train import train_chunk_classifier_svm
-
-            Ws, Wd, b = train_chunk_classifier_svm(
-                cls_examples,
-                n_classes=not_entity + 1,
-                C=cls_C,
-                beta=self.beta,
-                num_labels=len(tags),
-                auto_tune=self.auto_tune,
-            )
-        else:
-            Ws, Wd, b = train_chunk_classifier(
-                cls_examples,
-                epochs=12,
-                n_classes=not_entity + 1,
-                C=cls_C,
-            )
+        W_seg, T_seg = train_segmenter_svm(
+            seg_sents,
+            C=seg_C,
+            eps=self.eps,
+            max_iterations=int(self.max_iterations),
+            loss_per_missed_segment=seg_loss,
+        )
+        # OCA multiclass SVM; with auto_tune, train_chunk_classifier_svm
+        # runs the reference's 2-fold-CV F-beta C search (ner_trainer.cpp:
+        # 361-405 via models/oca.py)
+        Ws, Wd, b = train_chunk_classifier_svm(
+            cls_examples,
+            n_classes=not_entity + 1,
+            C=self.classifier_C,
+            beta=self.beta,
+            num_labels=len(tags),
+            auto_tune=self.auto_tune,
+        )
         model = NerModel(W_seg, T_seg, Ws, Wd, b, tags)
         return named_entity_extractor(_model=model)
 
@@ -630,11 +590,9 @@ class binary_relation_detector_trainer:
         self._neg: list[tuple[list[str], tuple[int, int], tuple[int, int]]] = []
         self.beta = 0.1
         self.num_threads = 4
-        # On a dlib-backed NER this is the reference trainer's true
-        # per-class SVM C — a scalar or a (C_pos, C_neg) pair handed to
-        # the ported DCD solver verbatim (models/dcd.py); None uses the
-        # reference's default/tuned flow.  On a native NER it remains the
-        # decay analog of models/relation_model.train_relation_model.
+        # The reference trainer's per-class SVM C — a scalar or a
+        # (C_pos, C_neg) pair handed to the ported DCD solver verbatim
+        # (models/dcd.py); None uses the reference's default/tuned flow.
         self.C: float | tuple[float, float] | None = None
         # auto_tune runs the reference's exact BOBYQA 6-fold-CV F-beta C
         # search (binary_relation_detector_trainer.cpp:176-238; the
@@ -662,15 +620,15 @@ class binary_relation_detector_trainer:
         )
 
     def train(self) -> binary_relation_detector:
-        from mitie_spark.models.relation_model import (
-            train_relation_model,
-            tune_relation_C,
-        )
+        from mitie_spark.models.relation_model import train_relation_model
 
         if not self._pos:
             raise ValueError("no positive examples")
         fs = self._ner._model.fs  # the reference trainer extracts
         # features through the NER's word-feature extractor
+        C = self.C
+        if C is not None and not isinstance(C, (tuple, list)):
+            C = (C, C)
         if getattr(fs, "kind", "") == "dlib":
             # a dlib-backed NER extracts REFERENCE-space features
             # (extract_binary_relation emits them for real .svm files), so
@@ -698,20 +656,13 @@ class binary_relation_detector_trainer:
                     reference_relation_pairs(toks, ner.X(toks), a1, a2)
                 )
                 labels.append(-1.0)
-            C_override = None
-            if self.C is not None:
-                C_override = (
-                    (float(self.C[0]), float(self.C[1]))
-                    if isinstance(self.C, (tuple, list))
-                    else (float(self.C), float(self.C))
-                )
             w, b, _ = brdt_train(
                 samples,
                 labels,
                 num_pos=len(self._pos),
                 beta=self.beta,
                 auto_tune=self.auto_tune,
-                C_override=C_override,
+                C_override=C,
             )
             return binary_relation_detector(
                 _ref_det=(w, b),
@@ -721,20 +672,13 @@ class binary_relation_detector_trainer:
         examples = [
             (toks, a1, a2, self.relation_name) for toks, a1, a2 in self._pos
         ] + [(toks, a1, a2, None) for toks, a1, a2 in self._neg]
-        C = self.C
-        if self.auto_tune:
-            tuned = tune_relation_C(
-                [self.relation_name], examples, fs=fs, beta=self.beta
-            )
-            if tuned is not None:
-                C = tuned
         model = train_relation_model(
             [self.relation_name],
             examples,
-            epochs=14,
-            margin=2.0,
             fs=fs,
             C=C,
+            auto_tune=self.auto_tune,
+            beta=self.beta,
         )
         return binary_relation_detector(_model=model, name=self.relation_name)
 

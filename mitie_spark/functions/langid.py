@@ -1,16 +1,14 @@
 """Trained language identification: multinomial Naive Bayes over hashed
 byte n-grams (1/2/3-grams of the UTF-8 encoding).
 
-This replaces answer-quality reliance on the stopword/charset heuristic in
-``text_quality.lang_id`` (kept for dependency-free callers): the model is
-TRAINED on lang-labeled pages in ONE Spark pass (per-doc bucket counts via
-``np.bincount`` inside mapInPandas → one groupBy(lang, bucket) sum → a
-(L × n_buckets) log-weight matrix collected to the driver), then broadcast
-into an Arrow-vectorized scoring UDF. Byte-level n-grams need no unicode
-segmentation and capture CJK multi-byte sequences naturally — the same
-hashed-feature trick as the reference's text categorizer BoW path
-(text_feature_extraction.cpp:39-59), applied to characters instead of
-words.
+The model is TRAINED on lang-labeled pages in ONE Spark pass (per-doc
+bucket counts via ``np.bincount`` inside mapInPandas → one groupBy(lang,
+bucket) sum → a (L × n_buckets) log-weight matrix collected to the
+driver), then broadcast into an Arrow-vectorized scoring UDF. Byte-level
+n-grams need no unicode segmentation and capture CJK multi-byte sequences
+naturally — the same hashed-feature trick as the reference's text
+categorizer BoW path (text_feature_extraction.cpp:39-59), applied to
+characters instead of words.
 
 At corpus scale you train on a bounded SAMPLE of labeled pages (the model
 is a 5×4096 matrix regardless of corpus size) and broadcast the weights;

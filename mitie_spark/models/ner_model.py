@@ -5,10 +5,10 @@ Re-expresses the reference's two-part NER (SURVEY.md §2.3 M1+M2):
 - M1: first-order BILOU chain decoded by Viterbi with illegal-transition
   rejection, window-3 emission features
   (/root/reference/dlib/dlib/svm/sequence_segmenter.h:131-253,363-408;
-  find_max_factor_graph_viterbi.h:59). The reference's weights come from a
-  structured-SVM solver; ours are trained with an averaged structured
-  perceptron on the deterministic synthetic corpus (the reference's binary
-  models are not vendored — makefile:13-17 downloads them).
+  find_max_factor_graph_viterbi.h:59). Trained, like the reference, as a
+  structured SVM (models/svm_train.train_segmenter_svm) on the
+  deterministic synthetic corpus (the reference's binary models are not
+  vendored — makefile:13-17 downloads them).
 - M2: per-chunk classification with the reference's FULL hashed feature set
   (word/stem/prefix/suffix hashes, shape indicator features, caps-pattern,
   ±1/±2 context words and 8-token context bags seeds 1000/1001, all over
@@ -16,7 +16,9 @@ Re-expresses the reference's two-part NER (SURVEY.md §2.3 M1+M2):
   normalized dense word-vector blocks appended at index MAX_FEAT+i, then
   multiclass linear argmax with the "predicted class ≥ num_tags ⇒ drop
   chunk" rule (/root/reference/mitielib/src/ner_feature_extraction.cpp:
-  167-388; named_entity_extractor.cpp:147-174; dlib/svm/function.h:752-832).
+  167-388; named_entity_extractor.cpp:147-174; dlib/svm/function.h:752-832),
+  trained with the OCA multiclass SVM port
+  (models/svm_train.train_chunk_classifier_svm).
 
 Word features are pluggable (T9): either the deterministic hashed-embedding
 standin (no dictionary needed) or trained CCA word vectors
@@ -32,7 +34,6 @@ every chunk in the Arrow batch into one segment-reduce + matmul.
 
 from __future__ import annotations
 
-import math
 from functools import lru_cache
 
 import numpy as np
@@ -151,11 +152,12 @@ class ShapeAugmentedWordVectors:
     The reference's segmenter sees ONLY the 271-dim dictionary vectors —
     workable because its extractor is trained on billions of tokens with a
     400k-word vocabulary and the segmenter is a structured SVM. On the
-    synthetic corpora here, a pure-CCA source leaves the averaged
-    perceptron ~0.2%% short of exact boundary recovery (capitalization only
-    reaches it through morph substrings), so the shape flags are appended
-    as a documented extension; the CCA + morph + OOV layout underneath is
-    the reference's (total_word_feature_extractor.h:107-137)."""
+    synthetic corpora here, a pure-CCA source left the averaged-perceptron
+    segmenter first trained on it ~0.2%% short of exact boundary recovery
+    (capitalization only reaches it through morph substrings), so the shape
+    flags are appended as a documented extension; the CCA + morph + OOV
+    layout underneath is the reference's
+    (total_word_feature_extractor.h:107-137)."""
 
     kind = "wordvec+shape"
 
@@ -891,173 +893,3 @@ class NerModel:
             fs=fs,
             use_bio=bool(z["use_bio"][0]) if "use_bio" in z else False,
         )
-
-
-# ---------------------------------------------------------------------------
-# training (averaged structured perceptron; the reference's structured-SVM
-# trainer ner_trainer.cpp:224-276 is the analog — same feature space, same
-# two-part Part I segmenter / Part II classifier split)
-# ---------------------------------------------------------------------------
-
-
-def train_segmenter(
-    sentences,
-    epochs: int = 8,
-    seed: int = 1234,
-    fs=None,
-    C: float | None = None,
-    eps: float | None = None,
-    max_iterations: int | None = None,
-    loss_per_missed_segment: float | None = None,
-    use_bio: bool = False,
-):
-    """sentences: [(tokens, chunk_ranges)]. Returns (W_seg, T_seg).
-
-    The reference trains this part with a structured SVM
-    (ner_trainer.cpp:498-572: C=20, eps=0.01, max 2000 iterations,
-    loss-per-missed-segment 3.0, BOBYQA-tuned). The averaged structured
-    perceptron here exposes the same surface with solver-affecting
-    analogs: ``C`` → per-example L2 weight decay 1/(C·N) (higher C fits
-    the training data harder, exactly the SVM direction), ``eps`` →
-    convergence tolerance (stop when the epoch mistake rate ≤ eps),
-    ``max_iterations`` → epoch cap (overrides ``epochs``),
-    ``loss_per_missed_segment`` → update scale at positions where a gold
-    segment token was predicted OUTSIDE (the SVM's asymmetric loss)."""
-    fs = fs or DEFAULT_FS
-    rng = np.random.default_rng(seed)
-    if use_bio:
-        ns = N_STATES_BIO
-        allowed, start_ok, end_ok = _ALLOWED_BIO, _START_OK_BIO, _END_OK_BIO
-        encode = chunks_to_labels_bio
-    else:
-        ns = N_STATES
-        allowed, start_ok, end_ok = _ALLOWED, _START_OK, _END_OK
-        encode = chunks_to_labels
-    W = np.zeros((ns, WINDOW * fs.dims + 1))
-    T = np.zeros((ns, ns))
-    Wa = np.zeros_like(W)
-    Ta = np.zeros_like(T)
-    feats = [
-        (
-            window_matrix(sentence_matrix(toks, fs)),
-            encode(len(toks), chunks),
-        )
-        for toks, chunks in sentences
-        if toks
-    ]
-    n_epochs = max_iterations if max_iterations is not None else epochs
-    lms = loss_per_missed_segment if loss_per_missed_segment is not None else 1.0
-    decay = 1.0 - 1.0 / (C * max(len(feats), 1)) if C else 1.0
-    t_step = 0
-    # plateau stop (only with an eps convergence target): the reference's
-    # max_iterations=2000 bounds OCA cutting-plane rounds, which terminate
-    # via the duality gap; a perceptron on NON-separable data never
-    # reaches the eps mistake rate, so without this a noisy dataset runs
-    # all 2000 Viterbi epochs. 12 epochs without a new best mistake count
-    # ≈ converged. eps=None means the caller asked for an exact epoch
-    # count — honor it (the committed artifacts train that way).
-    best_mistakes, stale, patience = None, 0, 12
-    for _ in range(n_epochs):
-        order = rng.permutation(len(feats))
-        mistakes = 0
-        for i in order:
-            FX, gold = feats[i]
-            em = FX @ W.T
-            pred = viterbi(em, T, allowed, start_ok, end_ok)
-            if decay != 1.0:
-                W *= decay
-                T *= decay
-            if not np.array_equal(pred, gold):
-                mistakes += 1
-                for t in range(len(gold)):
-                    if pred[t] != gold[t]:
-                        # missed-segment position: gold is inside a segment
-                        # but prediction says OUTSIDE
-                        scale = lms if (gold[t] != O and pred[t] == O) else 1.0
-                        W[gold[t]] += scale * FX[t]
-                        W[pred[t]] -= scale * FX[t]
-                    if t > 0:
-                        T[gold[t - 1], gold[t]] += 1.0
-                        T[pred[t - 1], pred[t]] -= 1.0
-            t_step += 1
-            Wa += W
-            Ta += T
-        if eps is not None and feats and mistakes / len(feats) <= eps:
-            break
-        if eps is not None:
-            if best_mistakes is None or mistakes < best_mistakes:
-                best_mistakes, stale = mistakes, 0
-            else:
-                stale += 1
-                if stale >= patience:
-                    break
-    return Wa / max(t_step, 1), Ta / max(t_step, 1)
-
-
-def train_chunk_classifier(
-    examples,
-    epochs: int = 6,
-    seed: int = 1235,
-    n_classes: int | None = None,
-    fs=None,
-    C: float | None = None,
-):
-    """examples: [(tokens, start, end, class_id)] with class_id == the
-    not-entity id (== number of real tags) for non-entity segments. Returns
-    (W_sparse, W_dense, b). ``n_classes`` = real tags + 1; defaults to the
-    built-in TAGS vocabulary. ``C``: SVM-C analog (reference default 300,
-    2-fold-CV-tuned — ner_trainer.cpp:360-405) mapped to per-example L2
-    weight decay 1/(C·N); None = no regularization (current default)."""
-    fs = fs or DEFAULT_FS
-    rng = np.random.default_rng(seed)
-    k = n_classes if n_classes is not None else NOT_ENTITY + 1
-    Ws = np.zeros((k, MAX_FEAT))
-    Wd = np.zeros((k, N_DENSE_BLOCKS * fs.dims))
-    b = np.zeros(k)
-    # lazy averaging: avg = W_final - U/steps where U accumulates
-    # step_index * delta at each update (avoids O(MAX_FEAT) work per example)
-    Us, Ud, ub = np.zeros_like(Ws), np.zeros_like(Wd), np.zeros_like(b)
-    cache = []
-    for tokens, s, e, y in examples:
-        X = sentence_matrix(tokens, fs)
-        idxs, vals, dense = chunk_features(tokens, X, s, e)
-        cache.append((idxs, vals, dense.astype(np.float64), y))
-    # per-epoch L2 decay for the C analog: a full-matrix scale per EXAMPLE
-    # would cost O(MAX_FEAT) each (and uniform scaling never changes the
-    # argmax within one step anyway) — per epoch it shrinks old weights
-    # relative to new updates, which is the regularization effect.
-    # exp(-1/(C·N)) ≈ 1-1/(C·N) for moderate C but NEVER reaches zero:
-    # a true SVM at tiny C shrinks the norm, not the direction (argmax is
-    # scale-invariant), so a mapping that zeroes the weights mid-training
-    # (the old max(1-1/C, 0)) breaks the CV response the reference's
-    # find_max_single_variable C search walks through — it probes C values
-    # down to 0.01 (ner_trainer.cpp:383) where dlib's SVM still scores
-    # F=1 on separable data
-    decay = math.exp(-1.0 / (C * max(len(cache), 1))) if C else 1.0
-    steps = 0
-    for _ in range(epochs):
-        order = rng.permutation(len(cache))
-        for i in order:
-            idxs, vals, dense, y = cache[i]
-            scores = b + (Ws[:, idxs] * vals).sum(axis=1)
-            scores += Wd @ dense
-            p = int(np.argmax(scores))
-            steps += 1
-            if p != y:
-                np.add.at(Ws[y], idxs, vals)
-                np.add.at(Ws[p], idxs, -vals)
-                np.add.at(Us[y], idxs, steps * vals)
-                np.add.at(Us[p], idxs, -steps * vals)
-                Wd[y] += dense
-                Wd[p] -= dense
-                Ud[y] += steps * dense
-                Ud[p] -= steps * dense
-                b[y] += 1.0
-                b[p] -= 1.0
-                ub[y] += steps
-                ub[p] -= steps
-        if decay != 1.0:
-            for arr in (Ws, Wd, b, Us, Ud, ub):
-                arr *= decay
-    n = max(steps, 1)
-    return Ws - Us / n, Wd - Ud / n, b - ub / n

@@ -10,13 +10,13 @@ Candidate semantics are the C++ example's (EP3, SURVEY.md §3): every pair of
 (/root/reference/examples/cpp/relation_extraction/
 relation_extraction_example.cpp:107-121).
 
-One detector per predicate; weights trained by averaged perceptron on the
+One detector per predicate, trained like the reference's
+binary_relation_detector_trainer (binary_relation_detector_trainer.cpp:
+176-238) with the ported DCD linear SVM (models/dcd.brdt_train) on the
 planted synthetic corpus (the reference's .svm artifacts are not vendored).
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 
@@ -257,132 +257,52 @@ class RelationModel:
 def train_relation_model(
     preds: list[str],
     examples,
-    epochs: int = 10,
-    seed: int = 77,
-    margin: float = 1.0,
     fs=None,
-    C: float | None = None,
+    C: tuple[float, float] | None = None,
+    auto_tune: bool = False,
+    beta: float = 0.1,
 ) -> RelationModel:
     """examples: [(tokens, arg1, arg2, pos_pred | None)]; every candidate is a
     negative for all detectors except its positive predicate (if any).
-    Margin perceptron with lazy averaging. ``C``: SVM-C analog (the
-    reference BOBYQA-searches C for svm_c_linear_dcd,
-    binary_relation_detector_trainer.cpp:176-238) mapped to a per-epoch L2
-    weight decay exp(-1/(C·N)); None = no regularization."""
+
+    Each detector is the reference trainer's DCD linear SVM
+    (models/dcd.brdt_train, binary_relation_detector_trainer.cpp:176-238):
+    the sample is the sorted, duplicate-summed sparse n-gram pairs plus the
+    dense argument block at offset ``HR``, labels ±1.  ``C`` pins the
+    per-class (C_pos, C_neg) pair; ``auto_tune`` runs the
+    BOBYQA 6-fold-CV F-``beta`` C search (skipped at ≤ 6 positives, like
+    the reference); otherwise C is the reference's untuned 5000/n·5/6.  dcd
+    scores w·x − b while ``RelationModel`` adds b, so b is negated."""
+    from mitie_spark.models.dcd import brdt_train
     from mitie_spark.models.ner_model import DEFAULT_FS
 
     fs = fs or DEFAULT_FS
-    rng = np.random.default_rng(seed)
-    k = len(preds)
-    pid = {p: i for i, p in enumerate(preds)}
     dense_dim = 2 * fs.dims
+    samples = []
+    for tokens, a1, a2, _ in examples:
+        idxs, vals, dense = relation_features(tokens, None, a1, a2, fs=fs)
+        uniq, inv = np.unique(idxs, return_inverse=True)
+        summed = np.zeros(len(uniq))
+        np.add.at(summed, inv, vals)
+        samples.append((
+            np.concatenate([uniq, HR + np.arange(dense_dim)]).astype(np.intp),
+            np.concatenate([summed, dense]),
+        ))
+    k = len(preds)
     Ws = np.zeros((k, HR))
     Wd = np.zeros((k, dense_dim))
     b = np.zeros(k)
-    Us, Ud, ub = np.zeros_like(Ws), np.zeros_like(Wd), np.zeros_like(b)
-    cache = []
-    for tokens, a1, a2, pos in examples:
-        idxs, vals, dense = relation_features(tokens, None, a1, a2, fs=fs)
-        y = np.full(k, -1.0)
-        if pos is not None:
-            y[pid[pos]] = 1.0
-        cache.append((idxs, vals, dense, y))
-    # exp(-1/(C·N)): see ner_model.train_chunk_classifier — never
-    # zeroes the direction, matching a real SVM's small-C response
-    decay = math.exp(-1.0 / (C * max(len(cache), 1))) if C else 1.0
-    steps = 0
-    for _ in range(epochs):
-        for i in rng.permutation(len(cache)):
-            idxs, vals, dense, y = cache[i]
-            s = b + (Ws[:, idxs] * vals).sum(axis=1)
-            s += Wd @ dense
-            steps += 1
-            wrong = (y * s) < margin  # update detectors violating the margin
-            if wrong.any():
-                for d in np.nonzero(wrong)[0]:
-                    yy = y[d]
-                    np.add.at(Ws[d], idxs, yy * vals)
-                    np.add.at(Us[d], idxs, steps * yy * vals)
-                    Wd[d] += yy * dense
-                    Ud[d] += steps * yy * dense
-                    b[d] += yy
-                    ub[d] += steps * yy
-        if decay != 1.0:
-            for arr in (Ws, Wd, b, Us, Ud, ub):
-                arr *= decay
-    n = max(steps, 1)
-    return RelationModel(
-        preds,
-        Ws - Us / n,
-        Wd - Ud / n,
-        b - ub / n,
-        fingerprint=fs.fingerprint,
-    )
-
-
-def tune_relation_C(
-    preds: list[str],
-    examples,
-    fs=None,
-    folds: int = 6,
-    beta: float = 0.1,
-    epochs: int = 14,
-    margin: float = 2.0,
-    seed: int = 77,
-) -> float | None:
-    """Cross-validated C search mirroring the reference trainer's
-    BOBYQA/CV loop (binary_relation_detector_trainer.cpp:176-238): same
-    6-fold protocol, same search bounds [1/n, 1e5/n], same F-beta
-    objective over the per-class accuracies (dlib's
-    cross_validate_trainer reports TPR/TNR — fscore =
-    (1+β²)·TPR·TNR/(β²·TNR+TPR)), and the winner is rescaled by
-    (folds-1)/folds exactly as the reference does before the final
-    full-data train. The 2-D per-class BOBYQA trust region is simplified
-    to a deterministic 9-point log-space grid over our single C knob
-    (the decay analog has no per-class split); returns None when there
-    are ≤ folds positives — the reference skips the search then too."""
-    n_pos = sum(1 for _, _, _, pos in examples if pos is not None)
-    if n_pos <= folds:
-        return None
-    n = len(examples)
-    rng = np.random.default_rng(seed)
-    order = rng.permutation(n)  # randomize_samples analog, deterministic
-    fold_of = np.arange(n) % folds
-    lo, hi = 1.0 / n, 100000.0 / n
-    grid = np.exp(np.linspace(np.log(lo), np.log(hi), 9))
-    best_c, best_f = grid[0], -1.0
-    ex = [examples[i] for i in order]
-    for c in grid:
-        tp = fp = fn = tn = 0
-        for f in range(folds):
-            train_ex = [e for e, g in zip(ex, fold_of) if g != f]
-            test_ex = [e for e, g in zip(ex, fold_of) if g == f]
-            if not train_ex or not test_ex:
-                continue
-            m = train_relation_model(
-                preds, train_ex, epochs=epochs, seed=seed,
-                margin=margin, fs=fs, C=float(c),
-            )
-            rows = [
-                relation_features(toks, None, a1, a2, fs=fs)
-                for toks, a1, a2, _ in test_ex
-            ]
-            s = m._score_rows(rows).max(axis=1)  # best detector score
-            for (_, _, _, pos), sc in zip(test_ex, s):
-                if pos is not None:
-                    if sc > 0:
-                        tp += 1
-                    else:
-                        fn += 1
-                else:
-                    if sc > 0:
-                        fp += 1
-                    else:
-                        tn += 1
-        tpr = tp / (tp + fn) if tp + fn else 0.0
-        tnr = tn / (tn + fp) if tn + fp else 0.0
-        denom = beta * beta * tnr + tpr
-        fscore = (1 + beta * beta) * tpr * tnr / denom if denom else 0.0
-        if fscore > best_f:
-            best_f, best_c = fscore, float(c)
-    return best_c * (folds - 1.0) / folds
+    for d, pred in enumerate(preds):
+        labels = [1.0 if pos == pred else -1.0 for _, _, _, pos in examples]
+        w, bias, _ = brdt_train(
+            samples,
+            labels,
+            num_pos=labels.count(1.0),
+            beta=beta,
+            auto_tune=auto_tune,
+            C_override=C,
+        )
+        Ws[d] = w[:HR]
+        Wd[d] = w[HR:]
+        b[d] = -bias
+    return RelationModel(preds, Ws, Wd, b, fingerprint=fs.fingerprint)

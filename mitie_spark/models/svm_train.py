@@ -65,8 +65,6 @@ __all__ = [
     "evaluate_segmenter",
     "cross_validate_segmenter",
     "tune_segmenter_params",
-    "compute_fscore",
-    "tune_classifier_C",
     "train_chunk_classifier_svm",
 ]
 
@@ -141,8 +139,8 @@ def train_segmenter_svm(
     return_info: bool = False,
 ):
     """Structured-SVM segmenter (Pegasos on the dlib objective). Returns
-    (W, T) like ``train_segmenter``; with ``return_info`` also returns a
-    dict with epochs_run and the final primal objective estimate."""
+    (W, T) in NerModel layout; with ``return_info`` also returns a dict
+    with epochs_run and the final primal objective estimate."""
     fs = fs or DEFAULT_FS
     ns, allowed, start_ok, end_ok, encode, _ = _layout(use_bio)
     lv = loss_values(use_bio, loss_per_missed_segment)
@@ -420,94 +418,6 @@ def tune_segmenter_params(
         # ner_trainer.cpp:555-560 — optimization ran too long: defaults
         return 20.0, 3.0, float(cache.get((20.0, 30.0), 0.0))
     return float(x[0]), float(x[1]) / LOSS_SCALE, float(best)
-
-
-def compute_fscore(res: np.ndarray, num_labels: int, beta: float = 0.5):
-    """F-beta from a confusion matrix res[truth, pred] with the reference's
-    exact semantics (ner_trainer.cpp:311-327): predictions with label ≥
-    num_labels are "not an entity" and are excluded from the precision
-    denominator; micro P/R over the entity classes."""
-    res = np.asarray(res, dtype=float)
-    correct = np.trace(res[:num_labels, :num_labels])
-    total_pred = res[:, :num_labels].sum()
-    total_truth = res[:num_labels, :].sum()
-    precision = correct / total_pred if total_pred else 0.0
-    recall = correct / total_truth if total_truth else 0.0
-    denom = beta * beta * precision + recall
-    if denom == 0:
-        return 0.0
-    return (1 + beta * beta) * precision * recall / denom
-
-
-def tune_classifier_C(
-    examples,
-    num_labels: int,
-    folds: int = 2,
-    beta: float = 0.5,
-    min_C: float = 0.01,
-    max_C: float = 5000.0,
-    max_evals: int = 100,
-    epochs: int = 6,
-    seed: int = 99,
-):
-    """1-D search over C maximizing k-fold CV F-beta of the chunk
-    classifier through the PORTED dlib find_max_single_variable
-    (models/bobyqa.py) with the reference's exact calling convention
-    (ner_trainer.cpp:381-395): start C=300, bounds [0.01, 5000], eps=1,
-    max_iter=100, initial_search_radius=100; on
-    optimize_single_variable_failure fall back to C=300, exactly as the
-    reference's catch block does.  Returns (best_C, best_fscore)."""
-    from mitie_spark.models.ner_model import (
-        chunk_features,
-        score_feature_rows,
-        train_chunk_classifier,
-    )
-
-    exs = list(examples)
-    rng = np.random.default_rng(seed)
-    order = rng.permutation(len(exs))
-    k = num_labels + 1
-
-    def cv_score(C):
-        res = np.zeros((k, k))
-        for fold in range(folds):
-            test_idx = set(order[fold::folds].tolist())
-            train = [exs[i] for i in range(len(exs)) if i not in test_idx]
-            test = [exs[i] for i in sorted(test_idx)]
-            if not train or not test:
-                continue
-            Ws, Wd, b = train_chunk_classifier(
-                train, epochs=epochs, n_classes=k, C=C
-            )
-            rows = [
-                chunk_features(tokens, sentence_matrix(tokens), s, e)
-                for tokens, s, e, _ in test
-            ]
-            preds = np.argmax(score_feature_rows(rows, Ws, Wd, b), axis=1)
-            for (_, _, _, y), pred in zip(test, preds):
-                res[y, pred] += 1
-        return compute_fscore(res, num_labels, beta)
-
-    from mitie_spark.models.bobyqa import (
-        OptimizeSingleVariableFailure,
-        find_max_single_variable,
-    )
-
-    cache: dict[float, float] = {}
-
-    def f(C):
-        if C not in cache:
-            cache[C] = cv_score(float(C))
-        return cache[C]
-
-    try:
-        best_C, best_f = find_max_single_variable(
-            f, 300.0, min_C, max_C, 1.0, max_evals, 100.0
-        )
-    except OptimizeSingleVariableFailure:
-        # ner_trainer.cpp:389-393 — ran too long: C = 300
-        return 300.0, float(cache.get(300.0, 0.0))
-    return float(best_C), float(best_f)
 
 
 def train_chunk_classifier_svm(

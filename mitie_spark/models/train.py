@@ -17,16 +17,15 @@ import argparse
 import json
 import os
 import random
+import time
 
 from mitie_spark.corpus import PREDS, make_sentence
-from mitie_spark.models.ner_model import (
-    NOT_ENTITY,
-    NerModel,
-    TAGS,
-    train_chunk_classifier,
-    train_segmenter,
-)
+from mitie_spark.models.ner_model import NOT_ENTITY, NerModel, TAGS
 from mitie_spark.models.relation_model import RelationModel, train_relation_model
+from mitie_spark.models.svm_train import (
+    train_chunk_classifier_svm,
+    train_segmenter_svm,
+)
 from mitie_spark.models.text_categorizer import train_text_categorizer
 
 TAG_ID = {t: i for i, t in enumerate(TAGS)}
@@ -160,33 +159,6 @@ def evaluate(ner: NerModel, rel: RelationModel, n_docs: int, seed: int):
     }
 
 
-def train_word_feature_source(seg_sents, vocab_size=2000, cca_dim=16, morph_dim=8):
-    """T9: train the wordrep CCA word vectors on the training corpus and use
-    them as the NER emission features (the reference's NER consumes the
-    total_word_feature_extractor's vectors — total_word_feature_extractor.h:
-    107-137; trainer analog: tools/wordrep -e, main.cpp:142-149)."""
-    import pandas as pd
-
-    from mitie_spark.models.word_vectors import train_word_vectors
-    from mitie_spark.session import get_spark
-
-    spark = get_spark(master="local[8]")
-    texts = [" ".join(toks) for toks, _ in seg_sents]
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-        "doc_id long, text string",
-    )
-    from mitie_spark.models.ner_model import ShapeAugmentedWordVectors
-
-    wv = train_word_vectors(
-        docs,
-        vocab_size=vocab_size,
-        cca_dim=cca_dim,
-        morph_dim=morph_dim,
-    )
-    return ShapeAugmentedWordVectors(wv)
-
-
 def train_langid(out_dir: str = ARTIFACT_DIR) -> None:
     """Train the char-n-gram NB lang-ID on the synthetic per-language
     corpus and save it as a committed artifact (functions/langid — the
@@ -222,17 +194,22 @@ def train_all(
     out_dir: str = ARTIFACT_DIR,
     n_train_docs: int = 4000,
     seed: int = 4242,
-    use_word_vectors: bool = True,
 ):
+    """Train every committed artifact. NER and relations use the
+    reference's solvers: the structured-SVM segmenter, the OCA chunk
+    classifier and one DCD detector per predicate (ner_trainer.cpp:224-405,
+    binary_relation_detector_trainer.cpp:176-238).  The word-feature source
+    is read from the committed ner_model.npz, so retrained models keep its
+    fingerprint (and the feature space the chunk-feature golden pins)."""
+    fs = NerModel.load(os.path.join(ARTIFACT_DIR, "ner_model.npz")).fs
     os.makedirs(out_dir, exist_ok=True)
     seg_sents, cls_examples, rel_examples = build_training_data(n_train_docs, seed)
-    fs = train_word_feature_source(seg_sents) if use_word_vectors else None
-    W_seg, T_seg = train_segmenter(seg_sents, fs=fs)
-    Ws, Wd, b = train_chunk_classifier(cls_examples, epochs=12, fs=fs)
-    ner = NerModel(W_seg, T_seg, Ws, Wd, b, TAGS, fs=fs)
-    rel = train_relation_model(
-        list(PREDS), rel_examples, epochs=14, margin=2.0, fs=fs
+    W_seg, T_seg = train_segmenter_svm(seg_sents, fs=fs)
+    Ws, Wd, b = train_chunk_classifier_svm(
+        cls_examples, n_classes=NOT_ENTITY + 1, fs=fs
     )
+    ner = NerModel(W_seg, T_seg, Ws, Wd, b, TAGS, fs=fs)
+    rel = train_relation_model(list(PREDS), rel_examples, fs=fs)
     ner.save(os.path.join(out_dir, "ner_model.npz"))
     rel.save(os.path.join(out_dir, "relation_model.npz"))
     cat = train_text_categorizer(build_categorizer_data(800, seed))
@@ -253,7 +230,9 @@ def main():
     ap.add_argument("--train-docs", type=int, default=4000)
     ap.add_argument("--seed", type=int, default=4242)
     args = ap.parse_args()
+    t0 = time.perf_counter()
     _, _, metrics = train_all(args.out, args.train_docs, args.seed)
+    metrics["wall_s"] = round(time.perf_counter() - t0, 1)
     print("METRICS " + json.dumps(metrics))
 
 

@@ -101,47 +101,51 @@ def run_pipeline(
         return read_table(spark, rec["kind"], rec["location"])
 
     # the page count is observed in kg's scan, not counted by a job of
-    # its own; a skipped kg keeps it in its record as input_rows
+    # its own; a skipped kg keeps it in its record as input_rows and opens
+    # no pages (the parquet schema read is a job)
     scanned = Observation("pages")
-    pages = spark.read.parquet(pages_path).observe(
-        scanned, F.count(F.lit(1)).alias("pages")
-    )
 
     # 1. fused extraction behind the html→text invariant, checked on every
     # page, lang-filtered ones included, in the scan that feeds it. The
     # lang test and the check are one CASE, so the optimizer can neither
     # push the lang test below the check nor split them. A bad page fails
     # the write, so kg is not recorded complete and a fixed input re-runs.
-    h2t = register_udf()
-    # null-safe: a NULL html or text must count as a violation, not
-    # silently fall into a NULL comparison
-    ok = (
-        F.col("html").isNotNull()
-        & F.col("text").isNotNull()
-        & (h2t(F.col("html")) == F.col("text"))
-    )
-    keep = (  # extract_kg's lang rule, applied here so every page is checked
-        F.col("lang") == lang
-        if lang is not None and "lang" in pages.columns
-        else F.lit(True)
-    )
-    bad = F.format_string("html→text invariant violated: %s", "url")
-    checked = pages.filter(F.when(ok, keep).otherwise(F.raise_error(bad)))
-    # tasks sized by compute, not input bytes: the corpus compresses ~10x,
-    # so byte-based parquet splits chronically under-partition this
-    # CPU-bound stage (measured 7 tasks on 32 cores = 4x wall; same sizing
-    # rule as queries_kg._kg and bench_scaling)
-    # (parallelism stays out of the config hash: rows are invariant to the
-    # task layout, so resuming under a different --master must not
-    # invalidate a completed extraction)
-    kg_par = spark.sparkContext.defaultParallelism * 4
+    def build_kg():
+        pages = spark.read.parquet(pages_path).observe(
+            scanned, F.count(F.lit(1)).alias("pages")
+        )
+        h2t = register_udf()
+        # null-safe: a NULL html or text must count as a violation, not
+        # silently fall into a NULL comparison
+        ok = (
+            F.col("html").isNotNull()
+            & F.col("text").isNotNull()
+            & (h2t(F.col("html")) == F.col("text"))
+        )
+        keep = (  # extract_kg's lang rule, applied here so every page is checked
+            F.col("lang") == lang
+            if lang is not None and "lang" in pages.columns
+            else F.lit(True)
+        )
+        bad = F.format_string("html→text invariant violated: %s", "url")
+        checked = pages.filter(F.when(ok, keep).otherwise(F.raise_error(bad)))
+        # tasks sized by compute, not input bytes: the corpus compresses
+        # ~10x, so byte-based parquet splits chronically under-partition
+        # this CPU-bound stage (measured 7 tasks on 32 cores = 4x wall; same
+        # sizing rule as queries_kg._kg and bench_scaling)
+        # (parallelism stays out of the config hash: rows are invariant to
+        # the task layout, so resuming under a different --master must not
+        # invalidate a completed extraction)
+        return extract_kg(
+            checked, ner_path, rel_path, lang_filter=None,
+            parallelism=spark.sparkContext.defaultParallelism * 4,
+        )
+
     kg = stage(
         "kg",
         {"extractor_version": 1, "ner": ner_path, "rel": rel_path,
          "lang": lang, "pages": pages_path},
-        lambda: extract_kg(
-            checked, ner_path, rel_path, lang_filter=None, parallelism=kg_par
-        ),
+        build_kg,
         input_rows=lambda: scanned.get["pages"],
     )
     n_pages = report["kg"]["input_rows"]

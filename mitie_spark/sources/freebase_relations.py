@@ -7,9 +7,9 @@ separated, then one discarded separator character, then tab-separated tokens.
 Range validity checks match the C++ (half-open, within the token list).
 
 ``read_freebase_relations`` is the Spark reader (file = unit of
-parallelism); ``train_from_freebase`` feeds the parsed rows to our relation
-trainer, covering the reference's relation-training entry point with our
-from-scratch solver.
+parallelism); ``train_from_freebase`` feeds the parsed rows to the relation
+trainer (models/relation_model.train_relation_model, the ported DCD
+solver), covering the reference's relation-training entry point.
 """
 
 from __future__ import annotations
@@ -108,4 +108,4 @@ def train_from_freebase(
                         (toks, (s1, s1 + 1), (s2, s2 + 1), None)
                     )
                     break
-    return train_relation_model(preds, examples, epochs=10)
+    return train_relation_model(preds, examples)

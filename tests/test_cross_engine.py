@@ -917,7 +917,7 @@ def test_auto_tune_reproduces_cpp_trainer_tuned_params(cpp_tuning_stream):
     import re
 
     from mitie_spark import api
-    from mitie_spark.models import svm_train
+    from mitie_spark.models import oca, svm_train
 
     # --- parse the reference's tuning trace ---
     seg_evals = re.findall(
@@ -936,7 +936,7 @@ def test_auto_tune_reproduces_cpp_trainer_tuned_params(cpp_tuning_stream):
 
     # --- run OUR auto-tune end-to-end, recording what train() receives ---
     seen = {}
-    orig_seg, orig_cls = svm_train.tune_segmenter_params, svm_train.tune_classifier_C
+    orig_seg, orig_cls = svm_train.tune_segmenter_params, oca.tune_multiclass_C
 
     def rec_seg(*a, **k):
         out = orig_seg(*a, **k)
@@ -944,12 +944,13 @@ def test_auto_tune_reproduces_cpp_trainer_tuned_params(cpp_tuning_stream):
         return out
 
     def rec_cls(*a, **k):
+        evals = k.setdefault("evals", [])
         out = orig_cls(*a, **k)
-        seen["cls"] = out
+        seen["cls"] = (out, evals)
         return out
 
     svm_train.tune_segmenter_params = rec_seg
-    svm_train.tune_classifier_C = rec_cls
+    oca.tune_multiclass_C = rec_cls
     try:
         trainer = api.ner_trainer()
         trainer.auto_tune = True
@@ -968,13 +969,13 @@ def test_auto_tune_reproduces_cpp_trainer_tuned_params(cpp_tuning_stream):
         ner = trainer.train()
     finally:
         svm_train.tune_segmenter_params = orig_seg
-        svm_train.tune_classifier_C = orig_cls
+        oca.tune_multiclass_C = orig_cls
 
     my_seg_C, my_seg_loss, my_seg_rec = seen["seg"]
-    my_cls_C, my_cls_f = seen["cls"]
+    my_cls_C, my_cls_evals = seen["cls"]
     # our CV objectives were also constant-1.0 (the trajectory premise)
     assert my_seg_rec == 1.0
-    assert my_cls_f == 1.0
+    assert my_cls_evals and all(f == 1.0 for _, f in my_cls_evals)
     # tuned segmenter params: exact equality (both integers here)
     assert (my_seg_C, my_seg_loss) == (ref_seg_C, ref_seg_loss)
     # tuned classifier C: equality at cout's 6-sigfig print precision

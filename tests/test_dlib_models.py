@@ -226,8 +226,8 @@ def test_bio_segmenter_trains_and_decodes():
         NerModel,
         chunks_to_labels_bio,
         labels_to_chunks_bio,
-        train_segmenter,
     )
+    from mitie_spark.models.svm_train import train_segmenter_svm
 
     assert labels_to_chunks_bio(chunks_to_labels_bio(6, [(1, 3), (4, 5)])) == [
         (1, 3),
@@ -238,7 +238,7 @@ def test_bio_segmenter_trains_and_decodes():
         ("the market closed early".split(), []),
         ("Bob Jones met Alice Smith".split(), [(0, 2), (3, 5)]),
     ] * 4
-    W, T = train_segmenter(sents, epochs=8, use_bio=True)
+    W, T = train_segmenter_svm(sents, use_bio=True)
     model = NerModel(W_seg=W, T_seg=T, use_bio=True)
     for toks, chunks in sents[:3]:
         assert model.segment_batch([model.X(toks)]) == [chunks]
@@ -758,7 +758,8 @@ def test_ner_stream_cli_with_dlib_model(tmp_path):
     import sys
 
     from mitie_spark.functions.hashing import MAX_FEAT
-    from mitie_spark.models.ner_model import NerModel, train_segmenter
+    from mitie_spark.models.ner_model import NerModel
+    from mitie_spark.models.svm_train import train_segmenter_svm
     from mitie_spark.streaming.ner_stream import format_markup
 
     fe = _with_crc(_synthetic_fe())
@@ -768,7 +769,7 @@ def test_ner_stream_cli_with_dlib_model(tmp_path):
         ("Alice visited Bob .".split(), [(0, 1), (2, 3)]),
         ("the . visited the".split(), []),
     ] * 6
-    W_seg, T_seg = train_segmenter(sents, epochs=10, fs=fs)
+    W_seg, T_seg = train_segmenter_svm(sents, fs=fs)
     model = NerModel(
         W_seg=W_seg,
         T_seg=T_seg,

@@ -710,3 +710,45 @@ def test_one_ner_decode_path_and_one_model_format_rule():
             ):
                 found.append(f"{rel}:{node.lineno} defines {node.name}")
     assert not found, found
+
+
+def test_one_trainer_per_model():
+    """The NER segmenter, chunk classifier and relation detectors each
+    have one trainer, the ported reference solver (svm_train, oca, dcd):
+    no module under mitie_spark/ defines one of the deleted perceptron
+    trainers or their C searches, and the api's NER and relation trainers
+    set no ``solver`` switch."""
+    import ast
+    import glob
+    import os
+
+    import mitie_spark
+
+    gone = {
+        "train_segmenter", "train_chunk_classifier", "tune_relation_C",
+        "tune_classifier_C",
+    }
+    one_solver = {"ner_trainer", "binary_relation_detector_trainer"}
+    pkg = os.path.dirname(mitie_spark.__file__)
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and node.name in gone
+            ):
+                found.append(f"{rel}:{node.lineno} defines {node.name}")
+            if isinstance(node, ast.ClassDef) and node.name in one_solver:
+                for sub in ast.walk(node):
+                    if (
+                        isinstance(sub, ast.Attribute)
+                        and sub.attr == "solver"
+                        and isinstance(sub.ctx, ast.Store)
+                    ):
+                        found.append(
+                            f"{rel}:{sub.lineno} {node.name} sets .solver"
+                        )
+    assert not found, found

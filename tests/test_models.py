@@ -59,6 +59,32 @@ def test_trained_models_meet_parity_target():
     assert m["triple_recall"] >= 0.95, m
 
 
+def test_train_all_svm_stack_meets_planted_truth(tmp_path):
+    """train_all trains with the SVM stack (structured-SVM segmenter, OCA
+    chunk classifier, DCD relation detectors) on the word-feature source
+    read from the committed ner_model.npz: the artifacts it writes keep
+    that source's fingerprint and read P=R=1.0 on held-out docs. 190
+    training docs is the smallest size that reaches it (175 reads mention
+    precision 0.93); 200 keeps one step of margin."""
+    import os
+
+    from mitie_spark.models.ner_model import NerModel
+    from mitie_spark.models.relation_model import RelationModel
+    from mitie_spark.models.train import evaluate, train_all
+
+    train_all(out_dir=str(tmp_path), n_train_docs=200)
+    ner = NerModel.load(os.path.join(tmp_path, "ner_model.npz"))
+    rel = RelationModel.load(os.path.join(tmp_path, "relation_model.npz"))
+    assert ner.fs.fingerprint == rel.fingerprint == 2492544235
+    m = evaluate(ner, rel, n_docs=300, seed=999)
+    assert m == {
+        "mention_precision": 1.0,
+        "mention_recall": 1.0,
+        "triple_precision": 1.0,
+        "triple_recall": 1.0,
+    }
+
+
 def test_batched_segmentation_matches_per_doc():
     """extract_documents_batch is batch-invariant: on real corpus docs
     (incl. empty and 1-token texts) each document's result equals that
@@ -195,36 +221,3 @@ def test_prefix_suffix_sign_extension():
     )
     # pure ASCII unchanged
     assert prefix("abc", 7) == murmur_hash3_128_u32x4(97, 98, 99, 7)
-
-
-def test_train_segmenter_plateau_stop_on_nonseparable():
-    """max_iterations maps the reference's 2000 OCA rounds onto perceptron
-    epochs; on NON-separable labels the eps mistake-rate stop never fires,
-    so the plateau stop must bound the run (it used to spin all 2000
-    Viterbi epochs)."""
-    import time
-
-    from mitie_spark.models.ner_model import train_segmenter
-
-    sents = []
-    for i in range(30):
-        toks = ["alpha", "beta", "gamma", "delta"]
-        sents.append((toks, [(1, 3)] if i % 2 == 0 else []))
-    t = time.time()
-    W, T = train_segmenter(sents, max_iterations=2000, eps=0.01)
-    # ~0.02s with the stop; the full 2000-epoch run measures ~3.1s on
-    # this host, so 1.0s actually discriminates (5.0 would not)
-    assert time.time() - t < 1.0
-    assert W.shape[0] in (3, 5) and T.shape[0] == W.shape[0]
-    # eps=None = explicit epoch count: the plateau stop must NOT engage
-    # (equal-best epochs would truncate the averaging run)
-    import numpy as np
-
-    from mitie_spark.models.ner_model import train_segmenter as _ts
-
-    sep = [(["acme", "corp", "ltd"], [(0, 2)])] * 4
-    w20, t20 = _ts(sep, epochs=20)
-    w20b, t20b = _ts(sep, epochs=20)
-    assert np.array_equal(w20, w20b) and np.array_equal(t20, t20b)
-    w13, _ = _ts(sep, epochs=13)
-    assert not np.array_equal(w20, w13)  # epochs 14-20 really ran

@@ -206,7 +206,8 @@ def test_extract_kg_accepts_dlib_artifacts(tmp_path, spark):
     import pandas as pd
 
     from mitie_spark.functions.hashing import MAX_FEAT
-    from mitie_spark.models.ner_model import NerModel, train_segmenter
+    from mitie_spark.models.ner_model import NerModel
+    from mitie_spark.models.svm_train import train_segmenter_svm
     from mitie_spark.operators.extraction import extract_kg
     from mitie_spark.sources.dlib_models import (
         DlibTotalWordFeatureExtractor,
@@ -225,7 +226,7 @@ def test_extract_kg_accepts_dlib_artifacts(tmp_path, spark):
         ("Bob visited Alice .".split(), [(0, 1), (2, 3)]),
         ("the . visited the".split(), []),
     ] * 5
-    W_seg, T_seg = train_segmenter(sents, epochs=10, fs=fs)
+    W_seg, T_seg = train_segmenter_svm(sents, fs=fs)
     # constant chunk classifier: every segmented chunk is a PERSON (class 0
     # strictly beats the not-entity class)
     model = NerModel(

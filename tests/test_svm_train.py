@@ -6,7 +6,7 @@ by the GOLD label (structural_svm_sequence_labeling_problem.h:232-240),
 loss_values = loss_per_missed_segment on in-segment labels / 1 on OUTSIDE
 (structural_sequence_segmentation_trainer.h:158-170), objective
 0.5||w||² + (C/N)Σξ, and the BOBYQA/CV tuning loops (compute_fscore per
-ner_trainer.cpp:311-327)."""
+ner_trainer.cpp:311-327, the one copy in models/oca.py)."""
 
 import numpy as np
 import pytest
@@ -20,15 +20,14 @@ from mitie_spark.models.ner_model import (
     N_STATES,
     chunks_to_labels,
 )
+from mitie_spark.models.oca import compute_fscore
 from mitie_spark.models.svm_train import (
     _augmented_emissions,
-    compute_fscore,
     cross_validate_segmenter,
     evaluate_segmenter,
     loss_values,
     train_segmenter_svm,
     train_segmenter_svm_spark,
-    tune_classifier_C,
     tune_segmenter_params,
 )
 
@@ -175,28 +174,10 @@ def test_compute_fscore_reference_semantics():
     assert compute_fscore(res, num_labels=2, beta=beta) == pytest.approx(expect)
 
 
-def test_tune_classifier_C_runs_and_bounds():
-    rng = np.random.default_rng(3)
-    exs = []
-    for _ in range(30):
-        toks = [str(t) for t in rng.choice(FILL, size=6)]
-        name = str(rng.choice(NAMES))
-        toks[2] = name
-        # label 0 = "name-like chunk", 1 = not-entity
-        exs.append((toks, 2, 3, 0))
-        exs.append((toks, 4, 5, 1))
-    C, f = tune_classifier_C(
-        exs, num_labels=1, folds=2, max_evals=40, epochs=3
-    )
-    assert 0.01 <= C <= 5000.0
-    assert 0.0 <= f <= 1.0
-
-
 def test_api_svm_solver_end_to_end():
     from mitie_spark import api
 
     trainer = api.ner_trainer()
-    trainer.solver = "svm"
     trainer.max_iterations = 120
     rng = np.random.default_rng(11)
     for _ in range(14):

@@ -1,42 +1,10 @@
-"""Text categorizer (M5) + language-ID / quality scoring tests."""
+"""Text categorizer (M5) + trained language-ID tests."""
 
 import os
 
 import pytest
 
-from mitie_spark.functions.text_quality import (
-    count_tokens_bpe_ish,
-    lang_id,
-    quality_score,
-)
 from mitie_spark.models.train import ARTIFACT_DIR
-
-
-def test_lang_id_heuristic():
-    assert lang_id("the cat sat on the mat and it was happy")[0] == "en"
-    assert lang_id("der Hund ist mit der Katze und das ist gut")[0] == "de"
-    assert lang_id("el perro y el gato en la casa es bueno")[0] == "es"
-    assert lang_id("le chien est dans la maison et il est content")[0] == "fr"
-    assert lang_id("这是一个中文句子，用来测试语言识别功能。")[0] == "zh"
-    assert lang_id("")[0] == "und"
-    assert lang_id("xyzzy qwerty plugh")[0] == "und"
-
-
-def test_quality_score():
-    good = quality_score(
-        "The quick brown fox jumps over the lazy dog and then runs "
-        "through the quiet forest to find some food for the winter."
-    )
-    junk = quality_score("!!! ??? *** $$$ ### @@@ %%%")
-    empty = quality_score("")
-    assert good["quality"] > junk["quality"]
-    assert empty["quality"] == 0.0
-    assert good["stop_ratio"] > 0.2
-
-
-def test_count_tokens_bpe_ish():
-    assert count_tokens_bpe_ish("ab1 cd-2") == 5  # ab,1,cd,-,2
-    assert count_tokens_bpe_ish("") == 0
 
 
 def test_text_categorizer_roundtrip_and_unseen(tmp_path):

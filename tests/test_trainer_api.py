@@ -124,11 +124,11 @@ def test_text_categorizer_trainer(tmp_path):
 def test_trainer_hyperparameter_surface_affects_solver():
     """The reference solver's knobs (ner_trainer.cpp:498-572: C, eps,
     max-iter, loss-per-missed-segment; classifier C :360-405) exist on the
-    facade and genuinely change the trained weights."""
+    facade and genuinely change the structured-SVM segmenter's weights."""
     import numpy as np
 
     from mitie_spark.api import ner_trainer
-    from mitie_spark.models.ner_model import train_segmenter
+    from mitie_spark.models.svm_train import train_segmenter_svm
 
     t = ner_trainer("ignored")
     for knob, default in [
@@ -137,33 +137,41 @@ def test_trainer_hyperparameter_surface_affects_solver():
         ("beta", 0.5), ("num_threads", 4),
     ]:
         assert getattr(t, knob) == default
+    assert not hasattr(t, "solver")
 
     sents = [
         ("Alice Smith visited Boston today".split(), [(0, 2), (3, 4)]),
         ("the market closed early".split(), []),
         ("Bob Jones met Alice Smith".split(), [(0, 2), (3, 5)]),
     ] * 3
-    base = train_segmenter(sents, epochs=4)
-    strong_reg = train_segmenter(sents, epochs=4, C=1.01)
+    base = train_segmenter_svm(sents, max_iterations=4, eps=0.0)
+    strong_reg = train_segmenter_svm(sents, max_iterations=4, eps=0.0, C=1.01)
     assert not np.allclose(base[0], strong_reg[0])  # C affects weights
-    upweighted = train_segmenter(sents, epochs=4, loss_per_missed_segment=9.0)
+    upweighted = train_segmenter_svm(
+        sents, max_iterations=4, eps=0.0, loss_per_missed_segment=9.0
+    )
     assert not np.allclose(base[0], upweighted[0])
-    one_epoch = train_segmenter(sents, max_iterations=1)
-    many = train_segmenter(sents, max_iterations=6)
-    assert not np.allclose(one_epoch[0], many[0])  # max_iterations caps epochs
-    # eps=1.0 stops after the first epoch (mistake rate is always <= 1)
-    early = train_segmenter(sents, max_iterations=6, eps=1.0)
-    assert np.allclose(early[0], one_epoch[0])
+    one_epoch = train_segmenter_svm(sents, max_iterations=1)
+    assert not np.allclose(one_epoch[0], base[0])  # max_iterations caps epochs
+    # the eps stop compares two epochs' objectives, so a huge eps stops
+    # after the second epoch, before the max_iterations cap
+    W, T, info = train_segmenter_svm(
+        sents, max_iterations=6, eps=1e9, return_info=True
+    )
+    two = train_segmenter_svm(sents, max_iterations=2, eps=0.0)
+    assert info["epochs_run"] == 2
+    assert np.array_equal(W, two[0]) and np.array_equal(T, two[1])
 
 
-def test_relation_trainer_auto_tune_cv(trained_ner):
-    """auto_tune mirrors the reference's 6-fold CV C search
-    (binary_relation_detector_trainer.cpp:176-238): deterministic,
-    C lands inside the reference's [1/n, 1e5/n]·(5/6) bounds, skipped
-    when positives <= folds, and the tuned detector still separates the
-    planted relation."""
+def test_relation_trainer_auto_tune_cv(trained_ner, monkeypatch):
+    """auto_tune runs the reference's 6-fold CV C search
+    (binary_relation_detector_trainer.cpp:176-238) inside
+    train_relation_model: deterministic, C lands inside the reference's
+    [1/n, 1e5/n]·(5/6) bounds, no search when positives <= folds, and the
+    tuned detector still separates the planted relation."""
     from mitie_spark.api import binary_relation_detector_trainer
-    from mitie_spark.models.relation_model import tune_relation_C
+    from mitie_spark.models import bobyqa, dcd
+    from mitie_spark.models.relation_model import train_relation_model
 
     trainer = binary_relation_detector_trainer("test.born_in", trained_ner)
     examples = []
@@ -181,15 +189,37 @@ def test_relation_trainer_auto_tune_cv(trained_ner):
                 examples.append((toks, by_idx[oi], by_idx[si], None))
     assert trainer.num_positive_examples > 6
 
-    fs = trained_ner._model.fs
-    c1 = tune_relation_C(["test.born_in"], examples, fs=fs)
-    c2 = tune_relation_C(["test.born_in"], examples, fs=fs)
-    assert c1 == c2  # deterministic search
-    n = len(examples)
-    assert (1.0 / n) * (5.0 / 6.0) <= c1 <= (100000.0 / n) * (5.0 / 6.0)
+    chosen_C, searches = [], []
+    brdt_train, find_max_bobyqa = dcd.brdt_train, bobyqa.find_max_bobyqa
 
-    # <= folds positives: the reference skips the search; so do we
-    assert tune_relation_C(["r"], examples[:10], fs=fs) is None
+    def rec_train(*a, **kw):
+        out = brdt_train(*a, **kw)
+        chosen_C.append(out[2])
+        return out
+
+    def rec_search(*a, **kw):
+        searches.append(1)
+        return find_max_bobyqa(*a, **kw)
+
+    monkeypatch.setattr(dcd, "brdt_train", rec_train)
+    monkeypatch.setattr(bobyqa, "find_max_bobyqa", rec_search)
+
+    fs = trained_ner._model.fs
+    m1 = train_relation_model(["test.born_in"], examples, fs=fs, auto_tune=True)
+    assert searches
+    m2 = train_relation_model(["test.born_in"], examples, fs=fs, auto_tune=True)
+    assert chosen_C[0] == chosen_C[1]  # deterministic search
+    assert (m1.W_sparse == m2.W_sparse).all() and (m1.b == m2.b).all()
+    n = len(examples)
+    for c in chosen_C[0]:
+        assert (1.0 / n) * (5.0 / 6.0) <= c <= (100000.0 / n) * (5.0 / 6.0)
+
+    # <= folds positives: the reference skips the search; so do we, and
+    # C stays its untuned 5000/n·(5/6)
+    del searches[:]
+    train_relation_model(["test.born_in"], examples[:10], fs=fs, auto_tune=True)
+    assert not searches
+    assert chosen_C[-1] == pytest.approx((5000.0 / 10 * 5 / 6,) * 2)
 
     trainer.auto_tune = True
     det = trainer.train()
@@ -204,14 +234,13 @@ def test_relation_trainer_auto_tune_cv(trained_ner):
 
 
 def test_ner_trainer_svm_solver_chunk_classifier():
-    """solver="svm" trains the chunk classifier with the OCA multiclass
-    port (the reference's exact flow) and still learns the planted
-    entities.  Determinism and bit-parity of the solver live in
+    """ner_trainer trains the chunk classifier with the OCA multiclass
+    port (the reference's exact flow) and learns the planted entities
+    from 20 sentences.  Determinism and bit-parity of the solver live in
     tests/test_oca.py (goldens) and tests/test_cross_engine.py."""
     from mitie_spark.api import ner_trainer, ner_training_instance
 
     trainer = ner_trainer()
-    trainer.solver = "svm"
     for toks, ments, _ in _sentences(20, seed=11):
         inst = ner_training_instance(toks)
         for s, e, tag, _surf in ments:
