@@ -13,7 +13,8 @@ vertex its label's own label. Rounds needed: O(log(diameter)). Each round is
 one join + min-aggregate over the edge list and one window keyed by label.
 The loop runs on webgraph._iterate with AQE off, so a skewed high-degree
 vertex (a celebrity alias) is not split across tasks inside it; the driver
-path covers graphs up to DRIVER_MAX_EDGES edges. For 10^12-scale graphs the
+path covers graphs up to webgraph.DRIVER_MAX_EDGES edges, the one size gate
+(``webgraph._probe``) it shares with float PageRank. For 10^12-scale graphs the
 same loop applies with edges bucketed by src; no driver-side state except
 the convergence test.
 """
@@ -22,38 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
-from mitie_spark.operators.webgraph import _iterate
-
-# Edge lists up to this size are solved on the driver; larger ones run the
-# distributed loop. Tests set it to 0 to force the distributed loop.
-DRIVER_MAX_EDGES = 200_000
-
-
-def _probe(e: DataFrame):
-    """The size gate, one job: under the limit the rows ARE the edge list.
-    Above it, None, and ``e`` stays persisted for the loop to take over,
-    so the loop does not re-run the upstream (e.g. LSH blocking)."""
-    e.persist()
-    rows = e.limit(DRIVER_MAX_EDGES + 1).collect()
-    if len(rows) > DRIVER_MAX_EDGES:
-        return None
-    e.unpersist(blocking=False)
-    return rows
-
-
-def _driver_frame(e: DataFrame, rows, cols) -> DataFrame:
-    """Driver-side rows as a frame of ``e``'s vertex id type, through the
-    Arrow path: a plain list goes through the pickle serializer, whose
-    worker pool is separate from the warm Arrow one."""
-    import pandas as pd
-
-    id_type = e.schema["a"].dataType
-    schema = StructType([StructField(c, id_type) for c in cols])
-    pdf = pd.DataFrame(rows, columns=cols)
-    return e.sparkSession.createDataFrame(pdf, schema)
+from mitie_spark.operators.webgraph import _driver_frame, _iterate, _probe
 
 
 def _relabel_loop(e: DataFrame, update, max_iter: int, col: str) -> DataFrame:
@@ -87,9 +59,9 @@ def connected_components(
     small enough to broadcast is solved with driver-side union-find — the
     distributed loop costs O(log diameter) scheduled rounds, which dominates
     wall time for dedup-group-sized graphs — while anything above
-    ``DRIVER_MAX_EDGES`` edges runs the shuffle-join min-label loop on
-    webgraph._iterate, until no label changes. The small path costs one
-    job, the size probe."""
+    ``webgraph.DRIVER_MAX_EDGES`` edges runs the shuffle-join min-label loop on
+    webgraph._iterate, until no label changes. The small path costs only
+    the size probe's collect."""
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())

@@ -22,10 +22,14 @@ one narrow pass over the pages table with column pruning down to
 shuffle keyed by ``dst`` plus a broadcast-size teleport term; ranks and
 edges co-partition by key. The loop runs with AQE off (one job per
 lineage cut, see ``_iterate``), so AQE's skew-join split does not act on
-high-in-degree hosts inside it. The integer-quantized variant exists for
-the cross-engine gate (bit-exact under ANY summation order); production
-ranking at web scale uses the float variant (integer mode documents its
-no-overflow bound: ``damp * scale * max_edge_weight < 2**63``).
+high-in-degree hosts inside it. The float variant takes the size gate
+of the graph module's operators (``DRIVER_MAX_EDGES``, ``_probe``, both
+defined here): an edge list under it is collected by the size probe
+and iterated on the driver, and the loop runs only above it. The
+integer-quantized variant exists for the cross-engine gate (bit-exact
+under ANY summation order); production ranking at web scale uses the
+float variant (integer mode documents its no-overflow bound:
+``damp * scale * max_edge_weight < 2**63``).
 """
 
 from __future__ import annotations
@@ -266,6 +270,45 @@ def _nodes(edges: DataFrame) -> DataFrame:
     )
 
 
+# Edge lists up to this size are solved on the driver (connected
+# components, chinese whispers, float PageRank); larger ones run the
+# distributed loop on _iterate. Tests set it to 0 to force the loop.
+DRIVER_MAX_EDGES = 200_000
+
+
+def _probe(e: DataFrame):
+    """The size gate, one limit-collect: under the limit the rows ARE the
+    edge list. Above it, None, and ``e`` stays persisted for the loop to
+    take over, so the loop does not re-run the upstream (e.g. LSH
+    blocking). The collect is Spark's incremental take: one job for the
+    first partition, then one per round that scans 4x as many (2 jobs on
+    a 2-5 partition edge list); it stops once it holds the limit, so a
+    large graph is not scanned in full to be rejected."""
+    e.persist()
+    rows = e.limit(DRIVER_MAX_EDGES + 1).collect()
+    if len(rows) > DRIVER_MAX_EDGES:
+        return None
+    e.unpersist(blocking=False)
+    return rows
+
+
+def _driver_frame(e: DataFrame, rows, cols, value_type=None) -> DataFrame:
+    """Driver-side rows as a frame whose columns ``cols`` have the type of
+    the edge list ``e``'s first column, its vertex id (the last one
+    ``value_type`` instead, when given), through the Arrow path: a plain
+    list goes through the pickle serializer, whose worker pool is
+    separate from the warm Arrow one."""
+    import pandas as pd
+    from pyspark.sql.types import StructField, StructType
+
+    types = [e.schema.fields[0].dataType] * len(cols)
+    if value_type is not None:
+        types[-1] = value_type
+    schema = StructType([StructField(c, t) for c, t in zip(cols, types)])
+    pdf = pd.DataFrame(rows, columns=cols)
+    return e.sparkSession.createDataFrame(pdf, schema)
+
+
 def _iterate(invariants, state0, step, iters, cut_every, finish, until=None):
     """The one eager lifecycle of the iterative graph operators.
 
@@ -391,6 +434,38 @@ def pagerank_integer(
     )
 
 
+def _pagerank_driver(rows, iters, damping):
+    """_pagerank's float recurrence on a collected (src, dst, weight) edge
+    list, with numpy -> [(node, rank)].
+
+    The loop's NULL rules hold: a NULL id is one node, which no edge
+    reaches (the loop's node join never matches NULL); a row with a NULL
+    src or weight moves no mass, and a NULL dst's share leaks. Nodes are
+    indexed in sorted id order and the edges summed in (src, dst, weight)
+    order, so the ranks do not depend on the order the rows arrive in."""
+    import numpy as np
+
+    ids = {v for s, d, _ in rows for v in (s, d)}
+    nodes = sorted(ids - {None}) + [None] * (None in ids)
+    n = len(nodes)
+    if not n:
+        return []
+    idx = {v: i for i, v in enumerate(nodes)}
+    live = sorted(  # a NULL dst sums into bin n, past the last node
+        (idx[s], n if d is None else idx[d], float(w))
+        for s, d, w in rows
+        if s is not None and w is not None
+    )
+    e = np.array(live, dtype=np.float64).reshape(-1, 3)
+    src, dst, w = e[:, 0].astype(np.intp), e[:, 1].astype(np.intp), e[:, 2]
+    out_w = np.bincount(src, weights=w, minlength=n)
+    r = np.full(n, 1.0 / n)
+    for _ in range(iters):
+        c = damping * r[src] * w / out_w[src]
+        r = (1.0 - damping) / n + np.bincount(dst, weights=c, minlength=n + 1)[:n]
+    return list(zip(nodes, r.tolist()))
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 10,
@@ -398,12 +473,27 @@ def pagerank(
 ) -> DataFrame:
     """Float PageRank (production variant) -> (node, rank: double).
 
-    Same plan as pagerank_integer; ranks sum to <= 1.0 (dangling mass
-    leaks, see _pagerank). Use this at real web scale where edge weights
-    would overflow the integer gate variant.
+    Size-gated like graph.connected_components (the standard
+    broadcast-cutoff pattern): the size probe collects an edge list of at
+    most DRIVER_MAX_EDGES rows, and the driver runs the same recurrence
+    on it with numpy (_pagerank_driver), since the loop's planning,
+    per-pass jobs and result checkpoint dominate wall time on small
+    graphs. A larger edge list stays persisted and runs _pagerank's
+    shuffle loop, the plan of pagerank_integer. Ranks sum to <= 1.0
+    (dangling mass leaks, see _pagerank). Use this at real web scale
+    where edge weights would overflow the integer gate variant.
     """
+    from pyspark.sql.types import DoubleType
+
+    e = edges.select("src", "dst", "weight")
+    rows = _probe(e)
+    if rows is not None:
+        return _driver_frame(
+            e, _pagerank_driver(rows, iters, damping), ["node", "rank"],
+            DoubleType(),
+        )
     return _pagerank(
-        edges, iters, F.lit(1.0) / F.col("n_nodes"),
+        e, iters, F.lit(1.0) / F.col("n_nodes"),
         F.lit(damping) * F.col("r") * F.col("weight") / F.col("out_w"),
         F.lit(1.0 - damping) / F.col("n_nodes"), F.lit(0.0), "rank",
     )

@@ -18,7 +18,14 @@ files (before, both described the Spark partitions of a re-read). For
 parquet a file is its path under out_path and its rows are read on the
 driver from its footer; for Iceberg both come from the table's ``files``
 metadata table. Files that hold other than the observed count fail the
-stage before its record is written."""
+stage before its record is written.
+
+A parquet stage's record also carries ``schema``, the reopened table's
+schema as inference would give it (``catalog.reopen_schema``: data
+columns, then partition columns), so the pipeline reopens the stage
+without the Spark job that parquet schema inference runs. A record
+without it, written before it was recorded, reopens by inference; the
+field is not part of the config hash, so such an output still resumes."""
 
 from __future__ import annotations
 
@@ -31,7 +38,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from mitie_spark.sources.catalog import read_table, write_table
+from mitie_spark.sources.catalog import read_table, reopen_schema, write_table
 
 
 def config_hash(conf: dict) -> str:
@@ -109,6 +116,8 @@ def write_stage(
         "partition_histogram": part_hist,
         "wall_sec": round(time.time() - started, 3),
     }
+    if kind == "parquet":
+        rec["schema"] = reopen_schema(df, partition_by)
     with open(_lineage_path(out_path), "w") as f:
         json.dump(rec, f, indent=1)
     return rec

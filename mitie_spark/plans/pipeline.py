@@ -17,7 +17,8 @@ written only when a consumer reads it:
    component per canonical_id;
 5. triples — canonical (subj_id, pred, obj_id) edges with counts
    (skew-resistant two-phase aggregate), partitioned by pred;
-6. entity_rank — PageRank salience over the canonical triple graph.
+6. entity_rank — PageRank salience over the canonical triple graph,
+   solved on the driver under the graph size gate (webgraph.pagerank).
 
 Cluster launch (real deployment; add the iceberg-spark-runtime package and
 a spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog conf to
@@ -98,7 +99,8 @@ def run_pipeline(
                 catalog=catalog,
             )
         report[name] = {**rec, "skipped": skipped}
-        return read_table(spark, rec["kind"], rec["location"])
+        # a record written before schemas were recorded reopens by inference
+        return read_table(spark, rec["kind"], rec["location"], rec.get("schema"))
 
     # the page count is observed in kg's scan, not counted by a job of
     # its own; a skipped kg keeps it in its record as input_rows and opens
@@ -230,9 +232,12 @@ def run_pipeline(
     # The KG consumer's first ranking signal ("which entities matter"):
     # float production variant (entity graphs at crawl scale overflow the
     # integer gate variant's bound), 5 iterations, evidence-weighted
-    # edges. Same iterative shape as the gated host PageRank — one
-    # dst-keyed shuffle per iteration, invariants persisted, lineage cut
-    # before write (pagerank localCheckpoints its result).
+    # edges. Under webgraph.DRIVER_MAX_EDGES edges the size probe
+    # collects the edge list and the driver iterates it in sorted
+    # node order, so a rebuild writes the same bytes; above the gate it
+    # runs the gated host PageRank's shuffle loop (one dst-keyed shuffle
+    # per pass, result localCheckpointed before the write), whose float
+    # sums follow Spark's partition order.
     def build_entity_rank():
         from mitie_spark.operators.webgraph import pagerank
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _catalog_from_items(items) -> str | None:
@@ -72,7 +73,25 @@ def write_table(
     return ("parquet", out_path)
 
 
-def read_table(spark: SparkSession, kind: str, location: str) -> DataFrame:
+def reopen_schema(df: DataFrame, partition_by: list[str] | None = None) -> dict:
+    """``df``'s schema in the column order a parquet reopen of its write
+    gives, as JSON: data columns first, then partition columns. Spark
+    reads every field of it as nullable, as inference does; a partition
+    column keeps its written type, where inference guesses one from the
+    directory names."""
+    parts = partition_by or []
+    fields = [f for f in df.schema.fields if f.name not in parts]
+    return StructType(fields + [df.schema[p] for p in parts]).jsonValue()
+
+
+def read_table(
+    spark: SparkSession, kind: str, location: str, schema: dict | None = None
+) -> DataFrame:
+    """Reopen a stage. ``schema`` (parquet only, from ``reopen_schema``)
+    spares the Spark job that parquet schema inference runs."""
     if kind == "iceberg":
         return spark.table(location)
-    return spark.read.parquet(location)
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(location)

@@ -23,7 +23,7 @@ def _union_find_components(edges, vertices):
 
 
 def test_connected_components_random_graph(spark, monkeypatch):
-    from mitie_spark.operators import graph
+    from mitie_spark.operators import graph, webgraph
 
     rng = random.Random(5)
     n = 300
@@ -37,7 +37,7 @@ def test_connected_components_random_graph(spark, monkeypatch):
     assert got == truth
     # distributed min-label-propagation path must agree with the driver
     # union-find path (a gate of 0 forces the shuffle-join loop)
-    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(webgraph, "DRIVER_MAX_EDGES", 0)
     got_dist = {r.id: r.comp for r in graph.connected_components(df).collect()}
     assert got_dist == truth
 
@@ -167,7 +167,7 @@ def test_chinese_whispers_shuffle_loop_matches_driver_loop(spark, monkeypatch):
     shuffle-join loop; it must give the driver loop's clusters, on the
     two-clique graph and on a seeded random graph whose integer weights
     make every weight sum exact (so argmax ties break identically)."""
-    from mitie_spark.operators import graph
+    from mitie_spark.operators import graph, webgraph
 
     rng = random.Random(17)
     two_cliques = [
@@ -189,7 +189,7 @@ def test_chinese_whispers_shuffle_loop_matches_driver_loop(spark, monkeypatch):
 
         driver = clusters()
         with monkeypatch.context() as m:
-            m.setattr(graph, "DRIVER_MAX_EDGES", 0)
+            m.setattr(webgraph, "DRIVER_MAX_EDGES", 0)
             assert clusters() == driver
 
 

@@ -519,8 +519,9 @@ def test_kmv_ignores_null_values(spark):
 @pytest.mark.parametrize(
     "op",
     [
-        "pagerank", "pagerank_integer", "hits_integer", "bfs_depths_integer",
-        "label_propagation", "kcore_flags", "transitive_closure",
+        "pagerank", "pagerank_loop", "pagerank_integer", "hits_integer",
+        "bfs_depths_integer", "label_propagation", "kcore_flags",
+        "transitive_closure",
         "triangle_clustering", "connected_components",
         "connected_components_loop", "chinese_whispers",
         "chinese_whispers_loop",
@@ -561,7 +562,7 @@ def test_graph_operator_leaves_no_cached_frame(spark, monkeypatch, op):
         "chinese_whispers": lambda: graph.chinese_whispers(e, weight="weight"),
     }
     if op.endswith("_loop"):
-        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+        monkeypatch.setattr(wg, "DRIVER_MAX_EDGES", 0)
     cache = spark._jsparkSession.sharedState().cacheManager()
     before = cache.numCachedEntries()
     calls[op.removesuffix("_loop")]()

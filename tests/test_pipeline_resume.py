@@ -24,11 +24,13 @@ STAGES = ("kg", "triples_raw", "linked", "components", "triples", "entity_rank")
 # resume check up to the next stage's check; "driver" is everything
 # before the first check. Adding a job is meant to be a visible decision:
 # raise a ceiling here on purpose, never to quiet a failure.
+# A stage reopens from the schema in its lineage record, so a skipped
+# rerun's one job is the schema read of alias_dict.parquet.
 COLD_JOB_CEILINGS = {
-    "driver": 0, "kg": 4, "triples_raw": 3,
-    "linked": 6, "components": 5, "triples": 7, "entity_rank": 7,
+    "driver": 0, "kg": 3, "triples_raw": 2,
+    "linked": 5, "components": 4, "triples": 6, "entity_rank": 3,
 }
-SKIPPED_RERUN_JOB_CEILING = 7
+SKIPPED_RERUN_JOB_CEILING = 1
 
 
 def _run(spark, corpus_dir, out_dir, force=False):
@@ -109,6 +111,22 @@ def test_pipeline_runs_and_resumes(spark, corpus_dir, tmp_path, monkeypatch):
     assert not rep3["triples_raw"]["skipped"]  # lost stage re-ran
     assert rep3["_summary"] == rep1["_summary"]  # byte-stable result
 
+    # a record without the reopen schema (as written before it was
+    # recorded) still resumes: its stage reopens by schema inference
+    for name in STAGES:
+        path = os.path.join(out, f"{name}.lineage.json")
+        with open(path) as f:
+            rec = json.load(f)
+        del rec["schema"]
+        with open(path, "w") as f:
+            json.dump(rec, f)
+    rep4 = _run(spark, corpus_dir, out)
+    assert all(rep4[n]["skipped"] for n in STAGES)
+    assert {n: rep4[n]["config_hash"] for n in STAGES} == {
+        n: rep3[n]["config_hash"] for n in STAGES
+    }
+    assert rep4["_summary"] == rep1["_summary"]
+
 
 @pytest.fixture(scope="module")
 def clean_run(spark, corpus_dir, tmp_path_factory):
@@ -148,6 +166,46 @@ def test_lineage_counts_match_reopened_table(spark, clean_run, stage):
     )
     assert sorted(p["file"] for p in hist) == on_disk
     assert rec["partitions"] == len(on_disk)
+
+
+def test_reopen_schema_matches_inference(spark, clean_run):
+    """The schema a lineage record carries reopens its stage with the
+    columns, order and types that parquet schema inference gives:
+    data columns first, then the partition columns."""
+    from mitie_spark.sources.catalog import read_table
+
+    out, rep = clean_run
+    for stage in STAGES:
+        rec = rep[stage]
+        reopened = read_table(spark, rec["kind"], rec["location"], rec["schema"])
+        assert reopened.schema == spark.read.parquet(rec["location"]).schema, stage
+
+
+def _sorted_row_md5(path):
+    import hashlib
+
+    import pandas as pd
+
+    df = pd.read_parquet(path)
+    cols = sorted(df.columns)
+    rows = sorted(map(repr, df[cols].itertuples(index=False, name=None)))
+    return hashlib.md5("\n".join(rows).encode()).hexdigest()
+
+
+def test_force_rebuild_of_entity_rank_is_byte_stable(
+    spark, corpus_dir, clean_run, tmp_path
+):
+    """entity_rank's PageRank runs on the driver under the size gate, in a
+    summation order fixed by sorted node ids, so a --force rebuild over a
+    finished output writes the same rows, bit for bit."""
+    out, _ = clean_run
+    again = str(tmp_path / "out")
+    shutil.copytree(out, again)
+    rep = _run(spark, corpus_dir, again, force=True)
+    assert not rep["entity_rank"]["skipped"]
+    assert _sorted_row_md5(os.path.join(again, "entity_rank")) == (
+        _sorted_row_md5(os.path.join(out, "entity_rank"))
+    )
 
 
 def test_write_stage_rejects_a_count_the_files_do_not_hold(

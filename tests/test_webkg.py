@@ -170,19 +170,69 @@ def test_pagerank_integer_dangling_node_gets_teleport_only(spark):
     assert got["a"] == 15 * 10**12 // 200
 
 
-def test_pagerank_float_conserves_mass_on_closed_graph(spark):
-    from mitie_spark.operators.webgraph import pagerank
+def test_pagerank_float_conserves_mass_on_closed_graph(spark, monkeypatch):
+    from mitie_spark.operators import webgraph
 
-    # every node has outlinks -> no dangling leak -> ranks sum to 1
+    # every node has outlinks -> no dangling leak -> ranks sum to 1, on the
+    # driver path and on the shuffle loop (a size gate of 0)
     edges = [("a", "b", 1), ("b", "c", 2), ("c", "a", 1), ("b", "a", 1)]
     df = spark.createDataFrame(
         pd.DataFrame(edges, columns=["src", "dst", "weight"])
     )
-    ranks = {r.node: r.rank for r in pagerank(df, iters=20).collect()}
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9
-    assert all(v > 0 for v in ranks.values())
-    # a receives from both b (1/4 of b) and c (all of c): top rank
-    assert max(ranks, key=ranks.get) == "a"
+    for gate in (webgraph.DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(webgraph, "DRIVER_MAX_EDGES", gate)
+        ranks = {
+            r.node: r.rank for r in webgraph.pagerank(df, iters=20).collect()
+        }
+        assert abs(sum(ranks.values()) - 1.0) < 1e-9
+        assert all(v > 0 for v in ranks.values())
+        # a receives from both b (1/4 of b) and c (all of c): top rank
+        assert max(ranks, key=ranks.get) == "a"
+
+
+@pytest.mark.parametrize("seed", [3, 8, 21])
+def test_pagerank_driver_path_matches_shuffle_loop(spark, monkeypatch, seed):
+    """Under the size gate pagerank runs its recurrence on the driver; it
+    must give the shuffle loop's ranks (a gate of 0) to rel 1e-12, on a
+    seeded graph with dangling nodes, a source-only node, parallel edges
+    and a NULL src, dst or weight row. The loop's NULL rules hold: a NULL
+    id is a node with the teleport floor, and a row with a NULL src or
+    weight moves no mass. Rows are shuffled, so the driver's sorted
+    summation order is exercised too."""
+    import math
+    import random
+
+    from mitie_spark.operators import webgraph
+
+    rng = random.Random(seed)
+    rows = [
+        (f"n{rng.randrange(30)}", f"n{rng.randrange(30)}",
+         float(rng.randint(1, 9)) / rng.choice([1, 3, 7]))
+        for _ in range(120)
+    ]
+    rows += [
+        ("src_only", "n1", 2.0),                   # nothing links to it
+        ("n2", "sink", 1.0), ("n2", "sink", 3.0),  # parallel edges, dangling
+        (None, "n3", 1.0), ("n4", None, 2.0), ("n5", "n6", None),
+    ]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["src", "dst", "weight"]),
+        "src string, dst string, weight double",
+    ).repartition(3)
+
+    def ranks():
+        return {r.node: r.rank for r in webgraph.pagerank(df, iters=6).collect()}
+
+    driver = ranks()
+    monkeypatch.setattr(webgraph, "DRIVER_MAX_EDGES", 0)
+    loop = ranks()
+    assert driver.keys() == loop.keys()
+    assert {None, "src_only", "sink"} <= driver.keys()
+    for k in loop:
+        assert math.isclose(driver[k], loop[k], rel_tol=1e-12), k
+    # no edge reaches src_only or the NULL node: both keep the floor
+    assert driver["src_only"] == driver[None] == (1 - 0.85) / len(driver)
 
 
 # ---------------------------------------------------------------------------
