@@ -224,6 +224,25 @@ def extract_tokens_batch(tok_lists, ner, rel):
     return [tuple(r) for r in results]
 
 
+# Pages per extraction task. Every Python task pays a fixed set-up cost:
+# PySpark's setup_spark_files calls importlib.invalidate_caches(), which
+# makes Python 3.11 re-read the 1,328-entry pyspark.zip directory once per
+# zip importer (16 per worker). Measured on a 4-core host at local[4]:
+# ≈0.22 core-s per task (a trivial mapInPandas, 64 vs 4 tasks), and ≈3 ms
+# of kg-stage CPU per page (html check plus extraction, cold memos, 2.4-3.5
+# ms). 700 pages keep the fixed cost near 10% of a task.
+ROWS_PER_TASK = 700
+
+
+def extraction_tasks(rows: int, cores: int) -> int:
+    """Task count for extracting ``rows`` pages on ``cores`` cores:
+    ``ceil(rows / ROWS_PER_TASK)``, clamped to one to four tasks per core.
+    Four per core is the count the stage used for every input before: on
+    a large corpus small tasks spread the 40×-long pages (1% of web
+    text) over the cores."""
+    return min(max(-(-rows // ROWS_PER_TASK), cores), 4 * cores)
+
+
 def extract_kg(
     pages: DataFrame,
     ner_path: str,
@@ -237,9 +256,10 @@ def extract_kg(
     ``parallelism``: optional round-robin repartition of the (url, text)
     projection before the CPU-bound UDF. Extraction costs ~2-5 ms/doc of CPU
     while compressed web text scans at >100 MB/s, so byte-based input splits
-    chronically under-partition this stage; size tasks by compute (≈3-4× the
-    executor core count) instead. The shuffle moves only the projected two
-    columns."""
+    chronically under-partition this stage; size tasks by compute instead
+    (``extraction_tasks``: pages per task against the fixed per-task cost,
+    between one and four tasks per core). The shuffle moves only the
+    projected two columns."""
     if lang_filter is not None and "lang" in pages.columns:
         pages = pages.filter(pages["lang"] == lang_filter)
     slim = pages.select("url", text_col)

@@ -38,7 +38,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from mitie_spark.sources.catalog import read_table, reopen_schema, write_table
+from mitie_spark.sources.catalog import (
+    parquet_files,
+    read_table,
+    reopen_schema,
+    write_table,
+)
 
 
 def config_hash(conf: dict) -> str:
@@ -85,8 +90,8 @@ def write_stage(
     ``started`` is the ``time.time()`` taken before the stage built `df`:
     an eager build (entity_rank's PageRank iterations) runs before this call,
     and the record's ``wall_sec`` must cover it. ``input_rows`` is an int,
-    or a callable that gives it once the write has run (kg counts its pages
-    in its own scan)."""
+    or a callable that gives it once the write has run (kg's is the page
+    count its build read from the pages' footers)."""
     written = Observation(f"lineage_{stage}")
     kind, location = write_table(
         df.observe(written, F.count(F.lit(1)).alias("rows")), out_path, stage,
@@ -133,14 +138,7 @@ def _file_rows(spark, kind: str, location: str) -> list[dict]:
         ]
     import pyarrow.parquet as pq
 
-    out = []
-    for d, subdirs, names in os.walk(location):
-        subdirs[:] = [s for s in subdirs if not s.startswith(("_", "."))]
-        for n in names:
-            if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                p = os.path.join(d, n)
-                out.append({
-                    "file": os.path.relpath(p, location),
-                    "rows": pq.read_metadata(p).num_rows,
-                })
-    return out
+    return [
+        {"file": os.path.relpath(p, location), "rows": pq.read_metadata(p).num_rows}
+        for p in parquet_files(location)
+    ]

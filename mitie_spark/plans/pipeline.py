@@ -37,11 +37,12 @@ If --pages-dir has no pages.parquet, a deterministic corpus is generated
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import time
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from mitie_spark.models.train import ARTIFACT_DIR
@@ -67,12 +68,13 @@ def run_pipeline(
     from mitie_spark.functions.html2text import register_udf
     from mitie_spark.operators.extraction import (
         extract_kg,
+        extraction_tasks,
         mentions_table,
         triples_table,
     )
     from mitie_spark.operators.linking import canonical_components, link_mentions
 
-    from mitie_spark.sources.catalog import iceberg_catalog, read_table
+    from mitie_spark.sources.catalog import iceberg_catalog, open_parquet, read_table
 
     ner_path = ner_path or os.path.join(ARTIFACT_DIR, "ner_model.npz")
     rel_path = rel_path or os.path.join(ARTIFACT_DIR, "relation_model.npz")
@@ -85,7 +87,7 @@ def run_pipeline(
         """``inputs``: the upstream stages ``build`` reads. Their config
         hashes and row counts chain into this stage's hash, and the first
         one's rows are its ``input_rows`` (kg has none: it passes its own
-        page count, observed in its scan)."""
+        page count, read from the pages' footers)."""
         out = os.path.join(out_dir, name)
         ups = [report[i] for i in inputs]
         conf = {**conf, "from": [[u["config_hash"], u["output_rows"]] for u in ups]}
@@ -102,10 +104,11 @@ def run_pipeline(
         # a record written before schemas were recorded reopens by inference
         return read_table(spark, rec["kind"], rec["location"], rec.get("schema"))
 
-    # the page count is observed in kg's scan, not counted by a job of
-    # its own; a skipped kg keeps it in its record as input_rows and opens
-    # no pages (the parquet schema read is a job)
-    scanned = Observation("pages")
+    # the inputs open from their parquet footers, read on the driver: the
+    # schema without inference's Spark job, and the page count, which is
+    # kg's input_rows and sizes its tasks. A skipped kg keeps the count in
+    # its record and opens no pages.
+    open_pages = functools.cache(lambda: open_parquet(spark, pages_path))
 
     # 1. fused extraction behind the html→text invariant, checked on every
     # page, lang-filtered ones included, in the scan that feeds it. The
@@ -113,9 +116,7 @@ def run_pipeline(
     # push the lang test below the check nor split them. A bad page fails
     # the write, so kg is not recorded complete and a fixed input re-runs.
     def build_kg():
-        pages = spark.read.parquet(pages_path).observe(
-            scanned, F.count(F.lit(1)).alias("pages")
-        )
+        pages, n_pages = open_pages()
         h2t = register_udf()
         # null-safe: a NULL html or text must count as a violation, not
         # silently fall into a NULL comparison
@@ -131,16 +132,19 @@ def run_pipeline(
         )
         bad = F.format_string("html→text invariant violated: %s", "url")
         checked = pages.filter(F.when(ok, keep).otherwise(F.raise_error(bad)))
-        # tasks sized by compute, not input bytes: the corpus compresses
-        # ~10x, so byte-based parquet splits chronically under-partition
-        # this CPU-bound stage (measured 7 tasks on 32 cores = 4x wall; same
-        # sizing rule as queries_kg._kg and bench_scaling)
+        # tasks sized by the page count, not by input bytes (the corpus
+        # compresses ~10x, so byte-based splits under-partition this
+        # CPU-bound stage) nor by a fixed 4 per core (each Python task
+        # pays ~0.22 s of set-up, more than a 300-page corpus's share of
+        # extraction): ROWS_PER_TASK pages a task, 1-4 tasks per core.
         # (parallelism stays out of the config hash: rows are invariant to
         # the task layout, so resuming under a different --master must not
         # invalidate a completed extraction)
         return extract_kg(
             checked, ner_path, rel_path, lang_filter=None,
-            parallelism=spark.sparkContext.defaultParallelism * 4,
+            parallelism=extraction_tasks(
+                n_pages, spark.sparkContext.defaultParallelism
+            ),
         )
 
     kg = stage(
@@ -148,7 +152,7 @@ def run_pipeline(
         {"extractor_version": 1, "ner": ner_path, "rel": rel_path,
          "lang": lang, "pages": pages_path},
         build_kg,
-        input_rows=lambda: scanned.get["pages"],
+        input_rows=lambda: open_pages()[1],
     )
     n_pages = report["kg"]["input_rows"]
 
@@ -162,7 +166,7 @@ def run_pipeline(
     )
 
     # 3. linking, over the one-row-per-mention projection of kg
-    alias = spark.read.parquet(alias_path)
+    alias, _ = open_parquet(spark, alias_path)
     mentions = mentions_table(kg)
     linked = stage(
         "linked",

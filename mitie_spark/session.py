@@ -111,6 +111,10 @@ def by_compute(df, factor: int = 1):
     ``files.maxPartitionBytes`` (a few MB of parquet can be minutes of
     tokenize/hash/model work), so CPU-heavy map stages size their tasks by
     cores instead. The round-robin exchange is one narrow shuffle of the
-    input bytes; AQE coalesces it away when the scan was already wide."""
+    input bytes, and it keeps its task count: AQE never coalesces a
+    repartition to an explicit number of partitions, so a small input
+    still runs ``factor`` tasks per core, each paying Python's per-task
+    set-up (the pipeline's ``kg`` stage sizes by row count instead:
+    ``extraction.extraction_tasks``)."""
     par = df.sparkSession.sparkContext.defaultParallelism * factor
     return df.repartition(par)

@@ -22,6 +22,8 @@ exercised against a recording stub since the jar cannot be installed here.
 
 from __future__ import annotations
 
+import json
+import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -95,3 +97,50 @@ def read_table(
     if schema is not None:
         reader = reader.schema(StructType.fromJson(schema))
     return reader.parquet(location)
+
+
+def parquet_files(location: str) -> list[str]:
+    """The data files Spark reads at a parquet path: the file itself, or
+    every file under the directory whose name and directories do not
+    start with ``_`` or ``.`` (Spark's hidden-file rule), sorted."""
+    location = os.path.normpath(location)
+    if os.path.isfile(location):
+        return [location]
+    out = []
+    for d, subdirs, names in os.walk(location):
+        subdirs[:] = [s for s in subdirs if not s.startswith(("_", "."))]
+        out += [os.path.join(d, n) for n in names if not n.startswith(("_", "."))]
+    return sorted(out)
+
+
+# the Spark schema a Spark-written file carries; inference prefers it
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def open_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
+    """Open a parquet input from its footers, read on the driver, with no
+    Spark job: ``(frame, rows)``. The rows are the footers' sum. The
+    schema is the one inference takes from the first file's footer (a
+    tz-less timestamp reads as ``timestamp_ntz``). A partitioned directory,
+    whose partition columns are named by directories, not footers, and a
+    column type that has no Arrow→Spark conversion open by inference."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = parquet_files(path)
+    metas = [pq.read_metadata(f) for f in files]
+    rows = sum(m.num_rows for m in metas)
+    top = os.path.normpath(path)
+    if not metas or any(f != top and os.path.dirname(f) != top for f in files):
+        return spark.read.parquet(path), rows
+    kv = metas[0].metadata or {}
+    if _SPARK_SCHEMA_KEY in kv:
+        schema = StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
+    else:
+        try:
+            schema = from_arrow_schema(
+                metas[0].schema.to_arrow_schema(), prefer_timestamp_ntz=True
+            )
+        except TypeError:  # e.g. an unsigned or half-float column
+            return spark.read.parquet(path), rows
+    return spark.read.schema(schema).parquet(path), rows

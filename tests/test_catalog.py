@@ -10,6 +10,7 @@ import pandas as pd
 from mitie_spark.sources.catalog import (
     _catalog_from_items,
     iceberg_catalog,
+    open_parquet,
     read_table,
     write_table,
 )
@@ -51,6 +52,23 @@ def test_parquet_fallback_roundtrip(spark, tmp_path):
     assert os.path.exists(os.path.join(out, "pred=a"))
     back = read_table(spark, kind, loc)
     assert back.count() == 3 and set(back.columns) == {"pred", "n"}
+
+
+def test_open_parquet_matches_inference_on_spark_written_inputs(spark, tmp_path):
+    """A Spark-written input opens with the schema its footer carries
+    (a session timestamp, which parquet stores as INT96, stays
+    ``timestamp``); a partitioned one opens by inference, so its partition
+    column is kept. Either way the rows are the footers' sum."""
+    df = spark.sql(
+        "SELECT id, id % 2 AS part, timestamp'2020-01-01 00:00:00' AS ts,"
+        " array(named_struct('a', id)) AS nested FROM range(10)"
+    ).repartition(3)
+    for partition_by in (None, ["part"]):
+        out = str(tmp_path / f"in{bool(partition_by)}")
+        write_table(df, out, "in", partition_by=partition_by)
+        opened, rows = open_parquet(spark, out)
+        assert opened.schema == spark.read.parquet(out).schema
+        assert rows == 10 == opened.count()
 
 
 class _StubWriter:

@@ -24,13 +24,14 @@ STAGES = ("kg", "triples_raw", "linked", "components", "triples", "entity_rank")
 # resume check up to the next stage's check; "driver" is everything
 # before the first check. Adding a job is meant to be a visible decision:
 # raise a ceiling here on purpose, never to quiet a failure.
-# A stage reopens from the schema in its lineage record, so a skipped
-# rerun's one job is the schema read of alias_dict.parquet.
+# A stage reopens from the schema in its lineage record, and the pages
+# and the alias dictionary open from their parquet footers, so a skipped
+# rerun runs no job.
 COLD_JOB_CEILINGS = {
-    "driver": 0, "kg": 3, "triples_raw": 2,
+    "driver": 0, "kg": 2, "triples_raw": 1,
     "linked": 5, "components": 4, "triples": 6, "entity_rank": 3,
 }
-SKIPPED_RERUN_JOB_CEILING = 1
+SKIPPED_RERUN_JOB_CEILING = 0
 
 
 def _run(spark, corpus_dir, out_dir, force=False):
@@ -179,6 +180,64 @@ def test_reopen_schema_matches_inference(spark, clean_run):
         rec = rep[stage]
         reopened = read_table(spark, rec["kind"], rec["location"], rec["schema"])
         assert reopened.schema == spark.read.parquet(rec["location"]).schema, stage
+
+
+def _jobs_of(spark, fn):
+    """(fn(), the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", ["pages.parquet", "alias_dict.parquet"])
+@pytest.mark.parametrize("corpus", ["test60", "sf0.001"])
+def test_inputs_open_from_their_footers(spark, corpus_dir, corpus, name):
+    """The pipeline's inputs open with the schema parquet inference gives
+    and their row count, and the open runs no Spark job. ``warc_ts`` is a
+    tz-less parquet timestamp, which inference reads as timestamp_ntz."""
+    from pyspark.sql.types import TimestampNTZType
+
+    from mitie_spark.sources.catalog import open_parquet
+
+    d = corpus_dir if corpus == "test60" else os.path.join(
+        os.path.dirname(__file__), "..", "data", "kg_sf0.001"
+    )
+    path = os.path.join(d, name)
+    (df, rows), jobs = _jobs_of(spark, lambda: open_parquet(spark, path))
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(path).schema
+    assert rows == df.count()
+    if name == "pages.parquet":
+        assert df.schema["warc_ts"].dataType == TimestampNTZType()
+
+
+@pytest.mark.parametrize("cores", [4, 32])
+def test_extraction_task_count_rule(cores):
+    """clamp(ceil(rows / ROWS_PER_TASK), cores, 4 * cores)."""
+    from mitie_spark.operators.extraction import ROWS_PER_TASK, extraction_tasks
+
+    low, high = cores * ROWS_PER_TASK, 4 * cores * ROWS_PER_TASK
+    assert extraction_tasks(1, cores) == cores
+    assert extraction_tasks(low, cores) == cores
+    assert extraction_tasks(low + 1, cores) == cores + 1
+    assert extraction_tasks(high, cores) == 4 * cores
+    assert extraction_tasks(high + 1, cores) == 4 * cores
+    # the 40k-page bench corpus: 4 per core on 4 cores; on 32 cores
+    # ceil(40000 / 700) = 58 tasks is under the cap of 128
+    assert extraction_tasks(40_000, cores) == {4: 16, 32: 58}[cores]
+
+
+def test_kg_runs_one_task_per_core_on_a_small_corpus(spark, clean_run):
+    """60 pages are far under ROWS_PER_TASK per core: kg writes one file
+    per task, one task per core."""
+    _, rep = clean_run
+    assert rep["kg"]["input_rows"] == 60
+    assert rep["kg"]["partitions"] == spark.sparkContext.defaultParallelism
 
 
 def _sorted_row_md5(path):
